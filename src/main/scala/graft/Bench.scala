@@ -41,7 +41,7 @@ object Bench {
     // generic warmup so JVM/codegen/parquet-reader init isn't billed to
     // whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
+    try graft.etl.Ingest.readParquet(spark, s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }
     // warm every write-once storage layout (bucketed tables, shingle
     // index, pair/component graphs, IVF quantizer) BEFORE timing:
@@ -81,13 +81,17 @@ object Bench {
     // under-measured. The noop write materializes every output column
     // in order — the plan Verify ships is the plan Bench times.
     // A throwing query reports -1 (never a silent time-to-failure)
-    // with the error on stderr.
+    // with the error on stderr; its last exception is kept for the
+    // detail artifact's `_errors` map.
+    val errors = scala.collection.mutable.Map.empty[String, Throwable]
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          errors(name) = e
+          false
         }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -199,11 +203,14 @@ object Bench {
       System.err.println(s"[bench] common-subset calc failed: ${e.getMessage}")
       "null"
     }
+    val errorsJson = errorsMap(
+      failed.map(_._1).sorted.flatMap(n => errors.get(n).map(n -> _)))
     val detail = results.sortBy(_._1)
       .map { case (k, v) => s"""  "$k": ${j(v)}""" }
       .mkString(
         s"""{\n  "_unit": "sec",\n  "_sf": "$sfDir",\n""" +
           s"""  "_passed": ${timed.size},\n  "_failed": $failedJson,\n""" +
+          s"""  "_errors": $errorsJson,\n""" +
           s"""  "_common_subset_vs_prev": $commonSubset,\n""" +
           s"""  "_layout_warm_sec": $warmTotal,\n""" +
           s"""  "_layout_warm": $warmJson,\n""" +
@@ -215,4 +222,22 @@ object Bench {
       System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     spark.stop()
   }
+
+  /** BENCH_DETAIL's `_errors` map: why each failed query failed, as
+    * its exception class and the first 200 characters of its message
+    * (a -1 marker alone says only THAT it failed). */
+  private[graft] def errorsMap(errors: Seq[(String, Throwable)]): String =
+    errors.map { case (name, e) =>
+      val msg = Option(e.getMessage).getOrElse("").take(200)
+      s"""${jsonString(name)}: {"class": ${jsonString(e.getClass.getName)}, """ +
+        s""""message": ${jsonString(msg)}}"""
+    }.mkString("{", ", ", "}")
+
+  private def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 }

@@ -1,6 +1,16 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -63,19 +73,98 @@ object Ingest {
   def checkpointParquet(df: DataFrame, path: String, numFiles: Int = 1): Unit =
     df.coalesce(numFiles).write.mode("overwrite").parquet(path)
 
-  /** S4 — read a checkpoint back. */
   /** Schema-evolution read: merge the footers of batches written with
     * DIFFERENT (compatible) schemas into one union schema — columns a
     * batch lacks come back null. The per-footer merge is the read-side
     * half of additive schema evolution (new columns appear without
     * rewriting old data); `mergeSchema` is off by default in Spark
     * because footer merging costs a pass over file metadata — exactly
-    * why it's an explicit entry point here, not a global conf. */
+    * why it's an explicit entry point here, not a global conf. It keeps
+    * Spark's inference (one footer-merge job per read) on purpose: the
+    * union needs every footer, not the first. */
   def readParquetEvolving(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
+  /** S4 — read a stored parquet table, layout or checkpoint back; the
+    * one read path of every fixture table, layout and stream state.
+    *
+    * Building the DataFrame starts NO Spark job. A bare
+    * `spark.read.parquet(path)` infers its schema in a one-task job
+    * (`mergeSchemasInParallel`) even for a single file, so every read
+    * site of every query paid a job launch. Here the footer Spark would
+    * pick (a root `_common_metadata`, else `_metadata`, else the first
+    * data file in path order) is read on the Spark driver instead,
+    * giving the schema inference returns; partition columns are still
+    * discovered from the directory names and appended last. Nothing is
+    * cached: every call reads the footer again. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The schema `spark.read.parquet(path)` infers, from one footer read
+    * on the Spark driver (see [[readParquet]]) and Spark's own
+    * conversion: the Spark row-metadata schema when the writer stored
+    * one, else the parquet types converted under the session's parquet
+    * confs (binaryAsString, INT96, inferTimestampNTZ, nanosAsLong). */
+  private def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val (top, fs) = status(conf, path)
+    val file =
+      if (top.isFile) top
+      else {
+        val listed = fs.listStatus(top.getPath)
+        SummaryFiles.flatMap(n => listed.find(_.getPath.getName == n))
+          .headOption
+          .orElse(dataFiles(fs, listed).nextOption())
+          .getOrElse(throw GraftShims.parquetSchemaNotFound())
+      }
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer(conf, file, ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Row count of the parquet table at `path`: the sum of its data
+    * files' row-group row counts, read from their footers on the Spark
+    * driver. Equal to `readParquet(spark, path).count()` without the
+    * scan job. */
+  def parquetRowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val (top, fs) = status(conf, path)
+    val files =
+      if (top.isFile) Iterator(top) else dataFiles(fs, fs.listStatus(top.getPath))
+    files.map(footer(conf, _, ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  private val SummaryFiles = Seq("_common_metadata", "_metadata")
+
+  private def status(conf: Configuration, path: String): (FileStatus, FileSystem) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    (fs.getFileStatus(p), fs)
+  }
+
+  /** The data files among `listed` and below, in Spark's listing order
+    * (full path string), lazily: a depth-first walk whose entries sort
+    * by name, a directory's name suffixed with `/` so it sorts where its
+    * files' full paths would. Names Spark's file index hides are
+    * skipped (`_`/`.` prefixes, except `_`-prefixed partition
+    * directories, and `._COPYING_` files), and with them the summary
+    * files. */
+  private def dataFiles(fs: FileSystem,
+                        listed: Array[FileStatus]): Iterator[FileStatus] =
+    listed.filterNot(c => hidden(c.getPath.getName))
+      .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+      .iterator
+      .flatMap(c =>
+        if (c.isFile) Iterator(c) else dataFiles(fs, fs.listStatus(c.getPath)))
+
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  private def footer(conf: Configuration, st: FileStatus,
+                     filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf), filter)
 
   /** S5 — text/CSV sink (ref `saveAsTextFile`, 流行音乐趋势预测.md:98,295). */
   def writeCsv(df: DataFrame, path: String, numFiles: Int = 1): Unit =

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The catalog's deterministic hash-split key,
@@ -23,10 +23,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * pattern) so the split stays inside whole-stage codegen; the
   * MessageDigest instance is per-codegen-object mutable state, reused
   * across rows instead of re-looked-up per call.
+  *
+  * The input is declared a string (`ImplicitCastInputTypes`), so the
+  * analyzer casts any other child type to string first, as the SQL
+  * spelling's `md5(cast(x as string))` does; evaluation only ever
+  * sees a UTF8String.
   */
-case class Md5Prefix32(child: Expression) extends UnaryExpression {
+case class Md5Prefix32(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = LongType
+  override def inputTypes = Seq(StringType)
   override def prettyName: String = "md5_prefix32"
 
   private def prefix(bytes: Array[Byte]): Long = {

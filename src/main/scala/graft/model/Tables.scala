@@ -2,6 +2,8 @@ package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.etl.Ingest
+
 /** Fixture-table loaders (TESTDATA.md / FIXTURES.md §B).
   *
   * Every query takes an `sfDir` (e.g. /root/testdata/sf0.01) and loads
@@ -15,8 +17,16 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The fixture table `name` under `sfDir`. Building it starts no
+    * Spark job: [[Ingest.readParquet]] takes the schema from the
+    * table's parquet footer on the Spark driver. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Ingest.readParquet(spark, s"$sfDir/$name.parquet")
+
+  /** Row count of the fixture table `name`, from its parquet footers'
+    * row-group counts: metadata, not a scan, so no Spark job. */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
+    Ingest.parquetRowCount(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -113,7 +113,7 @@ object CurationQueries {
         // identical to the fixed 4-plane form at every fixture scale,
         // 2^⌊log2(n/100)⌋ buckets per table beyond it — see
         // Dedup.lshPlanesFor and the SCALING.md crossover table
-        planes = Dedup.lshPlanesFor(embeddings(s, d).count()))))
+        planes = Dedup.lshPlanesFor(rowCount(s, d, "embeddings")))))
 
   /** Cross-corpus LM quality scoring (the CCNet/KenLM pattern): train a
     * Laplace-smoothed unigram LM on a TRUSTED reference slice (every

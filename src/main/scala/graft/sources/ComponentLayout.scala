@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Components
 
@@ -52,7 +53,7 @@ object ComponentLayout {
           shingleTable = Some(ShingleLayout.shingles(s, sfDir)))
         .write.mode("overwrite").parquet(d)
     }
-    s.read.parquet(d)
+    Ingest.readParquet(s, d)
   }
 
   /** "Yesterday's" assignment for the incremental-maintenance path
@@ -77,6 +78,6 @@ object ComponentLayout {
         .select(col("doc_id").as("node"), col("component"))
         .write.mode("overwrite").parquet(d)
     }
-    s.read.parquet(d)
+    Ingest.readParquet(s, d)
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Ingest
 import graft.model.Tables
 
 /** Write-once co-purchase pair-count table — the graph family's link
@@ -50,7 +51,7 @@ object CopurchaseLayout {
     SourceLayout.writeOnce(dir) {
       derivePairCounts(s, sfDir).write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** "Yesterday's" persisted pair counts: the l_orderkey%10 ≤ 7 slice
@@ -67,7 +68,7 @@ object CopurchaseLayout {
           .where(pmod(col("l_orderkey"), lit(10)) <= 7))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** "Yesterday's" persisted triangle table over the support-pruned
@@ -82,6 +83,6 @@ object CopurchaseLayout {
             .select(col("u"), col("v")))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Dedup
 
@@ -41,7 +42,7 @@ object EmbeddingPairsLayout {
       Dedup.embeddingDupPairs(Tables.embeddings(s, sfDir), threshold)
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** Sign-LSH bucketed (vec_a, vec_b, cos) candidate-verified pairs —
@@ -56,7 +57,7 @@ object EmbeddingPairsLayout {
           dim, planes, tables)
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** (node, component) over the exact pair graph — the
@@ -85,6 +86,6 @@ object EmbeddingPairsLayout {
           pairs.select(col("vec_a").as("src"), col("vec_b").as("dst")))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 }

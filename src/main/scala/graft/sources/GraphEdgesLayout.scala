@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
+import graft.etl.Ingest
 import graft.model.Tables
 
 /** Write-once supplier–part bipartite edge list — the graph family's
@@ -50,7 +51,7 @@ object GraphEdgesLayout {
           .write.mode("overwrite").parquet(dir)
       }
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** The same distinct edge set annotated with both endpoints' degrees
@@ -79,7 +80,7 @@ object GraphEdgesLayout {
           .write.mode("overwrite").parquet(dir)
       }
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** One row per node of the symmetrized bipartite graph — (is_s:
@@ -103,6 +104,6 @@ object GraphEdgesLayout {
           .write.mode("overwrite").parquet(dir)
       }
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 }

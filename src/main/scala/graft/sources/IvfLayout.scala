@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Ivf
 
@@ -32,16 +33,6 @@ object IvfLayout {
     * one localCheckpoint each, every run). */
   private val LayoutVersion = 2
 
-  /** Corpus-count memo for the [[Ivf.cellsFor]] geometry dispatch:
-    * the count is parquet-footer METADATA of a static fixture table
-    * (the resolved value is baked into the layout directory name),
-    * but `DataFrame.count()` still runs a Spark job per call — one
-    * fixed-cost job inside EVERY consumer query (q83/q143/q202/q203).
-    * Memoized per (session, sfDir) exactly like Spark's own
-    * FileIndex caching; never caches query results. */
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private def root(sfDir: String, nCells: Int, seed: Long, maxIter: Int): String =
     s"${SourceLayout.root("graft_ivf", sfDir)}/c${nCells}_s${seed}_i${maxIter}_v$LayoutVersion"
 
@@ -52,13 +43,14 @@ object IvfLayout {
     * resolved count is part of the layout directory, so a corpus grown
     * past a geometry breakpoint re-fits rather than silently reusing
     * stale cells. The count itself is parquet-footer metadata, not a
-    * scan. */
+    * scan ([[Tables.rowCount]]), and both parquets read back through
+    * [[Ingest.readParquet]], so on a built layout this starts no Spark
+    * job. */
   def index(s: SparkSession, sfDir: String, nCells: Int = 0,
             seed: Long = 42L, maxIter: Int = 8): (DataFrame, DataFrame) = {
     val cells =
       if (nCells > 0) nCells
-      else Ivf.cellsFor(countMemo.computeIfAbsent(sfDir,
-        d => Tables.embeddings(s, d).count()))
+      else Ivf.cellsFor(Tables.rowCount(s, sfDir, "embeddings"))
     val base = root(sfDir, cells, seed, maxIter)
     val corpusDir = s"$base/corpus"
     val centDir = s"$base/centroids"
@@ -73,8 +65,8 @@ object IvfLayout {
       // just multiplies listing/footer overhead on every read
       centroids.coalesce(1).write.mode("overwrite").parquet(centDir)
     }
-    (s.read.parquet(corpusDir)
+    (Ingest.readParquet(s, corpusDir)
         .select(col("vec_id"), col("v"), col("cell"), col("label")),
-      s.read.parquet(centDir))
+      Ingest.readParquet(s, centDir))
   }
 }

@@ -69,7 +69,7 @@ object Layouts {
       ((s, d) => EmbeddingPairsLayout.exactComponents(s, d, 0.4)),
     "embedding_lsh_components" ->
       ((s, d) => EmbeddingPairsLayout.lshComponents(s, d, 0.4, dim = 64,
-        planes = Dedup.lshPlanesFor(Tables.embeddings(s, d).count()))),
+        planes = Dedup.lshPlanesFor(Tables.rowCount(s, d, "embeddings")))),
     "ivf_index" ->
       ((s, d) => IvfLayout.index(s, d)))
 

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Ingest
 import graft.model.Tables
 
 /** Date-partitioned storage layout (the sibling of [[BucketedTables]]):
@@ -40,6 +41,6 @@ object PartitionedTables {
         .withColumn("ds", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("ds").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 }

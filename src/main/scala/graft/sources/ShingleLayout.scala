@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Dedup
 
@@ -45,6 +46,6 @@ object ShingleLayout {
           .write.mode("overwrite").parquet(dir)
       }
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 }

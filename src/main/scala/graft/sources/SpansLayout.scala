@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Dedup
 
@@ -35,7 +36,7 @@ object SpansLayout {
       Dedup.duplicatedSpans(Tables.documents(s, sfDir), n)
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** DISTINCT n-gram index of the already-ingested corpus slice
@@ -60,6 +61,6 @@ object SpansLayout {
           .write.mode("overwrite").parquet(dir)
       }
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 }

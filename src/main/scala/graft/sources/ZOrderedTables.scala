@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Ingest
 import graft.functions.ZOrderKey
 import graft.model.Tables
 
@@ -41,7 +42,7 @@ object ZOrderedTables {
         .repartitionByRange(NFiles, col("l_partkey"))
         .sortWithinPartitions(col("l_partkey"))
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 
   /** lineitem range-sorted by the interleaved (partkey, suppkey) key.
@@ -76,6 +77,6 @@ object ZOrderedTables {
         .sortWithinPartitions(col("zk"))
         .drop("zk", "pmin", "pmax", "smin", "smax")
     }
-    s.read.parquet(dir)
+    Ingest.readParquet(s, dir)
   }
 }

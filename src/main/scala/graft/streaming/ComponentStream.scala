@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Ingest
 import graft.text.Components
 
 /** Streaming incremental connected-component maintenance — the
@@ -50,7 +51,7 @@ final class ComponentMaintainer(spark: SparkSession, stateDir: String,
   }
 
   /** The live (node, component) assignment (current epoch read-back). */
-  def current: DataFrame = spark.read.parquet(s"$stateDir/epoch$epoch")
+  def current: DataFrame = Ingest.readParquet(spark, s"$stateDir/epoch$epoch")
 
   /** Merge one batch of (src, dst) pairs; advances the epoch. */
   def update(edges: DataFrame): Unit = synchronized {

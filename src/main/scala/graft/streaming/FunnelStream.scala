@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.etl.Ingest
 import graft.text.{Components, CorpusPipeline, Dedup, TextAnalysis}
 
 /** Streaming corpus-curation funnel — the operational twin of
@@ -112,7 +113,7 @@ final class CorpusFunnelMaintainer(spark: SparkSession, stateDir: String,
   }
 
   private def tbl(name: String): DataFrame =
-    spark.read.parquet(s"$stateDir/epoch$epoch/$name")
+    Ingest.readParquet(spark, s"$stateDir/epoch$epoch/$name")
 
   /** Merge one wave of (doc_id, source, text, n_chars) training docs;
     * advances the epoch. Replayed/eval-side docs are dropped before

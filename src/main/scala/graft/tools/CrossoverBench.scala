@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Ingest
+
 /** Builder-side scale-crossover harness (round-5 verdict #1): SCALING.md
   * stops at sf0.1, where every designated scale form merely TIES its
   * exact ground-truth twin — the 100 TB claim was extrapolated from
@@ -93,8 +95,8 @@ object CrossoverBench {
       java.nio.file.Files.createFile(
         java.nio.file.Paths.get(outDir, "_SUCCESS"))
     }
-    val docs = spark.read.parquet(s"$outDir/documents.parquet")
-    val emb = spark.read.parquet(s"$outDir/embeddings.parquet")
+    val docs = Ingest.readParquet(spark, s"$outDir/documents.parquet")
+    val emb = Ingest.readParquet(spark, s"$outDir/embeddings.parquet")
     println(s"[xb] corpus $outDir: ${docs.count()} docs, " +
       s"${emb.count()} vectors (M=$m from $baseSfDir)")
 

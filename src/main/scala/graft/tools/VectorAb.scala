@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.etl.Ingest
+
 /** Builder-side A/B (like MinHashAb): dot-product throughput at a
   * realistic embedding dim across the three candidate forms —
   *  a) graft's codegen'd [[graft.functions.DotProduct]] loop,
@@ -32,7 +34,7 @@ object VectorAb {
           array((0 until dim).map(j => sin(col("id") * (j + 1.5))): _*).as("v"))
         .write.mode("overwrite").parquet(dir)
     }
-    val corpus = spark.read.parquet(dir)
+    val corpus = Ingest.readParquet(spark, dir)
     val q = corpus.filter(col("id") < nQ)
       .select(col("id").as("q_id"), col("v").as("qv"))
 

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters — the
   * supported pattern for libraries that ship native Catalyst
@@ -38,4 +39,8 @@ object GraftShims {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** The error `spark.read.parquet` raises on a path holding no data file. */
+  def parquetSchemaNotFound(): Throwable =
+    QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet")
 }

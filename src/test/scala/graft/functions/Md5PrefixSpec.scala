@@ -48,4 +48,20 @@ class Md5PrefixSpec extends AnyFunSuite {
       .select(Md5Prefix.md5_prefix32(col("x"))).head
     assert(n.isNullAt(0))
   }
+
+  test("a raw non-string child resolves through the implicit string cast") {
+    import org.apache.spark.sql.GraftShims
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val df = spark.range(0, 10000).toDF("x")
+    assert(df.schema("x").dataType === LongType)
+    // no facade cast: the expression gets the LongType column as is
+    val raw = GraftShims.column(Md5Prefix32(GraftShims.expression(col("x"))))
+    val q = df.select(sqlForm.as("a"), raw.as("b"))
+    val casts = q.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case Md5Prefix32(c: Cast) => c.dataType
+    })
+    assert(casts === Seq(StringType))
+    assert(q.where(col("a") =!= col("b")).count() === 0L)
+  }
 }
