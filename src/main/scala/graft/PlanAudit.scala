@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.queries.Catalog
-
 /** Prints the formatted physical plan for each catalog query (or the
   * names passed as args) — the §"explain and iterate" loop. Not part of
   * the driver contract; a builder-side audit tool.
@@ -13,18 +9,14 @@ import graft.queries.Catalog
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Bench.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val selected = Bench.select(args.drop(1).toSet)
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Catalog.all
-      .filter(q => names.isEmpty || names(q.name))
-      .foreach { q =>
-        println(s"\n========== ${q.name} ==========")
-        try q.run(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
-      }
+    selected.foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      try fn(spark, sfDir).explain("formatted")
+      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+    }
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated name filter for fast local
     // single-query iteration (driver always runs the full suite)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Bench.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Bench.select(
+      if (args.length > 2) args(2).split(",").toSet else Set.empty)
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    // a typo'd filter name must fail loudly — a silent empty run (and
-    // empty oracle_sql.json) reads as a green no-op locally
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     selected.foreach { case (name, fn) =>
       // remove any PREVIOUS run's output first: if this query now
       // throws, a stale parquet dir would make the driver compare old
@@ -39,26 +26,13 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same storage hygiene as Bench: a query's localCheckpoint blocks
-      // must not linger into the next query
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
+      Bench.reset(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val names = selected.map(_._1).toSet
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .filter { case (k, _) => names(k) }
+      .map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

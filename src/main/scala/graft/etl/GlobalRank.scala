@@ -38,9 +38,8 @@ object GlobalRank {
     * checkpointed range-partition MUST stay alive until the returned
     * frame is materialized (freeing earlier would re-sample range
     * boundaries and misalign the offsets), so the contract is: consume
-    * the result, then call this. Bench/Verify's between-query
-    * getPersistentRDDs sweep subsumes it; library callers invoke it
-    * directly. */
+    * the result, then call this. The between-query `Bench.reset`
+    * sweep subsumes it; library callers invoke it directly. */
   def release(spark: org.apache.spark.sql.SparkSession): Unit = {
     val live = spark.sparkContext.getPersistentRDDs
     var id: Integer = checkpointIds.poll()

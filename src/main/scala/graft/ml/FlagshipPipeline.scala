@@ -20,10 +20,10 @@ object FlagshipPipeline {
 
   final case class Result(trainMse: Double, forecast: DataFrame)
 
-  /** Stage builders — shared verbatim by [[run]] and
-    * [[graft.tools.FlagshipProbe]] so the probe's per-stage timings
-    * can never drift from the shipped composition (round-8 review
-    * finding: the probe used to copy these blocks). */
+  /** Stage builders — shared verbatim by [[run]] and perfbench's
+    * per-stage pipeline spans, so the stage timings can never drift
+    * from the shipped composition (round-8 review finding: a probe
+    * used to copy these blocks). */
   def dailyOf(spark: SparkSession, sfDir: String): DataFrame =
     // ingest + dedup + pivot (ref 流行音乐趋势预测.md:29-98 modernized)
     Pivot.dailyUserCounters(Ingest.dedup(Tables.events(spark, sfDir)))
@@ -98,9 +98,7 @@ object FlagshipPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val steps = args.lift(1).map(_.toInt).getOrElse(7)
-    val spark = graft.Bench.configure(
-      SparkSession.builder().master("local[8]"), "8").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
     val r = run(spark, sfDir, steps)
     println(f"[flagship] train MSE = ${r.trainMse}%.3f")
     println(s"[flagship] forecast rows = ${r.forecast.count()}")

@@ -232,7 +232,7 @@ object MixtureQueries {
   /** The packing plan over any (doc_id, text) frame — reused by
     * MixtureSpec for the budget/contiguity properties. Implementation
     * moved to [[graft.text.CorpusPipeline.packedBins]] (the pipeline's
-    * final stage must be THIS plan, not a copy — the FlagshipProbe
+    * final stage must be THIS plan, not a copy — the FlagshipPipeline
     * stage-sharing precedent). */
   def packedBins(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     graft.text.CorpusPipeline.packedBins(docs)

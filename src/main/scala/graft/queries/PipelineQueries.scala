@@ -763,7 +763,7 @@ object PipelineQueries {
     * exact-Jaccard pair regime; the MinHash-LSH regime (the 100 TB
     * candidate path, same downstream plan) is parity-pinned in
     * CorpusPipelineSpec and stage-timed at amplified scale by
-    * tools/CorpusProbe. */
+    * perfbench's `pipelines-10x` workload. */
   val q284CorpusFunnel = GraftQuery(
     "q284_corpus_funnel",
     "end-to-end curation funnel: docs+tokens surviving each pipeline stage",

@@ -488,7 +488,7 @@ object Dedup {
     //     for — a giant bucket that IS one duplicate class — every
     //     anchor passes verification, so the class stays one
     //     component BY CONSTRUCTION (the coin alone attached only
-    //     ~56% of a 2000-doc clique; CapProbe measured it).
+    //     ~56% of a planted 2000-doc clique at sf0.1, COVERAGE.md).
     //
     // Soundness: anchors and thinned pairs alike pass the exact
     // pair-local Jaccard verification below, so there are never false

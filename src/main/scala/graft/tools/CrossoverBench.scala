@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Bench
 import graft.etl.Ingest
 
 /** Builder-side scale-crossover harness (round-5 verdict #1): SCALING.md
@@ -79,10 +80,7 @@ object CrossoverBench {
     val m = mStr.toInt
     val reps = repsStr.toInt
     val which = args.lift(4).getOrElse("all") // all | text | emb
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Bench.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     graft.sources.SourceLayout.writeOnce(outDir) {
@@ -103,11 +101,9 @@ object CrossoverBench {
     def time(name: String)(mk: => DataFrame): Unit = {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
+        Bench.noop(mk)
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
+        Bench.reset(spark)
         dt
       }
       println(f"[xb] $name%-34s ${times.map(t => f"$t%.2f").mkString(" ")}")

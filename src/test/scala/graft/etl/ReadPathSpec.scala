@@ -1,19 +1,17 @@
 package graft.etl
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, MetadataBuilder}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SourceLint, SparkTestSession}
 import graft.model.Tables
 import graft.sources.{Layouts, PartitionedTables, ShingleLayout}
+import graft.tools.QueryTime
 
 /** The one parquet read path, [[Ingest.readParquet]]: its footer-read
   * schema must be exactly the schema Spark's inference job returns
@@ -91,53 +89,15 @@ class ReadPathSpec extends AnyFunSuite {
 
   test("building fixture tables and a layout on a warm root starts no Spark job") {
     ShingleLayout.shingles(spark, sf) // warm the layout root
-    val jobs = new JobCounter(spark)
+    val counter = new QueryTime.Counter(spark.sparkContext)
     try {
-      jobs.drain()
-      val before = jobs.started
+      val (before, _, _) = counter.totals()
       Tables.lineitem(spark, sf)
       Tables.events(spark, sf)
       ShingleLayout.shingles(spark, sf)
-      jobs.drain()
-      assert(jobs.started - before === 0)
-    } finally jobs.close()
-  }
-
-  /** Counts every job but its own sentinels. `drain` runs a marked
-    * one-task job and waits for its end event: the listener bus
-    * delivers events in order, so by then every earlier job is
-    * counted. */
-  private class JobCounter(spark: SparkSession) extends SparkListener {
-    private val Marker = "graft.readpath.sentinel"
-    private val count = new AtomicInteger
-    private val sentinels = new ConcurrentHashMap[Int, CountDownLatch]
-    private val pending = new ConcurrentHashMap[String, CountDownLatch]
-    spark.sparkContext.addSparkListener(this)
-
-    def started: Int = count.get
-
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(Marker))) match {
-        case Some(id) => sentinels.put(e.jobId, pending.get(id))
-        case None     => count.incrementAndGet()
-      }
-
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      Option(sentinels.remove(e.jobId)).foreach(_.countDown())
-
-    def drain(): Unit = {
-      val id = java.util.UUID.randomUUID().toString
-      val done = new CountDownLatch(1)
-      pending.put(id, done)
-      val sc = spark.sparkContext
-      sc.setLocalProperty(Marker, id)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(Marker, null)
-      assert(done.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      pending.remove(id)
-    }
-
-    def close(): Unit = spark.sparkContext.removeSparkListener(this)
+      val (after, _, _) = counter.totals()
+      assert(after - before === 0)
+    } finally counter.close()
   }
 
   // -- source lint ---------------------------------------------------
@@ -148,40 +108,25 @@ class ReadPathSpec extends AnyFunSuite {
     ("""\.read(\s*\.\s*options?\s*\([^)]*\))*\s*\.\s*""" +
       """(parquet\s*\(|format\s*\(\s*"parquet"\s*\)(\s*\.\s*options?\s*\([^)]*\))*\s*\.\s*load\s*\()""").r
 
-  /** Comments blanked (newlines kept, so offsets map to lines). */
-  private def code(src: String): String =
-    """(?s)/\*.*?\*/|//[^\n]*""".r.replaceAllIn(src,
-      m => java.util.regex.Matcher.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
-
   test("the lint flags bare parquet reads and passes schema'd ones") {
     Seq("spark.read.parquet(p)", "s.read\n  .parquet(dir)",
       """spark.read.option("mergeSchema", "true").parquet(p)""",
       """spark.read.format("parquet").load(p)""")
-      .foreach(s => assert(bareRead.findFirstIn(code(s)).nonEmpty, s))
+      .foreach(s => assert(bareRead.findFirstIn(SourceLint.code(s)).nonEmpty, s))
     Seq("spark.read.schema(st).parquet(p)", "df.write.parquet(p)",
       "Ingest.readParquet(spark, p)", "// spark.read.parquet(p)",
       "/** a bare `spark.read.parquet(path)` */")
-      .foreach(s => assert(bareRead.findFirstIn(code(s)).isEmpty, s))
+      .foreach(s => assert(bareRead.findFirstIn(SourceLint.code(s)).isEmpty, s))
   }
 
   /** Every site in src/main/scala/graft reads through
     * [[Ingest.readParquet]]: Bench's warm-up count and the
-    * CrossoverBench/VectorAb probes read single fixture-shaped files
-    * like every other site, so they take the helper too. The one
-    * allowed bare read is [[Ingest.readParquetEvolving]], whose union
-    * schema needs every footer and so keeps Spark's merge job. */
+    * CrossoverBench probe read single fixture-shaped files like every
+    * other site, so they take the helper too. The one allowed bare
+    * read is [[Ingest.readParquetEvolving]], whose union schema needs
+    * every footer and so keeps Spark's merge job. */
   test("no bare .read.parquet( in src/main outside readParquetEvolving") {
-    import scala.jdk.CollectionConverters._
-    val srcDir = Paths.get("src/main/scala/graft")
-    val sites = Files.walk(srcDir).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sorted
-      .flatMap { p =>
-        val src = code(new String(Files.readAllBytes(p), "UTF-8"))
-        bareRead.findAllMatchIn(src).map { m =>
-          val line = src.substring(0, m.start).count(_ == '\n') + 1
-          (srcDir.relativize(p).toString, line, src.linesIterator.drop(line - 1).next().trim)
-        }
-      }
+    val sites = SourceLint.sites(bareRead)
     val (allowed, bare) = sites.partition { case (f, _, text) =>
       f == "etl/Ingest.scala" && text.contains("""option("mergeSchema", "true")""")
     }

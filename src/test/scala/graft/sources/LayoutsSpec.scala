@@ -57,10 +57,7 @@ class LayoutsSpec extends AnyFunSuite {
       "graft_copurchase" -> "copurchase_*",
       "graft_embpairs" -> "embedding_*",
       "graft_ivf" -> "ivf_index")
-    // builder-tool-only corpora (CrossoverBench/FlagshipProbe amplified
-    // fixtures) — never read by a catalog query, so never warmed
-    val toolOnly = Set("graft_corpus_amp", "graft_flagship_amp")
-    val unwarmed = families.diff(warmed.keySet).diff(toolOnly)
+    val unwarmed = families.diff(warmed.keySet)
     assert(unwarmed.isEmpty,
       s"layout families $unwarmed are not warmed by Layouts.inventory — " +
         "register them (and their build cost) before any query reads them")

@@ -31,13 +31,31 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // the gate is real: these stages actually drop something on the
     // fixture (a stage that filters nothing tests nothing). The
     // sf0.001 fixture has no exact-duplicate training docs, so the
-    // exact-dedup stage's drop is exercised by CorpusProbe's amplified
-    // corpus (20% exact-copy variants) and by sf0.1 instead.
+    // exact-dedup stage's drop is checked on planted copies below.
     Seq("c_near_dedup", "d_quality", "f_mixed").foreach {
       st =>
         val prev = order(order.indexOf(st) - 1)
         assert(funnel(st)._1 < funnel(prev)._1, s"$st dropped no docs")
     }
+  }
+
+  test("exact dedup drops exactly the planted exact-text copies") {
+    val idType = docs.schema("doc_id").dataType
+    val originals = CorpusPipeline.trainingSide(docs).select(col("doc_id"))
+      .orderBy(col("doc_id")).limit(3).collect().map(_.get(0).toString.toLong)
+    val maxId = docs.agg(max(col("doc_id")).cast("long")).head().getLong(0)
+    // fresh ids off the eval modulus, so trainingSide keeps the copies
+    val fresh = Iterator.from(1).map(maxId + _)
+      .filter(_ % CorpusPipeline.EvalModulus != 0).take(originals.length).toSeq
+    val copies = originals.zip(fresh).map { case (o, f) =>
+      docs.filter(col("doc_id") === o).withColumn("doc_id", lit(f).cast(idType))
+    }
+    val planted = CorpusPipeline.funnel(copies.foldLeft(docs)(_ unionByName _))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val k = originals.length
+    assert(planted("a_ingest") === funnel("a_ingest")._1 + k)
+    assert(planted("a_ingest") - planted("b_exact_dedup") ===
+      funnel("a_ingest")._1 - funnel("b_exact_dedup")._1 + k)
   }
 
   test("packing conserves the mixed corpus' tokens exactly") {
