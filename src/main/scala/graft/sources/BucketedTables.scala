@@ -43,11 +43,12 @@ object BucketedTables {
   }
 
   /** Write `base` (pruned to `cols`) bucketed+sorted by `key` as an
-    * external table. A new session whose in-memory catalog lacks the
-    * table but whose files survive on disk (completed _SUCCESS)
-    * RE-REGISTERS the external table over them via DDL instead of
-    * re-shuffling and rewriting — that is the cross-session reuse the
-    * module header promises. */
+    * external table. The files are written once, through
+    * [[SourceLayout.publish]]; every session — the writing one and each
+    * later one whose in-memory catalog lacks the table — registers the
+    * external table over them with the same DDL instead of
+    * re-shuffling and rewriting, the cross-session reuse the module
+    * header promises. */
   private def ensureTable(s: SparkSession, sfDir: String, base: String,
                           key: String, cols: Seq[String]): String = {
     val name = tableName(sfDir, base)
@@ -61,27 +62,31 @@ object BucketedTables {
         .map(_.name).filter(t => t.startsWith(prefix) && t != name)
         .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
       val dir = s"${root(sfDir)}/${base}_${specFingerprint(key, cols)}"
-      if (new java.io.File(dir, "_SUCCESS").exists()) {
-        val schema = Tables.load(s, sfDir, base).select(cols.map(col): _*).schema
-        val ddlCols = schema.fields
-          .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-        s.sql(s"""CREATE TABLE $name ($ddlCols) USING parquet
-          CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS
-          LOCATION '$dir'""")
-      } else {
+      val pruned = Tables.load(s, sfDir, base).select(cols.map(col): _*)
+      SourceLayout.publish(dir) { staging =>
+        // bucketBy writes only through saveAsTable: an external staging
+        // table over the staging path, dropped again (its files stay;
+        // Spark's "All paths were ignored" warning is its read-back of
+        // the hidden staging path, not a failed write)
+        val tmp = s"${name}_staging_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
         // repartition on the bucket hash first so each task holds exactly
         // one bucket → ONE file per bucket; Spark only elides the join-side
         // Sort when every bucket is a single sorted file
-        Tables.load(s, sfDir, base)
-          .select(cols.map(col): _*)
+        try pruned
           .repartition(nBuckets, col(key))
           .write
-          .mode("overwrite")
-          .option("path", dir)
+          .option("path", staging)
           .bucketBy(nBuckets, key)
           .sortBy(key)
-          .saveAsTable(name)
+          .saveAsTable(tmp)
+        finally s.sql(s"DROP TABLE IF EXISTS $tmp")
       }
+      val ddlCols = pruned.schema.fields
+        .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+      s.sql(s"""CREATE TABLE $name ($ddlCols) USING parquet
+        CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS
+        LOCATION '$dir'""")
     }
     name
   }

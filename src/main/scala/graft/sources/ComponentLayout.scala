@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Components
 
@@ -29,31 +28,24 @@ import graft.text.Components
   */
 object ComponentLayout {
 
+  import SourceLayout.thresholdKey
+
   /** Bump when the component/pair derivation changes semantically. */
   private val LayoutVersion = 1
-
-  private def dir(sfDir: String, threshold: Double): String = {
-    // full threshold value in the key (the PairsLayout rule): a rounded
-    // form would let 0.4 and 0.404 share a directory
-    val spec = s"t${threshold.toString.replace('.', '_').replace('-', 'm')}" +
-      s"_sh3_v$LayoutVersion"
-    s"${SourceLayout.root("graft_components", sfDir)}/$spec"
-  }
 
   /** (doc_id, component) for every document at `sfDir` — computed and
     * written once per (sfDir, threshold), read from the layout
     * afterwards (any session). */
   def dedupComponents(s: SparkSession, sfDir: String,
                       threshold: Double): DataFrame = {
-    val d = dir(sfDir, threshold)
-    SourceLayout.writeOnce(d) {
+    val dir = s"${SourceLayout.root("graft_components", sfDir)}/" +
+      s"${thresholdKey(threshold)}_sh3_v$LayoutVersion"
+    SourceLayout.table(s, dir) {
       // the one-time build itself reads the shingle layout — the two
       // storage layers chain (corpus → shingle index → components)
       Components.dedupComponents(Tables.documents(s, sfDir), threshold,
           shingleTable = Some(ShingleLayout.shingles(s, sfDir)))
-        .write.mode("overwrite").parquet(d)
     }
-    Ingest.readParquet(s, d)
   }
 
   /** "Yesterday's" assignment for the incremental-maintenance path
@@ -66,8 +58,9 @@ object ComponentLayout {
   def yesterdayComponents(s: SparkSession, sfDir: String,
                           threshold: Double): DataFrame = {
     import org.apache.spark.sql.functions._
-    val d = dir(sfDir, threshold) + "_wave8"
-    SourceLayout.writeOnce(d) {
+    val dir = s"${SourceLayout.root("graft_components", sfDir)}/" +
+      s"${thresholdKey(threshold)}_sh3_v${LayoutVersion}_wave8"
+    SourceLayout.table(s, dir) {
       val docs = Tables.documents(s, sfDir)
         .filter(pmod(col("doc_id"), lit(10)) < 8)
       val pairs = PairsLayout.jaccardPairs(s, sfDir, threshold)
@@ -76,8 +69,6 @@ object ComponentLayout {
       Components.componentsOver(docs,
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         .select(col("doc_id").as("node"), col("component"))
-        .write.mode("overwrite").parquet(d)
     }
-    Ingest.readParquet(s, d)
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.etl.Ingest
 import graft.model.Tables
 
 /** Write-once co-purchase pair-count table — the graph family's link
@@ -48,10 +47,7 @@ object CopurchaseLayout {
     * read from the layout afterwards. */
   def pairCounts(s: SparkSession, sfDir: String): DataFrame = {
     val dir = s"${SourceLayout.root("graft_copurchase", sfDir)}/v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
-      derivePairCounts(s, sfDir).write.mode("overwrite").parquet(dir)
-    }
-    Ingest.readParquet(s, dir)
+    SourceLayout.table(s, dir)(derivePairCounts(s, sfDir))
   }
 
   /** "Yesterday's" persisted pair counts: the l_orderkey%10 ≤ 7 slice
@@ -63,12 +59,10 @@ object CopurchaseLayout {
   def yesterdayPairCounts(s: SparkSession, sfDir: String): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_copurchase", sfDir)}/yesterday_v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
+    SourceLayout.table(s, dir) {
       derivePairCounts(Tables.lineitem(s, sfDir)
           .where(pmod(col("l_orderkey"), lit(10)) <= 7))
-        .write.mode("overwrite").parquet(dir)
     }
-    Ingest.readParquet(s, dir)
   }
 
   /** "Yesterday's" persisted triangle table over the support-pruned
@@ -77,12 +71,10 @@ object CopurchaseLayout {
   def yesterdayTriangles(s: SparkSession, sfDir: String): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_copurchase", sfDir)}/yesterday_tri_v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
+    SourceLayout.table(s, dir) {
       graft.etl.Graphs.triangles(
           yesterdayPairCounts(s, sfDir).where(col("c") >= 2)
             .select(col("u"), col("v")))
-        .write.mode("overwrite").parquet(dir)
     }
-    Ingest.readParquet(s, dir)
   }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Dedup
 
@@ -25,40 +24,32 @@ import graft.text.Dedup
   */
 object EmbeddingPairsLayout {
 
+  import SourceLayout.thresholdKey
+
   /** Bump when either pair derivation changes semantically. */
   private val LayoutVersion = 1
 
-  private def key(threshold: Double): String =
-    s"t${threshold.toString.replace('.', '_').replace('-', 'm')}"
+  private def dir(sfDir: String, spec: String): String =
+    s"${SourceLayout.root("graft_embpairs", sfDir)}/${spec}_v$LayoutVersion"
 
   /** Exact (vec_a, vec_b, cos) pairs at `threshold` for the embeddings
     * table at `sfDir` — derived and written once per
     * (sfDir, threshold), read from the layout afterwards. */
   def exactPairs(s: SparkSession, sfDir: String,
-                 threshold: Double): DataFrame = {
-    val dir = s"${SourceLayout.root("graft_embpairs", sfDir)}/" +
-      s"exact_${key(threshold)}_v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
-      Dedup.embeddingDupPairs(Tables.embeddings(s, sfDir), threshold)
-        .write.mode("overwrite").parquet(dir)
-    }
-    Ingest.readParquet(s, dir)
-  }
+                 threshold: Double): DataFrame =
+    SourceLayout.table(s, dir(sfDir, s"exact_${thresholdKey(threshold)}"))(
+      Dedup.embeddingDupPairs(Tables.embeddings(s, sfDir), threshold))
 
   /** Sign-LSH bucketed (vec_a, vec_b, cos) candidate-verified pairs —
     * the 100 TB derivation — written once per (sfDir, threshold,
     * geometry). */
   def lshPairs(s: SparkSession, sfDir: String, threshold: Double,
-               dim: Int, planes: Int = 4, tables: Int = 8): DataFrame = {
-    val dir = s"${SourceLayout.root("graft_embpairs", sfDir)}/" +
-      s"lsh_${key(threshold)}_d${dim}_p${planes}_n${tables}_v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
+               dim: Int, planes: Int = 4, tables: Int = 8): DataFrame =
+    SourceLayout.table(s, dir(sfDir,
+        s"lsh_${thresholdKey(threshold)}_d${dim}_p${planes}_n$tables")) {
       Dedup.embeddingDupPairsLsh(Tables.embeddings(s, sfDir), threshold,
           dim, planes, tables)
-        .write.mode("overwrite").parquet(dir)
     }
-    Ingest.readParquet(s, dir)
-  }
 
   /** (node, component) over the exact pair graph — the
     * [[ComponentLayout]] treatment one level down the chain (pairs →
@@ -66,26 +57,20 @@ object EmbeddingPairsLayout {
     * one-time build reads [[exactPairs]]: the storage layers chain. */
   def exactComponents(s: SparkSession, sfDir: String,
                       threshold: Double): DataFrame =
-    componentLayout(s, sfDir, s"exactcc_${key(threshold)}_v$LayoutVersion",
-      exactPairs(s, sfDir, threshold))
+    SourceLayout.table(s, dir(sfDir, s"exactcc_${thresholdKey(threshold)}"))(
+      components(exactPairs(s, sfDir, threshold)))
 
   /** (node, component) over the LSH-bucketed pair graph — q144's
     * 100 TB form — written once per (sfDir, threshold, geometry). */
   def lshComponents(s: SparkSession, sfDir: String, threshold: Double,
                     dim: Int, planes: Int = 4, tables: Int = 8): DataFrame =
-    componentLayout(s, sfDir,
-      s"lshcc_${key(threshold)}_d${dim}_p${planes}_n${tables}_v$LayoutVersion",
-      lshPairs(s, sfDir, threshold, dim, planes, tables))
+    SourceLayout.table(s, dir(sfDir,
+        s"lshcc_${thresholdKey(threshold)}_d${dim}_p${planes}_n$tables"))(
+      components(lshPairs(s, sfDir, threshold, dim, planes, tables)))
 
-  private def componentLayout(s: SparkSession, sfDir: String, spec: String,
-                              pairs: => DataFrame): DataFrame = {
+  private def components(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val dir = s"${SourceLayout.root("graft_embpairs", sfDir)}/$spec"
-    SourceLayout.writeOnce(dir) {
-      graft.text.Components.connectedComponents(
-          pairs.select(col("vec_a").as("src"), col("vec_b").as("dst")))
-        .write.mode("overwrite").parquet(dir)
-    }
-    Ingest.readParquet(s, dir)
+    graft.text.Components.connectedComponents(
+      pairs.select(col("vec_a").as("src"), col("vec_b").as("dst")))
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
-import graft.etl.Ingest
 import graft.model.Tables
 
 /** Write-once supplier–part bipartite edge list — the graph family's
@@ -43,15 +42,13 @@ object GraphEdgesLayout {
   def supplierPart(s: SparkSession, sfDir: String): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_graph_edges", sfDir)}/sp_v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
-      Tables.atFullWidth(s) {
+    Tables.atFullWidth(s) {
+      SourceLayout.table(s, dir) {
         Tables.lineitem(s, sfDir)
           .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
           .distinct()
-          .write.mode("overwrite").parquet(dir)
       }
     }
-    Ingest.readParquet(s, dir)
   }
 
   /** The same distinct edge set annotated with both endpoints' degrees
@@ -70,17 +67,15 @@ object GraphEdgesLayout {
   def supplierPartDegrees(s: SparkSession, sfDir: String): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_graph_edges", sfDir)}/spdeg_v1"
-    SourceLayout.writeOnce(dir) {
-      Tables.atFullWidth(s) {
+    Tables.atFullWidth(s) {
+      SourceLayout.table(s, dir) {
         val pairs = supplierPart(s, sfDir)
         val sd = pairs.groupBy(col("s")).agg(count(lit(1)).as("sdeg"))
         val pd = pairs.groupBy(col("p")).agg(count(lit(1)).as("pdeg"))
         pairs.join(sd, "s").join(pd, "p")
           .select(col("s"), col("p"), col("sdeg"), col("pdeg"))
-          .write.mode("overwrite").parquet(dir)
       }
     }
-    Ingest.readParquet(s, dir)
   }
 
   /** One row per node of the symmetrized bipartite graph — (is_s:
@@ -94,16 +89,14 @@ object GraphEdgesLayout {
   def nodes(s: SparkSession, sfDir: String): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_graph_edges", sfDir)}/nodes_v1"
-    SourceLayout.writeOnce(dir) {
-      Tables.atFullWidth(s) {
+    Tables.atFullWidth(s) {
+      SourceLayout.table(s, dir) {
         val w = supplierPartDegrees(s, sfDir)
         w.select(lit(1).as("is_s"), col("s").as("key"),
             col("sdeg").as("outdeg")).distinct()
           .union(w.select(lit(0).as("is_s"), col("p").as("key"),
             col("pdeg").as("outdeg")).distinct())
-          .write.mode("overwrite").parquet(dir)
       }
     }
-    Ingest.readParquet(s, dir)
   }
 }

@@ -15,9 +15,10 @@ import graft.text.Ivf
   * per query (~1.5 s of every bench pass each at sf0.1) for the same
   * assignment.
   *
-  * Two parquets per (sfDir, spec): the cell-indexed corpus
-  * (vec_id, v, cell) — at 100 TB this is the corpus table itself,
-  * partitioned/bucketed by cell — and the nCells-row centroid table.
+  * Two parquets per (sfDir, spec), published as one directory: the
+  * cell-indexed corpus (vec_id, v, cell) — at 100 TB this is the
+  * corpus table itself, partitioned/bucketed by cell — and the
+  * nCells-row centroid table.
   * The directory embeds (nCells, seed, maxIter, version), the
   * [[BucketedTables]] fingerprint discipline.
   */
@@ -52,21 +53,19 @@ object IvfLayout {
       if (nCells > 0) nCells
       else Ivf.cellsFor(Tables.rowCount(s, sfDir, "embeddings"))
     val base = root(sfDir, cells, seed, maxIter)
-    val corpusDir = s"$base/corpus"
-    val centDir = s"$base/centroids"
-    SourceLayout.writeOnce(centDir) {
+    // one publish of the base directory: the pair becomes visible
+    // together, so a half-written pair is never read
+    SourceLayout.publish(base) { d =>
       val emb = Tables.embeddings(s, sfDir)
       val (indexed, centroids) = Ivf.buildIndex(emb, cells, seed, maxIter)
-      // corpus first: the centroid _SUCCESS is the layout's completion
-      // marker, so a half-written pair is never re-registered
       indexed.join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-        .write.mode("overwrite").parquet(corpusDir)
+        .write.parquet(s"$d/corpus")
       // one file: the centroid table is nCells rows; a file per row
       // just multiplies listing/footer overhead on every read
-      centroids.coalesce(1).write.mode("overwrite").parquet(centDir)
+      centroids.coalesce(1).write.parquet(s"$d/centroids")
     }
-    (Ingest.readParquet(s, corpusDir)
+    (Ingest.readParquet(s, s"$base/corpus")
         .select(col("vec_id"), col("v"), col("cell"), col("label")),
-      Ingest.readParquet(s, centDir))
+      Ingest.readParquet(s, s"$base/centroids"))
   }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Dedup
 
@@ -34,18 +33,11 @@ object PairsLayout {
     * (sfDir, threshold), read from the layout afterwards. */
   def jaccardPairs(s: SparkSession, sfDir: String,
                    threshold: Double): DataFrame = {
-    // full threshold value in the key — a rounded form (t40) would let
-    // 0.4 and 0.404 share a directory, silently re-serving pairs
-    // computed at the other threshold
-    val spec =
-      s"t${threshold.toString.replace('.', '_').replace('-', 'm')}" +
-        s"_sh3_v$LayoutVersion"
-    val dir = s"${SourceLayout.root("graft_pairs", sfDir)}/$spec"
-    SourceLayout.writeOnce(dir) {
+    val dir = s"${SourceLayout.root("graft_pairs", sfDir)}/" +
+      s"${SourceLayout.thresholdKey(threshold)}_sh3_v$LayoutVersion"
+    SourceLayout.table(s, dir) {
       Dedup.jaccardPairs(Tables.documents(s, sfDir), threshold,
           shingleTable = Some(ShingleLayout.shingles(s, sfDir)))
-        .write.mode("overwrite").parquet(dir)
     }
-    Ingest.readParquet(s, dir)
   }
 }

@@ -36,10 +36,10 @@ object PartitionedTables {
     * events copy; `ds` comes back as a DATE partition column. */
   def events(s: SparkSession, sfDir: String): DataFrame = {
     val dir = s"${root(sfDir)}/events"
-    SourceLayout.writeOnce(dir) {
+    SourceLayout.publish(dir) { d =>
       Tables.events(s, sfDir)
         .withColumn("ds", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("ds").parquet(dir)
+        .write.partitionBy("ds").parquet(d)
     }
     Ingest.readParquet(s, dir)
   }

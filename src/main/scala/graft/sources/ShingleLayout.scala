@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Dedup
 
@@ -40,12 +39,9 @@ object ShingleLayout {
   def shingles(s: SparkSession, sfDir: String, n: Int = 3): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_shingles", sfDir)}/n${n}_v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
-      Tables.atFullWidth(s) {
-        Dedup.shingleRows(Tables.documents(s, sfDir), n)
-          .write.mode("overwrite").parquet(dir)
-      }
+    Tables.atFullWidth(s) {
+      SourceLayout.table(s, dir)(
+        Dedup.shingleRows(Tables.documents(s, sfDir), n))
     }
-    Ingest.readParquet(s, dir)
   }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.Ingest
 import graft.model.Tables
 import graft.text.Dedup
 
@@ -32,11 +31,8 @@ object SpansLayout {
                       n: Int = 8): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_substr_spans", sfDir)}/n${n}_v$LayoutVersion"
-    SourceLayout.writeOnce(dir) {
-      Dedup.duplicatedSpans(Tables.documents(s, sfDir), n)
-        .write.mode("overwrite").parquet(dir)
-    }
-    Ingest.readParquet(s, dir)
+    SourceLayout.table(s, dir)(
+      Dedup.duplicatedSpans(Tables.documents(s, sfDir), n))
   }
 
   /** DISTINCT n-gram index of the already-ingested corpus slice
@@ -52,15 +48,13 @@ object SpansLayout {
   def yesterdayGrams(s: SparkSession, sfDir: String, n: Int = 8): DataFrame = {
     val dir =
       s"${SourceLayout.root("graft_substr_spans", sfDir)}/ygrams_n${n}_v1"
-    SourceLayout.writeOnce(dir) {
-      Tables.atFullWidth(s) {
+    Tables.atFullWidth(s) {
+      SourceLayout.table(s, dir) {
         import org.apache.spark.sql.functions.col
         Dedup.positionalShingles(
             Tables.documents(s, sfDir).filter(col("doc_id") % 17 =!= 0), n)
           .select(col("sh")).distinct()
-          .write.mode("overwrite").parquet(dir)
       }
     }
-    Ingest.readParquet(s, dir)
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.etl.Ingest
 import graft.functions.ZOrderKey
 import graft.model.Tables
 
@@ -31,18 +30,14 @@ object ZOrderedTables {
 
   private val NFiles = 16
 
-  private def writeOnce(dir: String)(build: => DataFrame): Unit =
-    SourceLayout.writeOnce(dir)(build.write.mode("overwrite").parquet(dir))
-
   /** lineitem range-sorted by l_partkey only. */
   def linear(s: SparkSession, sfDir: String): DataFrame = {
     val dir = s"${root(sfDir)}/linear"
-    writeOnce(dir) {
+    SourceLayout.table(s, dir) {
       Tables.lineitem(s, sfDir)
         .repartitionByRange(NFiles, col("l_partkey"))
         .sortWithinPartitions(col("l_partkey"))
     }
-    Ingest.readParquet(s, dir)
   }
 
   /** lineitem range-sorted by the interleaved (partkey, suppkey) key.
@@ -61,7 +56,7 @@ object ZOrderedTables {
     */
   def zordered(s: SparkSession, sfDir: String): DataFrame = {
     val dir = s"${root(sfDir)}/zorder"
-    writeOnce(dir) {
+    SourceLayout.table(s, dir) {
       val li = Tables.lineitem(s, sfDir)
       val bounds = li.agg(
         min(col("l_partkey")).as("pmin"), max(col("l_partkey")).as("pmax"),
@@ -77,6 +72,5 @@ object ZOrderedTables {
         .sortWithinPartitions(col("zk"))
         .drop("zk", "pmin", "pmax", "smin", "smax")
     }
-    Ingest.readParquet(s, dir)
   }
 }

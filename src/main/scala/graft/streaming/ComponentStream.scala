@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Ingest
+import graft.sources.SourceLayout
 import graft.text.Components
 
 /** Streaming incremental connected-component maintenance — the
@@ -31,23 +32,16 @@ import graft.text.Components
 final class ComponentMaintainer(spark: SparkSession, stateDir: String,
                                 initial: DataFrame) {
 
-  // Restart recovery: resume from the highest COMPLETE (_SUCCESS-marked)
-  // epoch already on disk — a maintainer that unconditionally rewrote
-  // epoch0 with `initial` would silently discard every merged wave on
-  // restart. Only a virgin stateDir seeds epoch0 from `initial`; a
-  // half-written epoch dir (no _SUCCESS) is ignored and overwritten by
-  // the next update.
-  @volatile private var epoch = {
-    val base = new java.io.File(stateDir)
-    val done = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("epoch\\d+") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getName.drop("epoch".length).toInt)
-    if (done.isEmpty) {
-      initial.select(col("node"), col("component"))
-        .write.mode("overwrite").parquet(s"$stateDir/epoch0")
-      0
-    } else done.max
+  // Restart recovery: resume from the highest COMPLETE epoch already
+  // on disk (SourceLayout.lastEpoch) — a maintainer that unconditionally
+  // rewrote epoch0 with `initial` would silently discard every merged
+  // wave on restart. Only a virgin stateDir seeds epoch0 from `initial`.
+  // Every epoch is published through SourceLayout.publish, so a torn
+  // epoch dir (no marker) is ignored and replaced by the next update.
+  @volatile private var epoch = SourceLayout.lastEpoch(stateDir).getOrElse {
+    SourceLayout.publish(s"$stateDir/epoch0")(
+      initial.select(col("node"), col("component")).write.parquet(_))
+    0
   }
 
   /** The live (node, component) assignment (current epoch read-back). */
@@ -57,22 +51,13 @@ final class ComponentMaintainer(spark: SparkSession, stateDir: String,
   def update(edges: DataFrame): Unit = synchronized {
     val next = Components.incrementalComponents(current,
       edges.select(col("src"), col("dst")))
-    next.write.mode("overwrite").parquet(s"$stateDir/epoch${epoch + 1}")
+    SourceLayout.publish(s"$stateDir/epoch${epoch + 1}")(next.write.parquet(_))
     epoch += 1
     // prune superseded epochs after the successful write (the
     // CorpusFunnelMaintainer rule): recovery only opens the highest
     // complete epoch, so the chain would grow O(waves × assignment)
     // unread; the immediately previous epoch stays as crash fallback
-    Option(new java.io.File(stateDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("epoch\\d+") &&
-        f.getName.drop("epoch".length).toInt < epoch - 1)
-      .foreach { old =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(old.toPath).iterator().asScala
-          .toSeq.reverse.foreach(p =>
-            try java.nio.file.Files.delete(p)
-            catch { case _: java.io.IOException => () })
-      }
+    SourceLayout.pruneEpochs(stateDir, below = epoch - 1)
   }
 
   /** foreachBatch adapter. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.Ingest
+import graft.sources.SourceLayout
 import graft.text.{Components, CorpusPipeline, Dedup, TextAnalysis}
 
 /** Streaming corpus-curation funnel — the operational twin of
@@ -87,29 +88,23 @@ final class CorpusFunnelMaintainer(spark: SparkSession, stateDir: String,
     .withColumn("hit", lit(1))
     .localCheckpoint(false)
 
-  private val Tables = Seq("docs", "shingles", "comps")
-
-  @volatile private var epoch = {
-    val base = new java.io.File(stateDir)
-    val done = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("epoch\\d+") &&
-        Tables.forall(t => new java.io.File(new java.io.File(f, t),
-          "_SUCCESS").isFile))
-      .map(_.getName.drop("epoch".length).toInt)
-    if (done.isEmpty) {
-      import spark.implicits._
-      // virgin state: an empty corpus (wave 0 arrives like any other)
+  // an epoch's three tables are published as one directory, so an
+  // epoch is complete only with all three (SourceLayout.lastEpoch)
+  @volatile private var epoch = SourceLayout.lastEpoch(stateDir).getOrElse {
+    import spark.implicits._
+    // virgin state: an empty corpus (wave 0 arrives like any other)
+    SourceLayout.publish(s"$stateDir/epoch0") { d =>
       Seq.empty[(Long, String, Long, Long, String,
           Boolean, Boolean, Boolean, Boolean)]
         .toDF("doc_id", "source", "n_chars", "n_tok", "content_hash",
           "f_ek", "f_q", "f_dc", "f_mx")
-        .write.mode("overwrite").parquet(s"$stateDir/epoch0/docs")
+        .write.parquet(s"$d/docs")
       Seq.empty[(Long, String, Long)].toDF("doc_id", "sh", "n_sh")
-        .write.mode("overwrite").parquet(s"$stateDir/epoch0/shingles")
+        .write.parquet(s"$d/shingles")
       Seq.empty[(Long, Long)].toDF("node", "component")
-        .write.mode("overwrite").parquet(s"$stateDir/epoch0/comps")
-      0
-    } else done.max
+        .write.parquet(s"$d/comps")
+    }
+    0
   }
 
   private def tbl(name: String): DataFrame =
@@ -201,32 +196,23 @@ final class CorpusFunnelMaintainer(spark: SparkSession, stateDir: String,
 
     // epoch advance (docs with revoked incumbents + the wave's rows)
     val next = epoch + 1
-    docsSt.join(displaced, Seq("doc_id"), "left_outer")
-      .withColumn("f_ek", col("f_ek") && col("lost").isNull)
-      .drop("lost")
-      .unionByName(freshDocs)
-      .write.mode("overwrite").parquet(s"$stateDir/epoch$next/docs")
-    shinglesSt.unionByName(shK)
-      .write.mode("overwrite").parquet(s"$stateDir/epoch$next/shingles")
-    merged.unionByName(singletons)
-      .write.mode("overwrite").parquet(s"$stateDir/epoch$next/comps")
+    SourceLayout.publish(s"$stateDir/epoch$next") { d =>
+      docsSt.join(displaced, Seq("doc_id"), "left_outer")
+        .withColumn("f_ek", col("f_ek") && col("lost").isNull)
+        .drop("lost")
+        .unionByName(freshDocs)
+        .write.parquet(s"$d/docs")
+      shinglesSt.unionByName(shK).write.parquet(s"$d/shingles")
+      merged.unionByName(singletons).write.parquet(s"$d/comps")
+    }
     epoch = next
     // prune superseded epochs AFTER the new one is fully written —
     // restart recovery only ever opens the highest complete epoch, so
     // keeping the full chain would grow the state dir O(waves × state)
     // for nothing; epoch `next - 1` is retained as the crash fallback
-    // (a torn epoch `next` resumes there). A failure mid-delete just
+    // (one complete epoch behind the live one). A failure mid-delete just
     // leaves extra complete epochs for the next update to prune.
-    Option(new java.io.File(stateDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("epoch\\d+") &&
-        f.getName.drop("epoch".length).toInt < next - 1)
-      .foreach { old =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(old.toPath).iterator().asScala
-          .toSeq.reverse.foreach(p =>
-            try java.nio.file.Files.delete(p)
-            catch { case _: java.io.IOException => () })
-      }
+    SourceLayout.pruneEpochs(stateDir, below = next - 1)
   }
 
   /** The live per-doc flag frame in [[CorpusPipeline.perDocStages]]

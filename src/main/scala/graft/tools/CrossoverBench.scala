@@ -21,11 +21,11 @@ import graft.etl.Ingest
   *
   * Usage: runMain graft.tools.CrossoverBench <baseSfDir> <outDir> <M> <reps>
   * Generates <outDir>/documents.parquet + embeddings.parquet once
-  * (_SUCCESS-marked), then times catalog queries (q26/q54/q27 — live
-  * pair derivations over ShingleLayout) and the live embedding dedup
-  * pipelines (exact vs LSH pair source through components — the
-  * pre-layout forms of q132/q144) with the Bench noop-sink harness,
-  * printing every rep.
+  * (one SourceLayout.publish of outDir), then times catalog queries
+  * (q26/q54/q27 — live pair derivations over ShingleLayout) and the
+  * live embedding dedup pipelines (exact vs LSH pair source through
+  * components — the pre-layout forms of q132/q144) with the Bench
+  * noop-sink harness, printing every rep.
   */
 object CrossoverBench {
 
@@ -83,15 +83,13 @@ object CrossoverBench {
     val spark = Bench.session()
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    graft.sources.SourceLayout.writeOnce(outDir) {
+    graft.sources.SourceLayout.publish(outDir) { d =>
       amplifyDocs(graft.model.Tables.documents(spark, baseSfDir), m)
         .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+        .write.parquet(s"$d/documents.parquet")
       amplifyEmbeddings(graft.model.Tables.embeddings(spark, baseSfDir), m)
         .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(outDir, "_SUCCESS"))
+        .write.parquet(s"$d/embeddings.parquet")
     }
     val docs = Ingest.readParquet(spark, s"$outDir/documents.parquet")
     val emb = Ingest.readParquet(spark, s"$outDir/embeddings.parquet")

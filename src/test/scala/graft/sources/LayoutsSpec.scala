@@ -57,9 +57,12 @@ class LayoutsSpec extends AnyFunSuite {
       "graft_copurchase" -> "copurchase_*",
       "graft_embpairs" -> "embedding_*",
       "graft_ivf" -> "ivf_index")
-    val unwarmed = families.diff(warmed.keySet)
-    assert(unwarmed.isEmpty,
-      s"layout families $unwarmed are not warmed by Layouts.inventory — " +
-        "register them (and their build cost) before any query reads them")
+    // equality, not inclusion: a rename that stops the regex matching
+    // `SourceLayout.root("…")` would otherwise pass with zero families
+    assert(families === warmed.keySet,
+      s"layout families ${families.diff(warmed.keySet)} are not warmed by " +
+        "Layouts.inventory — register them (and their build cost) before " +
+        s"any query reads them; families ${warmed.keySet.diff(families)} " +
+        "are no longer found in src/main")
   }
 }

@@ -80,4 +80,32 @@ class ComponentStreamSpec extends AnyFunSuite {
     assert(m2.current.collect().map(r => r.getLong(0) -> r.getLong(1))
       .toMap.apply(20L) === 1L)
   }
+
+  test("a restart skips a torn epoch and a staging leftover, then publishes over them") {
+    val dir = java.nio.file.Files.createTempDirectory("comptorn").toString
+    def assignment(m: ComponentMaintainer) =
+      m.current.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val initial = Components.connectedComponents(
+      Seq((1L, 2L), (10L, 11L)).toDF("src", "dst"))
+    val m1 = new ComponentMaintainer(spark, dir, initial)
+    m1.update(Seq((2L, 10L)).toDF("src", "dst")) // epoch1
+    val atN = assignment(m1)
+
+    // a crash while epoch2 was being written: a torn epoch2 (parquet
+    // without its marker, as an in-place writer leaves it) and a
+    // staging sibling a killed publish leaves behind
+    val bogus = Seq((99L, 99L)).toDF("node", "component")
+    bogus.write.parquet(s"$dir/epoch2")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "epoch2", "_SUCCESS"))
+    bogus.write.parquet(s"$dir/.epoch2.staging-${java.util.UUID.randomUUID()}")
+
+    val m2 = new ComponentMaintainer(spark, dir, initial)
+    assert(assignment(m2) === atN, "the restart must resume at epoch1")
+
+    m2.update(Seq((11L, 20L)).toDF("src", "dst"))
+    assert(graft.sources.SourceLayout.complete(s"$dir/epoch2"))
+    val next = assignment(m2)
+    assert(next === atN + (20L -> 1L), "epoch2 must be the merge of epoch1")
+    assert(assignment(new ComponentMaintainer(spark, dir, initial)) === next)
+  }
 }
