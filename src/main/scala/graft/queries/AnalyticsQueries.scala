@@ -419,16 +419,23 @@ object AnalyticsQueries {
     * a plain long HashAggregate with map-side combine. Encoding needs
     * labels in [0, 2³²) and per-node counts < 2³¹ — label vocabularies
     * (nation keys here) and per-node distinct-neighbor counts sit far
-    * inside both at any corpus size. */
+    * inside both at any corpus size; an input outside either fails
+    * the aggregate (`raise_error`) instead of packing a wrong mode. */
   private[queries] def propagateMode(labeledEdges: org.apache.spark.sql.DataFrame,
                             node: org.apache.spark.sql.Column)
       : org.apache.spark.sql.DataFrame = {
     val labType = labeledEdges.schema("lab").dataType
     val mask = (1L << 32) - 1
+    val packed =
+      when(col("lab") < 0 || col("lab") > mask, raise_error(concat(
+        lit("propagateMode: label outside [0, 2^32): "), col("lab").cast("string"))))
+      .when(col("c") >= (1L << 31), raise_error(concat(
+        lit("propagateMode: vote count at or above 2^31: "), col("c").cast("string"))))
+      .otherwise(shiftleft(col("c"), 32) + (lit(mask) - col("lab")))
     labeledEdges
       .groupBy(node.as("n"), col("lab")).agg(count(lit(1)).as("c"))
       .groupBy(col("n"))
-      .agg(max(shiftleft(col("c"), 32) + (lit(mask) - col("lab"))).as("m"))
+      .agg(max(packed).as("m"))
       .select(col("n").as(node.toString),
         (lit(mask) - col("m").bitwiseAND(lit(mask))).cast(labType).as("lab"),
         shiftright(col("m"), 32).as("votes"))
@@ -1688,9 +1695,9 @@ object AnalyticsQueries {
     * dashboard, and a data-curation lens (a corpus whose source mix
     * has Gini → 1 is one crawler in a trench coat). The only hard part
     * at scale is the global revenue rank, which is exactly
-    * [[graft.etl.GlobalRank.withGlobalId]] (two-phase range-partition
-    * rank: the shuffle moves (partition, count) metadata, never a
-    * single-task sort — q159's machinery re-used). One aggregate over
+    * [[graft.etl.GlobalRank.withGlobalId]] (one range sort plus a
+    * running count: only per-partition run counts are collected, never
+    * a single-task sort — q159's machinery re-used). One aggregate over
     * the ranked table then evaluates G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n
     * with the deterministic (rev, custkey) total order on both
     * engines.

@@ -192,8 +192,8 @@ object EvalQueries {
         .select(col("flag"), expr("sc div n_train").as("p"), col("n_train"))
         .localCheckpoint(false) // 3 rows, consumed by cal/test/output
       // no checkpoint here: cal re-derives cheaply (filter + broadcast
-      // join) from the checkpointed base, and withPerKeyId checkpoints
-      // its range partitioning internally anyway
+      // join) from the checkpointed base, and its one consumer is the
+      // histogram below, itself checkpointed
       val cal = b.where(col("split") === 1).join(broadcast(pred), Seq("flag"))
         .select(col("flag"), abs(col("cents") - col("p")).as("r"))
       // exact per-flag rank WITHOUT sorting the calibration set: the

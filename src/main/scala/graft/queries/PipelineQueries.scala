@@ -552,13 +552,13 @@ object PipelineQueries {
     })
 
   /** Dense global id assignment WITHOUT the single-partition global
-    * window ([[graft.etl.GlobalRank]]: range-repartition → metadata
-    * offsets → partition-local row_number). (lang, doc_id) is a total
+    * window ([[graft.etl.GlobalRank]]: one range sort → per-partition
+    * run counts → offset + running count). (lang, doc_id) is a total
     * order, so the distributed rank equals the oracle's plain
     * ROW_NUMBER() OVER that order regardless of how the ranges fell. */
   val q159GlobalIds = GraftQuery(
     "q159_global_ids",
-    "dense global row numbers via range-partition + offset (no global window)",
+    "dense global row numbers via one range sort + run-count offsets (no global window)",
     Some("""SELECT doc_id, lang,
         ROW_NUMBER() OVER (ORDER BY lang, doc_id) AS global_id
       FROM documents ORDER BY doc_id"""),
@@ -621,9 +621,9 @@ object PipelineQueries {
     * mix difficulty bands — `curriculum_pos = (rank−1)·10 + bucket`
     * is the interleaved total order (positions are sparse where
     * buckets exhaust; an ordering key, not a dense id). The per-bucket
-    * rank is [[graft.etl.GlobalRank.withPerKeyId]] — range-partition
-    * by (bucket, length, id) then partition-LOCAL row_number + per-key
-    * metadata offsets — because the naive
+    * rank is [[graft.etl.GlobalRank.withPerKeyId]] — one range sort
+    * by (bucket, length, id), then a running count per bucket from
+    * per-partition run-count offsets — because the naive
     * `row_number over (partition by bucket)` gives each of the 10
     * buckets ONE window partition: a 10-task sort at any corpus size
     * (the q159 argument, per key).

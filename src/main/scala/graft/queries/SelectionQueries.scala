@@ -89,9 +89,11 @@ object SelectionQueries {
     * the engine already scores exactly: q58's BM25 over fixed probe
     * terms and q30's exact cosine against a probe embedding
     * (vec_id 0 — vec_id aligns with doc_id in the fixture). Each
-    * list is ranked by the DISTRIBUTED two-phase global rank
-    * ([[graft.etl.GlobalRank.withGlobalId]]) — a full-corpus ranking
-    * must never be one window partition — on the 4-dp-rounded score
+    * list is ranked by the DISTRIBUTED global rank
+    * ([[graft.etl.GlobalRank.withGlobalId]]: one range sort, a
+    * run-count collect only when it spans partitions, offsets added
+    * in one pass) — a full-corpus ranking must never be one window
+    * partition — on the 4-dp-rounded score
     * (both engines round identically; raw-double order at a tie
     * boundary would be ulp-fragile). Fusion is a full-outer join on
     * doc id; absent list membership contributes 0, rank sentinel -1.
@@ -257,7 +259,7 @@ object SelectionQueries {
     * to content) and cut at ⌊0.8n⌋/⌊0.9n⌋ — EXACT per-stratum
     * proportions, which `randomSplit` only approximates. The
     * within-source rank is [[graft.etl.GlobalRank.withPerKeyId]] —
-    * range-partitioned by (source, hash), never one window partition
+    * one range sort by (source, hash), never one window partition
     * per source, so a 100 TB stratum still splits in byte-bounded
     * tasks. Cut fractions use n·8/10.0 (quotient steps of .2 — never
     * ulp-adjacent to an integer, so FLOOR agrees across engines).

@@ -77,8 +77,8 @@ object Components {
   }
 
   /** Edge-count cutoff for the driver union-find short-circuit in
-    * [[connectedComponents]]: 2²⁰ edges × two 8-byte ids ≈ 16 MB on
-    * the driver — the PQ-codebook / GlobalRank-offsets bounded-collect
+    * [[connectedComponents]]: 2²⁰ edges × two 8-byte ids ≈ 16 MB
+    * collected — the PQ-codebook / GlobalRank run-count bounded-collect
     * class, and the same measured-dispatch idiom as `cellsFor` /
     * `lshPlanesFor` / `maxBucket`. Below it, the star fixpoint's cost
     * is pure per-round JOB overhead (each round = 2 shuffles + a

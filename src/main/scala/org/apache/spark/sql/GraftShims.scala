@@ -1,8 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters — the
   * supported pattern for libraries that ship native Catalyst
@@ -39,6 +42,11 @@ object GraftShims {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** A DataFrame of `schema` over rows computed off `from`'s
+    * `queryExecution.toRdd` — the InternalRow path, no Row conversion. */
+  def fromRows(from: Dataset[_], rows: RDD[InternalRow], schema: StructType): DataFrame =
+    from.queryExecution.sparkSession.internalCreateDataFrame(rows, schema)
 
   /** The error `spark.read.parquet` raises on a path holding no data file. */
   def parquetSchemaNotFound(): Throwable =

@@ -104,51 +104,79 @@ class EtlSpec extends AnyFunSuite {
     assert(e.getMessage.contains("null fraction"))
   }
 
+  /** AQE would coalesce these small sorts into one partition; with
+    * coalescing off the sort keeps the session's 4 partitions, so the
+    * cross-partition offsets decide the ranks. */
+  private def uncoalesced[T](body: => T): T = {
+    val conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(conf)
+    spark.conf.set(conf, "false")
+    try body
+    finally was.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
   test("GlobalRank assigns the exact total-order rank across range partitions") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // shuffled unique keys over more rows than partitions; parts=4 so
-    // several partitions are non-trivially filled AND offsets matter
-    // seeded: a failure must reproduce the exact partition layout
-    val keys = new scala.util.Random(42).shuffle((1 to 103).toList)
-    val df = keys.map(k => (k, s"v$k")).toDF("k", "v").repartition(7)
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val out = graft.etl.GlobalRank.withGlobalId(df, Seq(col("k")), parts = 4)
-      .collect().map(r => r.getInt(0) -> r.getLong(2)).toMap
-    (1 to 103).foreach(k => assert(out(k) === k.toLong,
-      s"key $k got rank ${out(k)}"))
-    // library-caller cleanup: the internal range-partition checkpoint
-    // is tracked and release() frees those blocks (Bench's
-    // between-query sweep subsumes this; library use must not leak)
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
-    assert(pinned.nonEmpty, "withGlobalId pins its range checkpoint")
-    graft.etl.GlobalRank.release(spark)
-    val live = spark.sparkContext.getPersistentRDDs
-    assert(pinned.forall(id => !live.contains(id) ||
-        !live(id).getStorageLevel.useMemory),
-      "release() must unpersist the GlobalRank checkpoints")
+    uncoalesced {
+      // shuffled unique keys over more rows than partitions, seeded: a
+      // failure must reproduce the exact partition layout
+      val keys = new scala.util.Random(42).shuffle((1 to 103).toList)
+      val df = keys.map(k => (k, s"v$k")).toDF("k", "v").repartition(7)
+      val ranked = GlobalRank.withGlobalId(df, Seq(col("k")))
+      assert(ranked.rdd.getNumPartitions > 1)
+      val out = ranked.collect().map(r => r.getInt(0) -> r.getLong(2)).toMap
+      (1 to 103).foreach(k => assert(out(k) === k.toLong,
+        s"key $k got rank ${out(k)}"))
+    }
   }
 
   test("withPerKeyId equals the per-key window rank under key skew") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // heavily skewed keys (80/20/3 rows) shuffled, so range partitions
-    // split the big key across several partitions and per-key offsets
-    // genuinely matter
-    val rows = new scala.util.Random(42).shuffle(
-      (1 to 80).map(v => (0, v * 7 % 97)) ++   // distinct order values
-        (1 to 20).map(v => (1, v)) ++
-        (1 to 3).map(v => (2, v)))
-    val df = rows.toDF("bucket", "v").repartition(5)
-    val out = graft.etl.GlobalRank
-      .withPerKeyId(df, col("bucket"), Seq(col("v")), parts = 4)
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val expected = rows.groupBy(_._1).flatMap { case (k, vs) =>
-      vs.map(_._2).sorted.zipWithIndex.map { case (v, i) =>
-        (k, v) -> (i + 1L) }
+    uncoalesced {
+      // heavily skewed keys (80/20/3 rows) shuffled, so the sort splits
+      // the big key across several partitions and per-key offsets
+      // genuinely matter
+      val rows = new scala.util.Random(42).shuffle(
+        (1 to 80).map(v => (0, v * 7 % 97)) ++   // distinct order values
+          (1 to 20).map(v => (1, v)) ++
+          (1 to 3).map(v => (2, v)))
+      val df = rows.toDF("bucket", "v").repartition(5)
+      val ranked = GlobalRank.withPerKeyId(df, col("bucket"), Seq(col("v")))
+        .withColumn("pid", spark_partition_id())
+      val out = ranked.collect()
+      assert(out.filter(_.getInt(0) == 0).map(_.getInt(3)).distinct.length > 1,
+        "bucket 0 must span partitions")
+      val got = out.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+      val expected = rows.groupBy(_._1).flatMap { case (k, vs) =>
+        vs.map(_._2).sorted.zipWithIndex.map { case (v, i) =>
+          (k, v) -> (i + 1L) }
+      }
+      assert(got === expected)
     }
-    expected.foreach { case (kv, rk) =>
-      assert(out(kv) === rk, s"per-key rank mismatch at $kv") }
-    graft.etl.GlobalRank.release(spark)
+  }
+
+  test("GlobalRank over a one-partition input starts no count job") {
+    val counter = new graft.tools.QueryTime.Counter(spark.sparkContext)
+    try {
+      // a single-partition child already satisfies the sort's ordered
+      // distribution: no exchange, so building the rank runs nothing
+      val df = spark.range(0, 50, 1, 1).select(col("id"))
+      val (j0, _, _) = counter.totals()
+      val ranked = GlobalRank.withGlobalId(df, Seq(col("id").desc))
+      val (j1, _, _) = counter.totals()
+      val out = ranked.collect().map(r => r.getLong(0) -> r.getLong(1))
+      val (j2, _, _) = counter.totals()
+      assert(j1 - j0 === 0L, "building a one-partition rank starts no job")
+      assert(j2 - j1 === 1L, "the collect is the only job")
+      assert(out.toMap === (0L until 50L).map(i => i -> (50L - i)).toMap)
+    } finally counter.close()
+  }
+
+  test("GlobalRank leaves no persisted RDD behind") {
+    uncoalesced {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val df = (1 to 40).map(i => (i % 3, i)).toDF("g", "v").repartition(3)
+      GlobalRank.withGlobalId(df, Seq(col("v"))).collect()
+      GlobalRank.withPerKeyId(df, col("g"), Seq(col("v"))).collect()
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+    }
   }
 }

@@ -42,6 +42,34 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(out.head.getLong(1) === 8L && out.head.getLong(2) === 3L)
   }
 
+  test("propagateMode fails on a negative label instead of packing it") {
+    import spark.implicits._
+    val edges = Seq((1L, 101L, 5L), (2L, 101L, -1L)).toDF("s", "p", "lab")
+    val e = intercept[Exception](
+      AnalyticsQueries.propagateMode(edges, col("p")).collect())
+    assert(e.getMessage.contains("label outside [0, 2^32): -1"), e.getMessage)
+  }
+
+  test("propagateMode fails on a label at 2^32 instead of packing it") {
+    import spark.implicits._
+    val edges = Seq((1L, 101L, 5L), (2L, 101L, 1L << 32)).toDF("s", "p", "lab")
+    val e = intercept[Exception](
+      AnalyticsQueries.propagateMode(edges, col("p")).collect())
+    assert(e.getMessage.contains("label outside [0, 2^32): 4294967296"),
+      e.getMessage)
+  }
+
+  test("propagateMode fails on a vote count of 2^31 instead of packing it") {
+    // 2^31 edges from one node to one label: generated rows counted
+    // as they stream, never held anywhere
+    val edges = spark.range(0, 1L << 31, 1, 4)
+      .select(col("id").as("s"), lit(7L).as("p"), lit(3L).as("lab"))
+    val e = intercept[Exception](
+      AnalyticsQueries.propagateMode(edges, col("p")).collect())
+    assert(e.getMessage.contains("vote count at or above 2^31: 2147483648"),
+      e.getMessage)
+  }
+
   test("q189 integer allocations sum exactly to the 1000 budget") {
     val out = AnalyticsQueries.q189NeymanAlloc
       .run(spark, graft.SparkTestSession.Sf0001).collect()

@@ -324,12 +324,15 @@ class PlansSpec extends AnyFunSuite {
       s"only the centroid build may explode:\n$p")
   }
 
-  test("q159 ranks through partition-local windows, never a global one") {
+  test("q159 ranks through one range sort, never a global window") {
     val p = plan("q159_global_ids")
-    assert(p.contains("windowspecdefinition(__pid"),
-      s"the row_number window must be keyed by the range partition:\n$p")
-    assert(!p.contains("windowspecdefinition(lang"),
-      s"a window keyed only on the sort order would be the global funnel:\n$p")
+    // row_number over ORDER BY alone is one window partition behind a
+    // single-partition exchange: the global funnel
+    assert(!p.contains("windowspecdefinition") && !p.contains("SinglePartition"),
+      s"no window and no single-partition exchange may rank the corpus:\n$p")
+    // GlobalRank hands back the offset pass over its range-sorted rows
+    assert(p.contains("Scan ExistingRDD"),
+      s"the ids must come from GlobalRank's offset pass:\n$p")
   }
 
   test("q151 counts gram occurrences through partial aggregation, not a window") {

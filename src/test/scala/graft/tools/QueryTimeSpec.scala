@@ -22,4 +22,19 @@ class QueryTimeSpec extends AnyFunSuite {
       assert((a.jobs, a.stages, a.tasks) === (b.jobs, b.stages, b.tasks))
     } finally counter.close()
   }
+
+  test("q159's global rank runs in at most 5 jobs, the same on every rep") {
+    // one range sort, its shuffle read again for the offsets: a
+    // checkpoint, a counts shuffle or an offsets broadcast coming back
+    // into GlobalRank would add jobs (the two-phase form ran 9)
+    val Seq((_, fn)) = Bench.select(Set("q159_global_ids"))
+    val counter = new QueryTime.Counter(spark.sparkContext)
+    try {
+      QueryTime.rep(spark, counter, SparkTestSession.Sf0001, fn)
+      val Seq(a, b) = Seq.fill(2)(
+        QueryTime.rep(spark, counter, SparkTestSession.Sf0001, fn))
+      assert(a.jobs === b.jobs)
+      assert(a.jobs <= 5L, s"q159 ran ${a.jobs} jobs")
+    } finally counter.close()
+  }
 }

@@ -21,13 +21,16 @@ HEADER = re.compile(r"^========== (\S+) ==========$")
 # ids (`plan_id=123`), lambda variable suffixes (`x_20`), RDD ids
 # (`MapPartitionsRDD[388]`), JVM lambda class names with their
 # identity hashes (`Bpe$$$Lambda$7300/0x00007f2fa591df70@636280d2`) and
-# byte-array literals, printed by identity (`[B@5ba3e590`)
+# byte-array literals, printed by identity (`[B@5ba3e590`), and the
+# source line an RDD was created at (`localCheckpoint at Foo.scala:884`),
+# which moves with any edit above it in that file
 COUNTERS = [
     (re.compile(r"(#|plan_id=)\d+"), r"\1N"),
     (re.compile(r"(lambda [A-Za-z]+_)\d+"), r"\1N"),
     (re.compile(r"(RDD\[)\d+\]"), r"\1N]"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), r"$Lambda"),
     (re.compile(r"\[B@[0-9a-f]+"), r"[B@N"),
+    (re.compile(r"( at \w+\.scala:)\d+"), r"\1N"),
 ]
 
 
