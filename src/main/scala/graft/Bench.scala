@@ -182,58 +182,6 @@ object Bench {
     // file always carries every entry, name-sorted, one per line.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/root/repo/BENCH_DETAIL.json")
-    // Cross-round regression signal IN the artifact (round-6 verdict
-    // #6): sum this run vs the previous round's committed detail over
-    // their COMMON query names — the comparison currency under
-    // co-tenant noise (totals diverge whenever queries are added) —
-    // so the judge reads a number, not tail archaeology. The previous
-    // file is the highest-numbered committed BENCH_DETAIL_r*.json
-    // (override via SPARK_GRAFT_BENCH_PREV); parse failures degrade
-    // to a "_common_subset_vs_prev": null, never a crash.
-    val commonSubset: String = try {
-      val prevFile = sys.env.get("SPARK_GRAFT_BENCH_PREV")
-        .map(java.nio.file.Paths.get(_))
-        .orElse {
-          val dir = java.nio.file.Paths.get("/root/repo")
-          val rx = "BENCH_DETAIL_r(\\d+)\\.json".r
-          import scala.jdk.CollectionConverters._
-          // never compare against the file THIS run is about to
-          // overwrite: a re-run in the same round would otherwise read
-          // the previous attempt's uncommitted detail as "prev" and
-          // report a same-binary noise delta as the cross-round signal
-          // normalize both sides: a relative or dotted detailPath must
-          // still match the directory listing's entry for the same file
-          val self = java.nio.file.Paths.get(detailPath)
-            .toAbsolutePath.normalize
-          java.nio.file.Files.list(dir).iterator().asScala
-            .flatMap(p => p.getFileName.toString match {
-              case rx(n) if p.toAbsolutePath.normalize != self =>
-                Some((n.toInt, p))
-              case _ => None
-            }).toSeq.sortBy(_._1).lastOption.map(_._2)
-        }
-      prevFile match {
-        case None => "null"
-        case Some(p) =>
-          // catalog names are q<N>_<slug> — anchoring on that keeps the
-          // header fields (and the nested common-subset object) out
-          val kv = "\"(q\\d+_[a-z0-9_]+)\":\\s*(-?[0-9.]+)".r
-          val prev = kv.findAllMatchIn(
-              new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter(_._2 >= 0).toMap
-          val cur = results.filter(_._2 >= 0).toMap
-          val common = prev.keySet.intersect(cur.keySet).toSeq.sorted
-          if (common.isEmpty) "null"
-          else s"""{"prev_file": "${p.getFileName}", """ +
-            s""""n": ${common.size}, """ +
-            s""""prev_total": ${j(common.map(prev).sum)}, """ +
-            s""""total": ${j(common.map(cur).sum)}}"""
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] common-subset calc failed: ${e.getMessage}")
-      "null"
-    }
     val errorsJson = errorsMap(
       failed.map(_._1).sorted.flatMap(n => errors.get(n).map(n -> _)))
     val detail = results.sortBy(_._1)
@@ -242,7 +190,6 @@ object Bench {
         s"""{\n  "_unit": "sec",\n  "_sf": "$sfDir",\n""" +
           s"""  "_passed": ${timed.size},\n  "_failed": $failedJson,\n""" +
           s"""  "_errors": $errorsJson,\n""" +
-          s"""  "_common_subset_vs_prev": $commonSubset,\n""" +
           s"""  "_layout_warm_sec": $warmTotal,\n""" +
           s"""  "_layout_warm": $warmJson,\n""" +
           s"""  "_total": ${j(total)},\n""",
