@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1474,7 +1474,7 @@ object AnalyticsQueries {
     * R₁ = Σ cₐ(v)·midrank(v) is an aggregate over ≤|distinct values|
     * rows — the corpus is touched by exactly one groupBy. The one
     * ordered sweep (cumulative count) runs over that distribution,
-    * registered calendar-style in PlanLintSpec's bounded-window list.
+    * registered calendar-style in `QueriesSpec.boundedGlobalWindow`.
     * z uses the tie-corrected variance n₁n₂/12·((N+1) − Σ(t³−t)/(N(N−1))).
     */
   val q206MannWhitney = GraftQuery(
@@ -1740,9 +1740,10 @@ object AnalyticsQueries {
     * compares two distributions; MI asks whether two VARIABLES are
     * independent, the feature-selection primitive). Everything runs on
     * the joint contingency table — |types| × 7 rows at any corpus
-    * size — built by the single corpus groupBy; marginals and the
-    * three entropies are re-aggregates of that tiny table, attached
-    * broadcast. Output in nats, with NMI = MI/√(H_x·H_y).
+    * size — whose cells, both marginals and the total come out of ONE
+    * `cube` shuffle; one scalar aggregate then collects that table and
+    * folds MI and the two entropies in a fixed order. Output in nats,
+    * with NMI = MI/√(H_x·H_y).
     */
   val q210MutualInfo = GraftQuery(
     "q210_mutual_info",
@@ -1770,36 +1771,55 @@ object AnalyticsQueries {
     (s, d) => mutualInfo(events(s, d)))
 
   /** The q210 plan over any (event_type, ts) frame — AnalyticsSpec
-    * pins MI = 0 for an independent construction and MI = H for a
-    * deterministic dependence. */
+    * pins MI = 0 for an independent construction, MI = H for a
+    * deterministic dependence, and the null and empty cases below.
+    *
+    * `cube(x, y)` emits the cells (grouping id 0), the type marginal
+    * (1), the weekday marginal (2) and the total n (3) in one shuffle.
+    * The scalar aggregate collects each set, sorted, and every sum is
+    * a left fold from 0.0 in that order (the q246 deterministic fold),
+    * so its association does not depend on partitioning. The arrays
+    * hold at most |types| × 7 entries at any corpus size.
+    *
+    * Nulls follow the oracle SQL's equi-joins: a null type or weekday
+    * counts toward n and toward its own marginal (so toward that
+    * entropy), but its cells add nothing to MI. With no cell whose
+    * type and weekday are both set, MI is null; an empty input gives
+    * a row of nulls.
+    */
   def mutualInfo(ev: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-      val j = ev
-        .groupBy(col("event_type").as("x"),
-          (dayofweek(to_date(col("ts")))).as("y"))
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint(false) // feeds total, both marginals, MI sum
-      val n = j.agg(sum(col("c")).as("n"))
-      val mx = j.groupBy(col("x")).agg(sum(col("c")).as("cx"))
-      val my = j.groupBy(col("y")).agg(sum(col("c")).as("cy"))
-      val mi = j.join(broadcast(mx), Seq("x")).join(broadcast(my), Seq("y"))
-        .crossJoin(broadcast(n))
-        .agg(sum((col("c") / col("n")) *
-          log(col("c") * col("n") / (col("cx") * col("cy")))).as("mi"),
-          first(col("n")).as("n"))
-      val hx = mx.crossJoin(broadcast(n))
-        .agg((-sum((col("cx") / col("n")) * log(col("cx") / col("n"))))
-          .as("h_type"))
-      val hy = my.crossJoin(broadcast(n))
-        .agg((-sum((col("cy") / col("n")) * log(col("cy") / col("n"))))
-          .as("h_weekday"))
-      mi.crossJoin(broadcast(hx)).crossJoin(broadcast(hy))
-        .select(col("n").cast("long").as("n_events"),
-          round(col("mi"), 6).as("mi_nats"),
-          round(col("h_type"), 6).as("h_type"),
-          round(col("h_weekday"), 6).as("h_weekday"),
-          round(col("mi") / sqrt(col("h_type") * col("h_weekday")), 6)
-            .as("nmi"))
+    val g = col("g")
+    val table = ev
+      .cube(col("event_type").as("x"), dayofweek(to_date(col("ts"))).as("y"))
+      .agg(grouping_id().as("g"), count(lit(1)).as("c"))
+      .agg(max(when(g === 3, col("c"))).as("n"),
+        array_sort(collect_list(when(g === 0 && col("x").isNotNull &&
+          col("y").isNotNull, struct(col("x"), col("y"), col("c")))))
+          .as("cells"),
+        array_sort(collect_list(when(g === 1, struct(col("x"), col("c")))))
+          .as("mx"),
+        array_sort(collect_list(when(g === 2, struct(col("y"), col("c")))))
+          .as("my"))
+    val n = col("n")
+    def fold(rows: Column, term: Column => Column): Column =
+      when(size(rows) > 0, aggregate(rows, lit(0.0), (acc, r) => acc + term(r)))
+    def marginal(m: Column, key: String): Column =
+      map_from_entries(filter(m, r => r(key).isNotNull))
+    val cx = marginal(col("mx"), "x")
+    val cy = marginal(col("my"), "y")
+    val mi = fold(col("cells"), r => (r("c") / n) *
+      log(r("c") * n / (element_at(cx, r("x")) * element_at(cy, r("y")))))
+    def entropy(m: Column): Column =
+      -fold(m, r => (r("c") / n) * log(r("c") / n))
+    table
+      .select(n.cast("long").as("n_events"), mi.as("mi"),
+        entropy(col("mx")).as("h_type"), entropy(col("my")).as("h_weekday"))
+      .select(col("n_events"), round(col("mi"), 6).as("mi_nats"),
+        round(col("h_type"), 6).as("h_type"),
+        round(col("h_weekday"), 6).as("h_weekday"),
+        round(col("mi") / sqrt(col("h_type") * col("h_weekday")), 6)
+          .as("nmi"))
   }
 
   /** Benford first-digit conformance of order totals — the

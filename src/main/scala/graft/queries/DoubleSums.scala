@@ -52,9 +52,9 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * and the deterministic fold (q246) is a higher-order `aggregate`
   * over a sorted collect_list, not a Sum aggregate. The registry is
   * therefore exactly the (c)/(d) tail of the round-11 inventory;
-  * DoubleSumLintSpec keeps it EXACT both ways — an unregistered new
-  * site fails, and a stale entry (query no longer planning the shape)
-  * also fails.
+  * `graft.queries.QueriesSpec` keeps it EXACT both ways — an
+  * unregistered new site fails, and a stale entry (query no longer
+  * planning the shape) also fails.
   */
 object DoubleSums {
 
@@ -160,7 +160,7 @@ object DoubleSums {
     "q180_temperature_mix", "q184_zipf_fit", "q185_js_divergence",
     "q190_seasonal_decompose", "q193_degree_assortativity",
     "q194_interarrival", "q201_cusum", "q205_spearman",
-    "q209_gini", "q210_mutual_info", "q211_benford",
+    "q209_gini", "q211_benford",
     "q212_attribution", // UNBOUNDED per-row denominators (1/n_touch) —
     // not integerizable; the verdict's named residual example
     "q214_acf_ljung_box", "q216_linkage_eval",
@@ -189,8 +189,8 @@ object DoubleSums {
     "q287_log_rank")
 
   /** queryName -> `<class>: rationale`. Kept EXACT both ways by
-    * DoubleSumLintSpec (an unregistered new site fails; a stale entry
-    * whose query no longer plans the shape also fails); the full
+    * `graft.queries.QueriesSpec` (an unregistered new site fails; a
+    * stale entry whose query no longer plans the shape also fails); the full
     * classification table lives in COVERAGE.md (round-12 inventory).
     */
   val registry: Map[String, String] =

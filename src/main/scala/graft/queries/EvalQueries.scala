@@ -301,7 +301,7 @@ object EvalQueries {
     * VALUE DISTRIBUTION (the q205/q206 discipline): the corpus
     * collapses to ≤ |discounts|×|quantities| = 550 distinct-score rows
     * (a domain constant — 180 observed), the one ordered sweep runs on
-    * that table (registered bounded global window, PlanLintSpec), and
+    * that table (registered in `QueriesSpec.boundedGlobalWindow`), and
     * ties contribute the standard half credit. EvalSpec pins
     * equivalence to the brute-force pairwise definition on a hand set.
     */
@@ -340,7 +340,7 @@ object EvalQueries {
       .agg(sum(col("y")).as("np"),
         (count(lit(1)) - sum(col("y"))).as("nn"))
     // bounded global window: rows = |distinct scores|, a domain
-    // constant (registered in PlanLintSpec.boundedGlobalWindow)
+    // constant (registered in QueriesSpec.boundedGlobalWindow)
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("s"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         -1)

@@ -296,7 +296,7 @@ object MixtureQueries {
     *
     * Scale: all state is cumulative windows over the per-(type, day)
     * table — calendar-bounded (the q122 argument; registered in
-    * PlanLintSpec's boundedGlobalWindow for the day-level cumsums).
+    * `QueriesSpec.boundedGlobalWindow` for the day-level cumsums).
     */
   val q267UcbMixture = GraftQuery(
     "q267_ucb_mixture",

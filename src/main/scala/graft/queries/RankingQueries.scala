@@ -19,7 +19,7 @@ import graft.text.Similarity
   * ranker (the family's oracle-checkable ground truth); every metric
   * is computed from its top-10 table + a per-label count table — after
   * the candidate generation (quadratic by intent, registered with its
-  * IVF twin in PlanLintSpec) nothing grows past |queries|×10 rows. At
+  * IVF twin in QueriesSpec) nothing grows past |queries|×10 rows. At
   * 100 TB the candidate source swaps to the IVF cell join exactly as
   * q141→q143 did; the metric arithmetic downstream is unchanged.
   *

@@ -87,8 +87,9 @@ object SelectionQueries {
 
   /** Reciprocal-rank fusion (RRF, k=60) of the two retrieval signals
     * the engine already scores exactly: q58's BM25 over fixed probe
-    * terms and q30's exact cosine against a probe embedding
-    * (vec_id 0 — vec_id aligns with doc_id in the fixture). Each
+    * terms (the one-pass list [[bm25]]) and q30's exact cosine
+    * against a probe embedding (vec_id 0 — vec_id aligns with doc_id
+    * in the fixture). Each
     * list is ranked by the DISTRIBUTED global rank
     * ([[graft.etl.GlobalRank.withGlobalId]]: one range sort, a
     * run-count collect only when it spans partitions, offsets added
@@ -134,24 +135,8 @@ object SelectionQueries {
         FROM bmr b FULL OUTER JOIN csr c ON b.doc_id = c.doc_id)
       SELECT * FROM fused ORDER BY rrf DESC, doc_id LIMIT 20"""),
     (s, d) => {
-      // BM25 list — q58's scoring verbatim, unrounded until the rank key
-      val toks = documents(s, d).select(col("doc_id"),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-      val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val tf = toks.filter(col("term").isin("spark", "filter", "stream"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val n = dl.agg(count(lit(1)).as("n"),
-        avg(col("dl").cast("double")).as("avgdl"))
-      val idf = log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5))
-      val tfNorm = col("tf") * 2.2 /
-        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-      val bm = tf.join(broadcast(df), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(n))
-        .groupBy(col("doc_id"))
-        .agg(round(sum(idf * tfNorm), 4).as("bm25"))
-      val bmr = GlobalRank.withGlobalId(bm, Seq(col("bm25").desc, col("doc_id")))
+      val bmr = GlobalRank.withGlobalId(bm25(documents(s, d)),
+          Seq(col("bm25").desc, col("doc_id")))
         .select(col("doc_id"), col("global_id").as("r_bm"))
       // cosine list vs the probe embedding
       val e = embeddings(s, d).select(col("vec_id"),
@@ -173,6 +158,51 @@ object SelectionQueries {
         .orderBy(col("rrf").desc, col("doc_id"))
         .limit(20)
     })
+
+  /** q174's probe terms, in the order their scores are added. */
+  private val ProbeTerms = Seq("spark", "filter", "stream")
+
+  /** q174's BM25 list over any (doc_id, text) frame: q58's scoring
+    * (k1 = 1.2, b = 0.75, Robertson idf) over [[ProbeTerms]], one row
+    * per doc_id holding at least one of them, `bm25` rounded to 4 dp.
+    *
+    * One pass, no token explode: the scan stage splits each text once
+    * into its length and each term's occurrence count (`size(t) −
+    * size(array_remove(t, term))`), and one shuffle sums them per
+    * doc_id (exact if a doc_id repeats). n, avgdl and each term's df
+    * come from one scalar aggregate over those rows, attached by one
+    * broadcast; both consumers read the same exchange. A null-text row
+    * has no tokens; a null doc_id counts toward n, avgdl and df but is
+    * not scored, as the oracle SQL's join on doc_id drops it.
+    * The per-term scores are added in [[ProbeTerms]] order.
+    */
+  def bm25(docs: DataFrame): DataFrame = {
+    val t = split(lower(trim(col("text"))), "\\s+")
+    val tf = ProbeTerms.indices.map(i => s"tf$i")
+    val perDoc = docs.where(col("text").isNotNull)
+      .select(col("doc_id") +: size(t).as("dl") +: ProbeTerms.zip(tf).map {
+        case (term, c) => (size(t) - size(array_remove(t, term))).as(c)
+      }: _*)
+      .groupBy(col("doc_id"))
+      .agg(sum(col("dl")).as("dl"), tf.map(c => sum(col(c)).as(c)): _*)
+    val stats = perDoc.agg(count(lit(1)).as("n"),
+      avg(col("dl").cast("double")).as("avgdl") +:
+        tf.map(c => count(when(col(c) > 0, 1)).as(s"d$c")): _*)
+    val score = tf.map { c =>
+      val (f, df) = (col(c), col(s"d$c"))
+      val idf = log(lit(1.0) + (col("n") - df + 0.5) / (df + 0.5))
+      val tfNorm = f * 2.2 /
+        (f + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
+      when(f > 0, idf * tfNorm).otherwise(lit(0.0))
+    }.reduce(_ + _)
+    perDoc
+      // one predicate over doc_id and the sums: a bare doc_id filter
+      // would be pushed below the aggregate, and the two consumers'
+      // exchanges would differ and both run
+      .where(when(col("doc_id").isNotNull, tf.map(col(_) > 0).reduce(_ || _)))
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"), round(score, 4).as("bm25"))
+  }
 
   /** DSIR-style importance selection (Xie et al. 2023): score every
     * raw document by how much more likely its bigrams are under the

@@ -15,13 +15,17 @@ import graft.Bench
   * reps each, and prints every rep's wall time with the jobs, completed
   * stages and tasks it ran — wall time separates plan cost from
   * co-tenant noise bursts, the counts rank fixed per-job overhead
-  * against data-bound work. Usage:
+  * against data-bound work. Each rep is also split into its build
+  * (the query function: DataFrame construction and the eager jobs it
+  * starts) and its exec (the noop write), with the jobs and seconds of
+  * each. Usage:
   *   runMain graft.tools.QueryTime <sfDir> <reps> [<name>...]
   * (no names = the whole catalog).
   */
 object QueryTime {
 
-  final case class Rep(wallS: Double, jobs: Long, stages: Long, tasks: Long)
+  final case class Rep(wallS: Double, jobs: Long, stages: Long, tasks: Long,
+                       buildJobs: Long, buildS: Double, execJobs: Long, execS: Double)
 
   /** Counts jobs, completed stages and their tasks, except its own
     * sentinel jobs and their stages. */
@@ -66,17 +70,26 @@ object QueryTime {
     def close(): Unit = sc.removeSparkListener(this)
   }
 
-  /** One rep: the timed noop-sink write, a storage reset, and what the
-    * rep ran. */
+  private def seconds[A](body: => A): (A, Double) = {
+    val start = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - start) / 1e9)
+  }
+
+  /** One rep: the timed query function and noop-sink write, a storage
+    * reset, and what the rep ran. The jobs between the two are counted
+    * after a drain, outside both clocks; `wallS` is build plus exec. */
   def rep(spark: SparkSession, counter: Counter, sfDir: String,
           fn: (SparkSession, String) => DataFrame): Rep = {
     val (j0, s0, t0) = counter.totals()
-    val start = System.nanoTime()
-    val wall =
-      try { Bench.noop(fn(spark, sfDir)); (System.nanoTime() - start) / 1e9 }
-      finally Bench.reset(spark)
-    val (j1, s1, t1) = counter.totals()
-    Rep(wall, j1 - j0, s1 - s0, t1 - t0)
+    val (j1, buildS, execS) =
+      try {
+        val (df, buildS) = seconds(fn(spark, sfDir))
+        val (j1, _, _) = counter.totals()
+        (j1, buildS, seconds(Bench.noop(df))._2)
+      } finally Bench.reset(spark)
+    val (j2, s2, t2) = counter.totals()
+    Rep(buildS + execS, j2 - j0, s2 - s0, t2 - t0, j1 - j0, buildS, j2 - j1, execS)
   }
 
   def main(args: Array[String]): Unit = {
@@ -92,7 +105,8 @@ object QueryTime {
         (1 to reps).foreach { i =>
           val r = rep(spark, counter, sfDir, fn)
           println(f"[qt] $name%-32s rep $i%-2d ${r.wallS}%6.2f s  " +
-            f"jobs=${r.jobs}%-4d stages=${r.stages}%-4d tasks=${r.tasks}%-5d")
+            f"jobs=${r.jobs}%-4d stages=${r.stages}%-4d tasks=${r.tasks}%-5d " +
+            f"build=${r.buildJobs}j/${r.buildS}%.2fs exec=${r.execJobs}j/${r.execS}%.2fs")
         }
       } catch { case e: Throwable =>
         System.err.println(s"[qt] $name failed: ${e.getMessage}")

@@ -251,6 +251,42 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(r2.getDouble(4) === 1.0, s"NMI ${r2.getDouble(4)}")
   }
 
+  test("q210 mutual information: null type or weekday feeds n and its marginal, not MI; no rows gives nulls") {
+    import spark.implicits._
+    def at(day: Int) = java.sql.Timestamp.valueOf(
+      java.time.LocalDate.of(2024, 1, 1).plusDays(day).toString + " 09:00:00")
+    def r6(v: Double) = BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def row(ev: Seq[(String, java.sql.Timestamp)]) = {
+      val r = AnalyticsQueries.mutualInfo(ev.toDF("event_type", "ts")).collect()(0)
+      (0 until 5).map(i => if (r.isNullAt(i)) None else Some(r.get(i)))
+    }
+    def expected(n: Long, mi: Double, hx: Double, hy: Double) =
+      Seq(Some(n), Some(r6(mi)), Some(r6(hx)), Some(r6(hy)),
+        Some(r6(mi / math.sqrt(hx * hy))))
+    val ln = math.log _
+    // a,a @day0; b,b @day1; null @day0: n = 5, cx = {a 2, b 2, null 1},
+    // cy = {day0 3, day1 2}; MI sums the two complete cells only
+    val nullType = Seq(("a", at(0)), ("a", at(0)), ("b", at(1)), ("b", at(1)),
+      (null, at(0)))
+    assert(row(nullType) === expected(5L,
+      0.4 * ln(2.0 * 5 / (2 * 3)) + 0.4 * ln(2.0 * 5 / (2 * 2)),
+      -(0.4 * ln(0.4) + 0.4 * ln(0.4) + 0.2 * ln(0.2)),
+      -(0.6 * ln(0.6) + 0.4 * ln(0.4))))
+    // a,a @day0; a,a @null; b @day1: n = 5, cx = {a 4, b 1},
+    // cy = {day0 2, day1 1, null 2}
+    val nullTs = Seq(("a", at(0)), ("a", at(0)), ("a", null), ("a", null),
+      ("b", at(1)))
+    assert(row(nullTs) === expected(5L,
+      0.4 * ln(2.0 * 5 / (4 * 2)) + 0.2 * ln(1.0 * 5 / (1 * 1)),
+      -(0.8 * ln(0.8) + 0.2 * ln(0.2)),
+      -(0.4 * ln(0.4) + 0.2 * ln(0.2) + 0.4 * ln(0.4))))
+    // no complete cell: MI is null (the oracle's MI join is empty), n
+    // still counts both events, and each entropy is of one value
+    assert(row(Seq(("a", null), ("a", null))) ===
+      Seq(Some(2L), None, Some(0.0), Some(0.0), None))
+    assert(row(Seq.empty) === Seq.fill(5)(None))
+  }
+
   test("q211 Benford: integer-exact digit binning at power-of-ten boundaries, hand chi2") {
     import spark.implicits._
     // 999.995 -> cents 100000 -> digit 1 (the boundary a log10-floor

@@ -1,0 +1,64 @@
+package graft.queries
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{Bench, SparkTestSession}
+import graft.model.Tables
+import graft.tools.QueryTime
+
+/** q210 and q174 compute each shared intermediate once, inside one
+  * plan: q210's contingency table is one `cube` and one scalar fold,
+  * q174's BM25 list one scan and one reused exchange. Each rep is
+  * counted through QueryTime's drained listener at sf0.001; the old
+  * forms ran 15 (q210) and 18 (q174) jobs. */
+class OnePassSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  private val sf = SparkTestSession.Sf0001
+
+  private def jobs(name: String): Long = {
+    val Seq((_, fn)) = Bench.select(Set(name))
+    val counter = new QueryTime.Counter(spark.sparkContext)
+    try QueryTime.rep(spark, counter, sf, fn).jobs
+    finally counter.close()
+  }
+
+  /** Every node of an executed plan, through AQE's wrappers and stages
+    * (a reused exchange is a leaf: its source is counted once). */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case qs: QueryStageExec => nodes(qs.plan)
+    case _ => p.children.flatMap(nodes)
+  })
+
+  test("q210 runs in at most 3 jobs and broadcasts nothing") {
+    val n = jobs("q210_mutual_info")
+    assert(n <= 3L, s"q210 ran $n jobs")
+    val df = AnalyticsQueries.q210MutualInfo.run(spark, sf)
+    df.collect()
+    val broadcasts = nodes(df.queryExecution.executedPlan)
+      .collect { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.isEmpty, s"q210 broadcasts: $broadcasts")
+  }
+
+  test("q174 runs in at most 11 jobs") {
+    val n = jobs("q174_rrf_fusion")
+    assert(n <= 11L, s"q174 ran $n jobs")
+  }
+
+  test("q174's BM25 list scans documents once and explodes nothing") {
+    // GlobalRank hides the ranked list's plan from q174's own plan, so
+    // the list is checked as the frame q174 ranks
+    val df = SelectionQueries.bm25(Tables.documents(spark, sf))
+    df.collect()
+    val plan = nodes(df.queryExecution.executedPlan)
+    val scans = plan.collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName.startsWith("documents")) => s
+    }
+    assert(scans.length === 1, s"documents scans: $scans")
+    assert(!plan.exists(_.isInstanceOf[GenerateExec]), "a Generate in the BM25 plan")
+  }
+}

@@ -75,6 +75,25 @@ class SelectionSpec extends AnyFunSuite {
     if (both.nonEmpty) assert(rrfs.head >= rrfs.last)
   }
 
+  test("q174's BM25 list by hand: a repeated doc_id sums, a term-free doc counts toward n but is not scored") {
+    import spark.implicits._
+    val docs = Seq((1L, "spark stream spark"), (2L, "filter the data"),
+      (2L, "Spark  jobs"), (3L, "nothing here at all"), (4L, null))
+      .toDF("doc_id", "text")
+    val got = SelectionQueries.bm25(docs).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // doc 2 is one document of 5 tokens; doc 4 has no text, so no
+    // tokens: n = 3, avgdl = (3 + 5 + 4) / 3 = 4, df = spark 2,
+    // filter 1, stream 1, idf(df) = ln(1 + (3 - df + 0.5) / (df + 0.5))
+    val (idf2, idf1) = (math.log(1.6), math.log(8.0 / 3))
+    def norm(tf: Double, dl: Double) =
+      tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / 4.0))
+    def r4(v: Double) = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(got === Map(
+      1L -> r4(idf2 * norm(2, 3) + idf1 * norm(1, 3)),
+      2L -> r4(idf2 * norm(1, 5) + idf1 * norm(1, 5))))
+  }
+
   test("q175 scores only non-target docs and never selects the target lang") {
     val rows = SelectionQueries.q175DsirSelect.run(spark, sf).collect()
     assert(rows.nonEmpty)
