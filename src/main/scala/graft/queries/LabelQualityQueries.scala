@@ -310,15 +310,11 @@ object LabelQualityQueries {
     // a few Lloyd rounds and the fit is the query's dominant constant
     val (indexed, centroids) =
       index.getOrElse(Ivf.buildIndex(emb, nCells, maxIter = 8))
-    // the v2 layout corpus carries `label` (a physical column of the
-    // base table riding on the cell-indexed corpus); the join-back and
-    // the checkpoint it forced exist only for the buildIndex path
-    // (spec fixtures), whose transform output lacks the label
-    val e0 =
-      if (indexed.columns.contains("label")) indexed
-      else indexed.join(emb.select(col("vec_id"), col("label")),
-        Seq("vec_id")).localCheckpoint(false)
-    val e = e0.withColumn("nrm", Sim.norm2(col("v")))
+    // both index forms carry `label`: the v2 layout corpus stores it (a
+    // physical column of the base table riding on the cell-indexed
+    // corpus) and buildIndex passes it through its transform, so no
+    // join-back is needed
+    val e = indexed.withColumn("nrm", Sim.norm2(col("v")))
     val queries = e.select(col("vec_id").as("q_id"), col("v").as("qv"),
       col("nrm").as("qnrm"), col("label").as("la"))
     // spread rationale: see ivfMatryoshkaAgreement — the scoring leg
@@ -481,14 +477,8 @@ object LabelQualityQueries {
     import graft.text.Ivf
     val (indexed, centroids) =
       index.getOrElse(Ivf.buildIndex(emb, nCells, maxIter = 8))
-    // the v2 layout corpus carries `label`; the join-back + checkpoint
-    // exist only for the buildIndex path (spec fixtures) — the q143
-    // rationale exactly
-    val e0 =
-      if (indexed.columns.contains("label")) indexed
-      else indexed.join(emb.select(col("vec_id"), col("label")),
-        Seq("vec_id")).localCheckpoint(false)
-    val e = e0.withColumn("nrm", Sim.norm2(col("v")))
+    // both index forms carry `label` — the q143 rationale exactly
+    val e = indexed.withColumn("nrm", Sim.norm2(col("v")))
     val queries = e.select(col("vec_id").as("q_id"), col("v").as("qv"),
       col("nrm").as("qnrm"), col("label").as("la"))
     // spread rationale: see ivfMatryoshkaAgreement — the scoring leg

@@ -56,10 +56,13 @@ object BucketedTables {
       // a regenerated fixture gets a fresh stamped name; drop the same
       // slug's OLD stamped registrations first — their tmpdir LOCATIONs
       // may be gone, and leaving them accumulates dangling catalog
-      // entries that shadow nothing but never die
+      // entries that shadow nothing but never die. The session catalog
+      // lists them directly: `s.catalog.listTables()` is a Dataset, and
+      // collecting it starts a Spark job per table
+      val sessionCatalog = s.sessionState.catalog
       val prefix = s"graft_${base}_bucketed_${SourceLayout.slug(sfDir)}_"
-      s.catalog.listTables().collect()
-        .map(_.name).filter(t => t.startsWith(prefix) && t != name)
+      sessionCatalog.listTables(sessionCatalog.getCurrentDatabase, s"$prefix*")
+        .map(_.table).filter(_ != name)
         .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
       val dir = s"${root(sfDir)}/${base}_${specFingerprint(key, cols)}"
       val pruned = Tables.load(s, sfDir, base).select(cols.map(col): _*)

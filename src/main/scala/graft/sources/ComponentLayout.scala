@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.model.Tables
 import graft.text.Components
@@ -18,8 +19,14 @@ import graft.text.Components
   * selection, leakage-safe splitting, yield accounting — reads the
   * assignment instead of re-deriving the graph. The parquet round-trip
   * is exact (two long columns), so consumers are value-identical to
-  * calling [[Components.dedupComponents]] directly — QueriesSpec pins
-  * that equality.
+  * calling [[Components.dedupComponents]] directly — PipelineQueriesSpec
+  * pins that equality.
+  *
+  * Both builds read their pairs from [[PairsLayout]] (the chain is
+  * corpus → shingle index → pairs → components): the pair table holds
+  * exactly the rows [[Components.dedupComponents]] derives live (same
+  * function, threshold and shingle table), so the component build
+  * costs only the component rounds and the corpus join-back.
   *
   * The directory name embeds the spec (threshold, shingle width,
   * algorithm version) — the [[BucketedTables]] fingerprint discipline:
@@ -41,10 +48,12 @@ object ComponentLayout {
     val dir = s"${SourceLayout.root("graft_components", sfDir)}/" +
       s"${thresholdKey(threshold)}_sh3_v$LayoutVersion"
     SourceLayout.table(s, dir) {
-      // the one-time build itself reads the shingle layout — the two
-      // storage layers chain (corpus → shingle index → components)
-      Components.dedupComponents(Tables.documents(s, sfDir), threshold,
-          shingleTable = Some(ShingleLayout.shingles(s, sfDir)))
+      // the one-time build reads the pair layout, so the storage layers
+      // chain (corpus → shingle index → pairs → components) and the
+      // pair self-join runs once per corpus, in the pair layout's build
+      Components.componentsOver(Tables.documents(s, sfDir),
+        PairsLayout.jaccardPairs(s, sfDir, threshold)
+          .select(col("doc_a").as("src"), col("doc_b").as("dst")))
     }
   }
 
@@ -57,7 +66,6 @@ object ComponentLayout {
     */
   def yesterdayComponents(s: SparkSession, sfDir: String,
                           threshold: Double): DataFrame = {
-    import org.apache.spark.sql.functions._
     val dir = s"${SourceLayout.root("graft_components", sfDir)}/" +
       s"${thresholdKey(threshold)}_sh3_v${LayoutVersion}_wave8"
     SourceLayout.table(s, dir) {

@@ -31,7 +31,11 @@ object IvfLayout {
     * (cell is just a column on it), so every physical column rides
     * along for free; v1 forced q143/q202 to re-scan embeddings and
     * join the label back per query (one scan + one broadcast join +
-    * one localCheckpoint each, every run). */
+    * one localCheckpoint each, every run). Since the build carries
+    * `label` through the KMeans transform instead of joining it back
+    * on vec_id, a v2 build scans embeddings once; the rows are the
+    * same whenever vec_id is unique (the inner join duplicated rows on
+    * a repeated id), so the directory name is unchanged. */
   private val LayoutVersion = 2
 
   private def root(sfDir: String, nCells: Int, seed: Long, maxIter: Int): String =
@@ -56,9 +60,10 @@ object IvfLayout {
     // one publish of the base directory: the pair becomes visible
     // together, so a half-written pair is never read
     SourceLayout.publish(base) { d =>
-      val emb = Tables.embeddings(s, sfDir)
-      val (indexed, centroids) = Ivf.buildIndex(emb, cells, seed, maxIter)
-      indexed.join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
+      // the transform carries `label` through: one embeddings scan
+      val (indexed, centroids) =
+        Ivf.buildIndex(Tables.embeddings(s, sfDir), cells, seed, maxIter)
+      indexed.select(col("vec_id"), col("v"), col("cell"), col("label"))
         .write.parquet(s"$d/corpus")
       // one file: the centroid table is nCells rows; a file per row
       // just multiplies listing/footer overhead on every read

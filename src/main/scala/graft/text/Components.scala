@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, ShortType}
 
 /** Distributed connected components over a near-dup pair list — the
   * step that turns pairwise dedup output ([[Dedup.jaccardPairs]],
@@ -86,18 +87,24 @@ object Components {
     * fixture scale against <10 ms of actual union-find work), so the
     * collect is strictly cheaper; above it, the distributed fixpoint
     * runs unchanged — at 100 TB the pair list blows past the cutoff
-    * in the first ingest wave and this branch never triggers. The
-    * count is free: the convergence fingerprint already computes it. */
+    * in the first ingest wave and this branch never triggers. The size
+    * test is one bounded probe, a `limit(cutoff + 1)` collect of the
+    * checkpointed edge frame: below the cutoff its rows ARE the
+    * union-find's input (one job, where a count aggregate and a second
+    * collect took three); above it the ≤ cutoff + 1 rows are dropped
+    * and the fixpoint starts from the same checkpointed frame. */
   private val DriverUnionFindCutoff = 1L << 20
 
-  /** Driver union-find over an ALREADY-BOUNDED edge list (callers
-    * guarantee ≤ [[DriverUnionFindCutoff]] rows): component = min node
-    * id, the exact contract of the star fixpoint — ComponentsSpec pins
-    * path equality on random graphs. Integral node ids only (every
-    * producer keys on doc_id/vec_id longs); non-integral ids take the
-    * distributed path regardless of size. */
-  private def driverUnionFind(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  /** Driver union-find over an ALREADY-COLLECTED edge list of
+    * (src, dst) longs (at most [[DriverUnionFindCutoff]] rows, the
+    * probe in [[connectedComponents]]): component = min node id, the
+    * exact contract of the star fixpoint — ComponentsSpec pins path
+    * equality on random graphs. Integral node ids only (every producer
+    * keys on doc_id/vec_id longs); non-integral ids take the
+    * distributed path regardless of size. The output columns take
+    * `dt`, the input's id type. */
+  private def driverUnionFind(spark: SparkSession, edges: Array[Row],
+                              dt: DataType): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -106,33 +113,28 @@ object Components {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-        val (ra, rb) = (find(a), find(b))
-        // min id stays root, so the root IS the component id
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
+    edges.foreach { row =>
+      val (a, b) = (row.getLong(0), row.getLong(1))
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // min id stays root, so the root IS the component id
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
     val out = new Array[(Long, Long)](parent.size())
     var i = 0
     val it = parent.keySet().iterator()
     while (it.hasNext) { val n = it.next(); out(i) = (n, find(n)); i += 1 }
     import spark.implicits._
-    val dt = edges.schema("src").dataType
     out.toSeq.toDF("node", "component")
       .select(col("node").cast(dt).as("node"),
         col("component").cast(dt).as("component"))
   }
 
-  private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case _: org.apache.spark.sql.types.LongType |
-           _: org.apache.spark.sql.types.IntegerType |
-           _: org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
+  private def isIntegral(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType => true
+    case _ => false
+  }
 
   /** (node, component) for every node incident to an edge; component =
     * min node id of the connected component. `edges` is an undirected
@@ -151,13 +153,19 @@ object Components {
     var cur = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct().localCheckpoint(false)
-    var fp = fingerprint(cur)
     // driverCutoff is a test seam (ComponentsSpec pins both paths equal
     // on the same graphs); production callers take the default
-    if (fp._1 <= driverCutoff && isIntegral(edges.schema("src").dataType))
-      return driverUnionFind(cur)
+    val dt = edges.schema("src").dataType
+    if (driverCutoff >= 0 && isIntegral(dt)) {
+      val probe = cur.select(col("src").cast("long"), col("dst").cast("long"))
+        .limit(math.min(driverCutoff, Int.MaxValue - 1L).toInt + 1).collect()
+      if (probe.length <= driverCutoff)
+        return driverUnionFind(cur.sparkSession, probe, dt)
+    }
+    var fp = fingerprint(cur)
     var rounds = 0
-    var converged = cur.isEmpty
+    // the fingerprint's count tells an empty frontier: no emptiness job
+    var converged = fp._1 == 0L
     // Frontier partitioning adapts to the frontier's MEASURED size
     // (already known from the fingerprint count — no extra action):
     // the edge set contracts geometrically, so late rounds on the
@@ -203,10 +211,9 @@ object Components {
     * ([[Dedup.minHashLshPairs]] / [[Dedup.simHashPairs]]) instead —
     * the downstream plan is identical.
     */
-  def dedupComponents(docs: DataFrame, threshold: Double,
-                      shingleTable: Option[DataFrame] = None): DataFrame =
+  def dedupComponents(docs: DataFrame, threshold: Double): DataFrame =
     componentsOver(docs,
-      Dedup.jaccardPairs(docs, threshold, shingleTable = shingleTable)
+      Dedup.jaccardPairs(docs, threshold)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")))
 
   /** [[dedupComponents]] with a caller-supplied (src, dst) pair frame —

@@ -47,17 +47,23 @@ object Ivf {
     math.max(16L, math.min(65536L, math.sqrt(n.toDouble).toLong / 4)).toInt
 
   /** Corpus with a `cell` column from the fitted quantizer, plus the
-    * centroid table (nCells rows — broadcastable by construction). */
+    * centroid table (nCells rows — broadcastable by construction).
+    * `emb` must carry (vec_id, embedding); any EXTRA columns (e.g. the
+    * embeddings table's `label`) pass through the transform untouched
+    * after (vec_id, v, cell), the [[probeCells]] rule, so callers never
+    * join them back. */
   def buildIndex(emb: DataFrame, nCells: Int = 16, seed: Long = 42L,
                  maxIter: Int = 20)
       : (DataFrame, DataFrame) = {
-    val withVec = emb.select(col("vec_id"),
+    val extra = emb.columns.filterNot(Set("vec_id", "embedding")).map(col)
+    val withVec = emb.select(Seq(col("vec_id"),
       Similarity.toDouble(col("embedding")).as("v"),
-      array_to_vector(col("embedding")).as("features"))
+      array_to_vector(col("embedding")).as("features")) ++ extra: _*)
     val km = new KMeans().setK(nCells).setMaxIter(maxIter).setSeed(seed)
       .setFeaturesCol("features").setPredictionCol("cell")
       .fit(withVec)
-    val indexed = km.transform(withVec).select(col("vec_id"), col("v"), col("cell"))
+    val indexed = km.transform(withVec)
+      .select(Seq(col("vec_id"), col("v"), col("cell")) ++ extra: _*)
     val centroids = km.clusterCenters.zipWithIndex.map { case (c, i) =>
       (i, c.toArray)
     }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
@@ -9,6 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Bench
+import graft.sources.Layouts
 
 /** Per-query profiler: runs catalog queries through Bench's noop
   * sink, one untimed warm rep (codegen and scan init) then N counted
@@ -20,7 +22,8 @@ import graft.Bench
   * starts) and its exec (the noop write), with the jobs and seconds of
   * each. Usage:
   *   runMain graft.tools.QueryTime <sfDir> <reps> [<name>...]
-  * (no names = the whole catalog).
+  * (no names = the whole catalog), or, to price the layout builds:
+  *   runMain graft.tools.QueryTime layouts <sfDir>
   */
 object QueryTime {
 
@@ -92,7 +95,33 @@ object QueryTime {
     Rep(buildS + execS, j2 - j0, s2 - s0, t2 - t0, j1 - j0, buildS, j2 - j1, execS)
   }
 
-  def main(args: Array[String]): Unit = {
+  /** Builds the whole [[Layouts.inventory]] into a fresh root (a new
+    * `java.io.tmpdir`, set before the session starts, so Spark's local
+    * dirs land there too) and prints the jobs, completed stages, tasks
+    * and seconds of each build, in inventory order. A build reads the
+    * layouts before it, as in a cold warm-up; the first build also pays
+    * the session's cold codegen. The root is left in place. */
+  def layouts(sfDir: String): Unit = {
+    val root = Files.createTempDirectory("graft_layouts").toString
+    System.setProperty("java.io.tmpdir", root)
+    val spark = Bench.session()
+    try {
+      val counter = new Counter(spark.sparkContext)
+      Layouts.inventory.foreach { case (name, build) =>
+        val (j0, s0, t0) = counter.totals()
+        val secs = seconds(build(spark, sfDir))._2
+        val (j1, s1, t1) = counter.totals()
+        println(f"[lt] $name%-32s jobs=${j1 - j0}%-4d stages=${s1 - s0}%-4d " +
+          f"tasks=${t1 - t0}%-5d s=$secs%.2f")
+      }
+    } finally spark.stop()
+    println(s"[lt] built under $root")
+  }
+
+  def main(args: Array[String]): Unit =
+    if (args(0) == "layouts") layouts(args(1)) else queries(args)
+
+  private def queries(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
     val selected = Bench.select(args.drop(2).toSet)

@@ -10,14 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SourceLint, SparkTestSession}
 import graft.model.Tables
-import graft.sources.{Layouts, PartitionedTables, ShingleLayout}
+import graft.sources.{Layouts, PartitionedTables}
 import graft.tools.QueryTime
 
 /** The one parquet read path, [[Ingest.readParquet]]: its footer-read
   * schema must be exactly the schema Spark's inference job returns
-  * (nullability and field metadata included), building a table or
-  * layout DataFrame through it must start no Spark job, and no bare
-  * `.read.parquet(` may creep back into src/main. */
+  * (nullability and field metadata included), building a table or any
+  * layout DataFrame on a warm root must start no Spark job, and no bare
+  * `.read.parquet(` or job-starting table listing may creep back into
+  * src/main. */
 class ReadPathSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.Sf0001
@@ -87,17 +88,25 @@ class ReadPathSpec extends AnyFunSuite {
     assert(Ingest.parquetRowCount(spark, dir) === spark.read.parquet(dir).count())
   }
 
-  test("building fixture tables and a layout on a warm root starts no Spark job") {
-    ShingleLayout.shingles(spark, sf) // warm the layout root
+  test("building fixture tables and every layout on a warm root starts no Spark job") {
+    Layouts.warm(spark, sf) // warm the layout root
+    // drop the bucketed tables' session registrations, so that their
+    // build takes the branch that lists stale registrations and
+    // registers the tables again over the files on disk
+    val catalog = spark.sessionState.catalog
+    val bucketed = catalog.listTables(catalog.getCurrentDatabase, "graft_*_bucketed_*")
+    assert(bucketed.nonEmpty)
+    bucketed.foreach(t => spark.sql(s"DROP TABLE ${t.table}"))
     val counter = new QueryTime.Counter(spark.sparkContext)
     try {
       val (before, _, _) = counter.totals()
       Tables.lineitem(spark, sf)
       Tables.events(spark, sf)
-      ShingleLayout.shingles(spark, sf)
+      Layouts.warm(spark, sf)
       val (after, _, _) = counter.totals()
       assert(after - before === 0)
     } finally counter.close()
+    bucketed.foreach(t => assert(catalog.tableExists(t), s"$t not registered again"))
   }
 
   // -- source lint ---------------------------------------------------
@@ -135,5 +144,25 @@ class ReadPathSpec extends AnyFunSuite {
       "parquet read without a schema starts an inference job — use " +
         "Ingest.readParquet:\n" +
         bare.map { case (f, l, t) => s"  $f:$l  $t" }.mkString("\n"))
+  }
+
+  /** A table listing through the Catalog API: a Dataset, whose collect
+    * starts a Spark job. The session catalog's own listing does not. */
+  private val catalogListing = """(?<!sessionState)\.catalog\s*\.\s*listTables\s*\(""".r
+
+  test("the lint flags Catalog API table listings and passes the session catalog's") {
+    Seq("s.catalog.listTables().collect()", "spark.catalog\n  .listTables(\"db\")")
+      .foreach(s => assert(catalogListing.findFirstIn(SourceLint.code(s)).nonEmpty, s))
+    Seq("s.sessionState.catalog.listTables(db, p)", "sessionCatalog.listTables(db)",
+      "// s.catalog.listTables()")
+      .foreach(s => assert(catalogListing.findFirstIn(SourceLint.code(s)).isEmpty, s))
+  }
+
+  test("no catalog.listTables( in src/main") {
+    val sites = SourceLint.sites(catalogListing)
+    assert(sites.isEmpty,
+      "Catalog.listTables builds a Dataset and collecting it starts a job " +
+        "— list through sessionState.catalog:\n" +
+        sites.map { case (f, l, t) => s"  $f:$l  $t" }.mkString("\n"))
   }
 }

@@ -1,9 +1,12 @@
 package graft.text
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.tools.QueryTime
 
 /** Connected-components correctness against a driver-side union-find
   * reference across graph shapes that stress the star algorithm
@@ -28,21 +31,77 @@ class ComponentsSpec extends AnyFunSuite {
     parent.keys.toSeq.map(k => k -> find(k)).toMap
   }
 
+  private def rowsOf(cc: DataFrame): Map[Long, Long] =
+    cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   private def ccOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponents(edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    rowsOf(Components.connectedComponents(edges.toDF("src", "dst")))
 
   /** Force the distributed star fixpoint (cutoff -1 disables the
     * driver union-find short-circuit) so BOTH paths stay covered. */
   private def ccStarOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Components.connectedComponents(edges.toDF("src", "dst"),
-        driverCutoff = -1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    rowsOf(Components.connectedComponents(edges.toDF("src", "dst"),
+      driverCutoff = -1L))
 
   private def check(edges: Seq[(Long, Long)]): Unit = {
     val expect = unionFind(edges)
     assert(ccOf(edges) === expect)      // driver path (default at test sizes)
     assert(ccStarOf(edges) === expect)  // distributed star fixpoint
+  }
+
+  /** Jobs started by building `cc` and collecting it, read through
+    * QueryTime's drained listener. */
+  private def jobsOf(cc: => DataFrame): Long = {
+    val counter = new QueryTime.Counter(spark.sparkContext)
+    try {
+      val (before, _, _) = counter.totals()
+      cc.collect()
+      val (after, _, _) = counter.totals()
+      after - before
+    } finally counter.close()
+  }
+
+  /** Which path built `cc`: the driver union-find returns a local
+    * relation, the star fixpoint reads the checkpointed edge frontier. */
+  private def tookDriverPath(cc: DataFrame): Boolean =
+    cc.queryExecution.logical.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+
+  /** A seeded random graph of `SeamCutoff + 1` distinct loop-free
+    * edges, each oriented low→high, so every edge survives the input's
+    * self-loop filter and distinct. */
+  private val SeamCutoff = 40
+  private lazy val seamEdges: Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(11)
+    Iterator.continually((rng.nextInt(80).toLong, rng.nextInt(80).toLong))
+      .filter { case (a, b) => a < b }.distinct.take(SeamCutoff + 1).toSeq
+  }
+
+  private def seamCc(edges: Seq[(Long, Long)]): DataFrame =
+    Components.connectedComponents(edges.toDF("src", "dst"),
+      driverCutoff = SeamCutoff.toLong)
+
+  test("driverCutoff seam: cutoff edges take the driver path, cutoff + 1 the star path, both equal the union-find") {
+    val atCutoff = seamEdges.take(SeamCutoff)
+    val small = seamCc(atCutoff)
+    assert(tookDriverPath(small))
+    assert(rowsOf(small) === unionFind(atCutoff))
+    val above = seamCc(seamEdges)
+    assert(!tookDriverPath(above))
+    assert(rowsOf(above) === unionFind(seamEdges))
+  }
+
+  test("the driver path runs 2 jobs: the distinct behind the checkpoint, and the probe") {
+    // a fingerprint aggregate (2 jobs) plus a second collect of the
+    // same edges made it 4
+    val n = jobsOf(seamCc(seamEdges.take(SeamCutoff)))
+    assert(n === 2L, s"driver path ran $n jobs")
+  }
+
+  test("above the seam, the probe adds no job to the star path (27 on this graph)") {
+    // the probe's job replaces the emptiness check, which the
+    // fingerprint's count now answers
+    val n = jobsOf(seamCc(seamEdges))
+    assert(n <= 27L, s"star path ran $n jobs")
   }
 
   test("path graph collapses to one component rooted at the min") {
