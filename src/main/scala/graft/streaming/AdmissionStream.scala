@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.util.Locale
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One incoming document's shingle row after the stream-static join:
   * `dup_of`/`n_e` are present when the shingle also occurs in the
@@ -17,35 +16,73 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 case class AdmissionCand(doc_id: Long, ts: java.sql.Timestamp, n_i: Int,
                          sh: Option[String],
                          dup_of: Option[Long], n_e: Option[Int])
+    extends DocumentRow
 
 /** The admit/reject verdict, shaped exactly like q134's output row. */
 case class AdmissionVerdict(doc_id: Long, status: String,
                             dup_of: Option[Long], jaccard: Option[Double])
 
-/** Per-document verdict fold: all of a document's candidate rows arrive
-  * in the micro-batch that carried the document (stateless ops never
-  * split one input row's derived rows across batches), so the verdict
-  * is computed and emitted immediately; the only STATE is a per-doc
-  * "seen" flag that suppresses replayed documents until the event-time
-  * timer at ts + horizon clears it — state is O(docs in the horizon),
-  * not O(stream length).
+/** Streaming curation admission — q134's incremental-admission pass
+  * with the incoming side streaming (round-5 verdict item #8): each
+  * arriving document is admitted or rejected against the STATIC
+  * existing corpus, carrying its best near-dup match, exactly like the
+  * batch query. The plan is the batch plan with streaming-legal parts
+  * swapped in:
+  *
+  *  - incoming shingles come from a typed flatMap (the window-lead
+  *    shingle plan needs an unbounded window, illegal on streams; the
+  *    per-row flatMap tokenizes each document once, which is the same
+  *    O(tokens) work);
+  *  - the existing corpus's shingle table joins STREAM-STATIC and
+  *    left-outer — stateless, so cost per micro-batch scales with the
+  *    batch, never the corpus (at 100 TB the static side is the
+  *    shingle index, vec_id-bucketed storage like q51);
+  *  - the per-document fold is one [[OncePerDocument]], whose only
+  *    state is the replay-suppression flag with an event-time expiry.
+  *
+  * AdmissionStreamSpec pins batch == stream against q134's own output
+  * on the same corpus split, including replay suppression.
   */
-class AdmissionProcessor(threshold: Double, horizonMs: Long)
-    extends StatefulProcessor[Long, AdmissionCand, AdmissionVerdict] {
+object AdmissionStream {
 
-  @transient private var seen: ValueState[Boolean] = _
+  /** Existing corpus (doc_id, text) → the static shingle side
+    * (sh, dup_of, n_e), matching Dedup.shingleRows' distinct-shingle
+    * semantics. */
+  def existingShingles(existing: DataFrame): DataFrame =
+    graft.text.Dedup.shingleRows(existing, 3)
+      .select(col("sh"), col("doc_id").as("dup_of"),
+        col("n_sh").cast("int").as("n_e"))
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getValueState[Boolean](
-      "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[AdmissionCand],
-      timerValues: TimerValues): Iterator[AdmissionVerdict] = {
-    val rs = rows.toSeq
-    if (Option(seen.get()).exists(identity) || rs.isEmpty) Iterator.empty
-    else {
-      seen.update(true)
-      getHandle.registerTimer(rs.map(_.ts.getTime).max + horizonMs)
+  /** (doc_id, ts, text) stream → admit/reject verdicts against the
+    * static existing corpus. */
+  def admissions(incoming: DataFrame, existing: DataFrame,
+                 threshold: Double = 0.4, watermark: String = "0 seconds",
+                 horizon: String = "1 day"): Dataset[AdmissionVerdict] = {
+    val spark = incoming.sparkSession
+    import spark.implicits._
+    // same tokenization as shingleRows: split(lower(trim(text)), "\s+"),
+    // 3-gram windows, DISTINCT shingles; Locale.ROOT pins lower() to
+    // the locale-free fold Spark's lower uses
+    val inShingles = incoming
+      .select(col("doc_id").cast("long"), col("ts"), col("text").cast("string"))
+      .as[(Long, java.sql.Timestamp, String)]
+      .flatMap { case (id, t, text) =>
+        val toks = Option(text).getOrElse("")
+          .trim.toLowerCase(Locale.ROOT).split("\\s+")
+        val sh =
+          if (toks.length < 3) Array.empty[String]
+          else toks.sliding(3).map(_.mkString(" ")).distinct.toArray
+        if (sh.isEmpty) Iterator.single((id, t, 0, Option.empty[String]))
+        else sh.iterator.map(s => (id, t, sh.length, Some(s)))
+      }
+      .toDF("doc_id", "ts", "n_i", "sh_i")
+      .withWatermark("ts", watermark)
+    val cands = inShingles
+      .join(existingShingles(existing), col("sh_i") === col("sh"), "left_outer")
+      .select(col("doc_id"), col("ts"), col("n_i"), col("sh_i").as("sh"),
+        col("dup_of"), col("n_e"))
+      .as[AdmissionCand]
+    OncePerDocument(cands, horizon) { (key, rs) =>
       val nI = rs.head.n_i
       // per existing doc: DISTINCT shared shingles (replay-proof, see
       // AdmissionCand) + that doc's shingle count
@@ -69,90 +106,12 @@ class AdmissionProcessor(threshold: Double, horizonMs: Long)
         .map { case (d, j) =>
           (d, BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP)
             .toDouble) }
-      val verdict =
+      Iterator.single(
         if (flagged.isEmpty) AdmissionVerdict(key, "admit", None, None)
         else {
           val (d, j) = flagged.maxBy { case (d, j) => (j, -d) }
           AdmissionVerdict(key, "reject", Some(d), Some(j))
-        }
-      Iterator.single(verdict)
+        })
     }
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[AdmissionVerdict] = {
-    seen.clear()
-    Iterator.empty
-  }
-}
-
-/** Streaming curation admission — q134's incremental-admission pass
-  * with the incoming side streaming (round-5 verdict item #8): each
-  * arriving document is admitted or rejected against the STATIC
-  * existing corpus, carrying its best near-dup match, exactly like the
-  * batch query. The plan is the batch plan with streaming-legal parts
-  * swapped in:
-  *
-  *  - incoming shingles come from a typed flatMap (the window-lead
-  *    shingle plan needs an unbounded window, illegal on streams; the
-  *    per-row flatMap tokenizes each document once, which is the same
-  *    O(tokens) work);
-  *  - the existing corpus's shingle table joins STREAM-STATIC and
-  *    left-outer — stateless, so cost per micro-batch scales with the
-  *    batch, never the corpus (at 100 TB the static side is the
-  *    shingle index, vec_id-bucketed storage like q51);
-  *  - the per-document fold is one `transformWithState` whose only
-  *    state is the replay-suppression flag with an event-time expiry.
-  *
-  * AdmissionStreamSpec pins batch == stream against q134's own output
-  * on the same corpus split, including replay suppression.
-  */
-object AdmissionStream {
-
-  /** Existing corpus (doc_id, text) → the static shingle side
-    * (sh, dup_of, n_e), matching Dedup.shingleRows' distinct-shingle
-    * semantics. */
-  def existingShingles(existing: DataFrame): DataFrame =
-    graft.text.Dedup.shingleRows(existing, 3)
-      .select(col("sh"), col("doc_id").as("dup_of"),
-        col("n_sh").cast("int").as("n_e"))
-
-  /** (doc_id, ts, text) stream → admit/reject verdicts against the
-    * static existing corpus. */
-  def admissions(incoming: DataFrame, existing: DataFrame,
-                 threshold: Double = 0.4, watermark: String = "0 seconds",
-                 horizon: String = "1 day"): Dataset[AdmissionVerdict] = {
-    val spark = incoming.sparkSession
-    import spark.implicits._
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(horizon))
-    require(iv.months == 0,
-      s"admission horizon must be day-or-smaller denominated, got '$horizon'")
-    val horizonMs = iv.days * 86400000L + iv.microseconds / 1000L
-    // same tokenization as shingleRows: split(lower(trim(text)), "\s+"),
-    // 3-gram windows, DISTINCT shingles; Locale.ROOT pins lower() to
-    // the locale-free fold Spark's lower uses
-    val inShingles = incoming
-      .select(col("doc_id").cast("long"), col("ts"), col("text").cast("string"))
-      .as[(Long, java.sql.Timestamp, String)]
-      .flatMap { case (id, t, text) =>
-        val toks = Option(text).getOrElse("")
-          .trim.toLowerCase(Locale.ROOT).split("\\s+")
-        val sh =
-          if (toks.length < 3) Array.empty[String]
-          else toks.sliding(3).map(_.mkString(" ")).distinct.toArray
-        if (sh.isEmpty) Iterator.single((id, t, 0, Option.empty[String]))
-        else sh.iterator.map(s => (id, t, sh.length, Some(s)))
-      }
-      .toDF("doc_id", "ts", "n_i", "sh_i")
-      .withWatermark("ts", watermark)
-    inShingles
-      .join(existingShingles(existing), col("sh_i") === col("sh"), "left_outer")
-      .select(col("doc_id"), col("ts"), col("n_i"), col("sh_i").as("sh"),
-        col("dup_of"), col("n_e"))
-      .as[AdmissionCand]
-      .groupByKey(_.doc_id)
-      .transformWithState(new AdmissionProcessor(threshold, horizonMs),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -1,13 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Per-type backtest state: the last folded day, how many days have
-  * been folded, and the last ≤7 observed values (newest last) — the
-  * exact window q145's ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING frame
-  * reads. O(1) state per key (≤7 doubles + two longs). */
-case class BacktestState(lastEpochDay: Long, n: Long, recent: Seq[Double])
+import ClosedDayFold.r4
+
+/** Per-type backtest state: how many days have been folded, and the
+  * last ≤7 observed values (newest last) — the exact window q145's
+  * ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING frame reads. O(1) state
+  * per key (≤7 doubles + a long). */
+case class BacktestState(n: Long, recent: Seq[Double])
 
 /** One scored backtest day: the two frozen horizon models' standing
   * predictions (naive last-value p1, 7-day moving average p2), their
@@ -15,81 +16,34 @@ case class BacktestState(lastEpochDay: Long, n: Long, recent: Seq[Double])
 case class BacktestPoint(event_type: String, ds: java.sql.Date,
     actual: Double, p1: Double, p2: Double, yhat: Double, err: Double)
 
-/** Keyed by event type: fold each arriving closed day through q145's
-  * horizon-ensemble backtest — score days only once a FULL 7-day
-  * moving-average frame exists (the batch side's rn > 7 warm-up
-  * drop), with yhat = (lag-1 + 7-day-mean) / 2 computed from state
-  * BEFORE folding the day in. Replay suppression is the shared
-  * day-ordering contract ([[CusumProcessor]]): a day ≤ the last
-  * folded day folds nothing and emits nothing.
-  */
-class BacktestProcessor
-    extends StatefulProcessor[String, DayV, BacktestPoint] {
-
-  @transient private var st: ValueState[BacktestState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[BacktestState](
-      "backtest", Encoders.product[BacktestState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DayV],
-      timerValues: TimerValues): Iterator[BacktestPoint] = {
-    val prev = Option(st.get())
-      .getOrElse(BacktestState(Long.MinValue, 0L, Nil))
-    val fresh = rows.toSeq
-      .map(r => r.ds.toLocalDate.toEpochDay -> r)
-      .filter(_._1 > prev.lastEpochDay)
-      .groupBy(_._1).map(_._2.head).toSeq
-      .sortBy(_._1)
-    if (fresh.isEmpty) Iterator.empty
-    else {
-      var n = prev.n
-      var recent = prev.recent
-      def r4(x: Double) = BigDecimal(x)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = fresh.flatMap { case (_, r) =>
-        // score against the standing forecast (state BEFORE this day);
-        // only days 8+ have the full 7-row frame the batch keeps
-        val point =
-          if (n >= 7) {
-            val p1 = recent.last
-            val p2 = recent.takeRight(7).sum / 7.0
-            val yhat = (p1 + p2) / 2.0
-            Some(BacktestPoint(key, r.ds, r.v, r4(p1), r4(p2), r4(yhat),
-              r4(r.v - yhat)))
-          } else None
-        recent = (recent :+ r.v).takeRight(7)
-        n += 1
-        point
-      }
-      st.update(BacktestState(fresh.last._1, n, recent))
-      out.iterator
-    }
-  }
-}
-
 /** Streaming horizon-ensemble backtest — the stream twin of q145 and
   * the monitor family's last batch-only member (round-7 verdict #7):
   * CUSUM/Page-Hinkley/rolling-z/mSPRT flag breaks, Holt/Holt-Winters
   * forecast, and this stream scores the frozen two-model ensemble as
   * each day closes, emitting the same per-day error rows q145
-  * aggregates into MSE/MAE. At 100 TB the daily rollup feeding this
-  * is the q02 pivot stream; per-key state is ≤7 doubles regardless of
-  * history length, and a replayed day folds nothing — exactly the
-  * semantics a monitoring sink needs under at-least-once delivery.
-  * BacktestStreamSpec pins the emitted points row-equal to q145's
-  * batch frame, replays suppressed, state crossing batch boundaries
-  * intact.
+  * aggregates into MSE/MAE. One [[ClosedDayFold]] scores days only
+  * once a FULL 7-day moving-average frame exists (the batch side's
+  * rn > 7 warm-up drop), with yhat = (lag-1 + 7-day-mean) / 2
+  * computed from state BEFORE folding the day in. At 100 TB the daily
+  * rollup feeding this is the q02 pivot stream. BacktestStreamSpec
+  * pins the emitted points row-equal to q145's batch frame, replays
+  * suppressed.
   */
 object BacktestStream {
 
   /** (event_type, ds, v) closed-day stream → scored backtest days. */
-  def backtestPoints(daily: DataFrame): Dataset[BacktestPoint] = {
-    val spark = daily.sparkSession
-    import spark.implicits._
-    daily.as[DayV]
-      .groupByKey(_.event_type)
-      .transformWithState(new BacktestProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def backtestPoints(daily: DataFrame): Dataset[BacktestPoint] =
+    ClosedDayFold[DayV, BacktestState, BacktestPoint](daily,
+      BacktestState(0L, Seq.empty)) { (key, st, d) =>
+        // only days 8+ have the full 7-row frame the batch keeps
+        val point =
+          if (st.n >= 7) {
+            val p1 = st.recent.last
+            val p2 = st.recent.takeRight(7).sum / 7.0
+            val yhat = (p1 + p2) / 2.0
+            Some(BacktestPoint(key, d.ds, d.v, r4(p1), r4(p2), r4(yhat),
+              r4(d.v - yhat)))
+          } else None
+        (BacktestState(st.n + 1, (st.recent :+ d.v).takeRight(7)), point)
+    }
 }

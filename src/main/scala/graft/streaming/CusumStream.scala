@@ -1,68 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** One CLOSED day of one event type's series — the ingest unit of the
-  * CUSUM chart (the output row of an upstream watermark-closed daily
-  * window; a day enters the recurrence exactly once). */
+import ClosedDayFold.r4
+
+/** One closed day of one event type's series, standardized — the
+  * ingest unit of the CUSUM chart and the Page–Hinkley test. */
 case class DayZ(event_type: String, ds: java.sql.Date, z: Double)
-
-/** Per-type chart state: the last folded day and the running CUSUM
-  * statistic — two scalars per event type, O(|event types|) total, the
-  * smallest state in the streaming family. */
-case class CusumState(lastEpochDay: Long, s: Double)
+    extends ClosedDay
 
 /** One chart point: the statistic after folding `ds`, alarm when it
   * exceeds the decision interval h. */
 case class CusumPoint(event_type: String, ds: java.sql.Date,
     cusum: Double, alarm: Int)
-
-/** Keyed by event type: fold each arriving closed day through the
-  * clamp recurrence S_t = max(0, S_{t-1} + z_t − k), alarm at S > h —
-  * exactly q201's per-type `aggregate` lambda, one day at a time.
-  * Replay suppression is the day ordering itself: a day ≤ the last
-  * folded day is a re-delivery of an already-folded window (the clamp
-  * recurrence is order-determined, so upstream must close days in
-  * order per type — the watermark contract) and is dropped; within a
-  * batch, days fold in ds order and same-day repeats collapse to the
-  * first (re-deliveries carry identical values).
-  */
-class CusumProcessor(k: Double, h: Double)
-    extends StatefulProcessor[String, DayZ, CusumPoint] {
-
-  @transient private var st: ValueState[CusumState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[CusumState](
-      "cusum", Encoders.product[CusumState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DayZ],
-      timerValues: TimerValues): Iterator[CusumPoint] = {
-    val prev = Option(st.get()).getOrElse(CusumState(Long.MinValue, 0.0))
-    val fresh = rows.toSeq
-      .map(r => r.ds.toLocalDate.toEpochDay -> r)
-      .filter(_._1 > prev.lastEpochDay)
-      .groupBy(_._1).map(_._2.head).toSeq
-      .sortBy(_._1)
-    if (fresh.isEmpty) Iterator.empty
-    else {
-      var s = prev.s
-      val out = fresh.map { case (_, r) =>
-        s = math.max(0.0, s + r.z - k)
-        // 4dp display round, full precision carried in state — the
-        // q201 convention exactly
-        CusumPoint(key, r.ds,
-          BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble,
-          if (s > h) 1 else 0)
-      }
-      st.update(CusumState(fresh.last._1, s))
-      out.iterator
-    }
-  }
-}
 
 /** Streaming CUSUM drift detection — the stream twin of q201
   * ([[graft.queries.AnalyticsQueries.cusumDaily]]) and the most
@@ -73,30 +24,31 @@ class CusumProcessor(k: Double, h: Double)
   * (mu, sd) attach STREAM-STATIC — in production the frozen
   * in-control reference window every control chart standardizes
   * against (recomputed per recalibration, a modeling cadence, not per
-  * batch); the batch==stream pin feeds q201's own full-series moments
-  * so the recurrences are identical — and one transformWithState
-  * folds each day through the clamp recurrence with O(1) state per
-  * event type. CusumStreamSpec pins the full emitted point set (not
-  * just alarms) row-equal to the batch chart on the planted-shift
-  * fixture, with replays across and within batches suppressed.
+  * batch; the batch==stream pin feeds q201's own full-series moments)
+  * — and one [[ClosedDayFold]] folds each day through q201's clamp
+  * recurrence S_t = max(0, S_{t-1} + z_t − k), alarm at S > h, with
+  * one scalar of state per event type. CusumStreamSpec pins the full
+  * emitted point set row-equal to the batch chart, replays suppressed.
   */
 object CusumStream {
 
-  /** (event_type, ds, v) closed-day stream → chart points, given the
-    * static per-type moments (event_type, mu, sd). k/h default to
-    * q201's chart constants. */
-  def chartPoints(daily: DataFrame, moments: DataFrame,
-                  k: Double = 0.5, h: Double = 4.0): Dataset[CusumPoint] = {
-    val spark = daily.sparkSession
-    import spark.implicits._
+  /** (event_type, ds, v) closed days → (event_type, ds, z), standardized
+    * by the static per-type moments (event_type, mu, sd). */
+  def zDays(daily: DataFrame, moments: DataFrame): DataFrame =
     daily
       .join(moments.select(col("event_type"), col("mu"), col("sd")),
         Seq("event_type"))
       .select(col("event_type"), col("ds"),
         ((col("v") - col("mu")) / col("sd")).as("z"))
-      .as[DayZ]
-      .groupByKey(_.event_type)
-      .transformWithState(new CusumProcessor(k, h),
-        TimeMode.None(), OutputMode.Append())
-  }
+
+  /** (event_type, ds, v) closed-day stream → chart points, given the
+    * static per-type moments (event_type, mu, sd). k/h default to
+    * q201's chart constants. */
+  def chartPoints(daily: DataFrame, moments: DataFrame,
+                  k: Double = 0.5, h: Double = 4.0): Dataset[CusumPoint] =
+    ClosedDayFold[DayZ, Double, CusumPoint](zDays(daily, moments), 0.0) {
+      (key, before, d) =>
+        val s = math.max(0.0, before + d.z - k)
+        (s, Some(CusumPoint(key, d.ds, r4(s), if (s > h) 1 else 0)))
+    }
 }

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Per-type forecaster state: the last folded day and the coupled
-  * (level, trend) pair — three scalars per event type. `n` = 0 marks
-  * the pre-init state (the first day seeds l = v, b = 0). */
-case class HoltState(lastEpochDay: Long, n: Long, l: Double, b: Double)
+import ClosedDayFold.r4
+
+/** Per-type forecaster state: the coupled (level, trend) pair and the
+  * day count. `n` = 0 marks the pre-init state (the first day seeds
+  * l = v, b = 0). */
+case class HoltState(n: Long, l: Double, b: Double)
 
 /** One forecast point: the one-step-ahead forecast that was STANDING
   * when `ds` arrived, the observed value, the error, and the updated
@@ -14,74 +15,34 @@ case class HoltState(lastEpochDay: Long, n: Long, l: Double, b: Double)
 case class HoltPoint(event_type: String, ds: java.sql.Date, v: Double,
     level: Double, trend: Double, forecast: Double, err: Double)
 
-/** Keyed by event type: fold each arriving closed day through q229's
-  * Holt recurrence (α=0.5, β=0.3 defaults) — l' = αv + (1−α)(l+b),
-  * b' = β(l'−l) + (1−β)b, forecast = the PRE-update l+b — one day at
-  * a time. Replay suppression is the shared day-ordering contract
-  * ([[CusumProcessor]]).
-  */
-class HoltProcessor(alpha: Double, beta: Double)
-    extends StatefulProcessor[String, DayV, HoltPoint] {
-
-  @transient private var st: ValueState[HoltState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[HoltState](
-      "holt", Encoders.product[HoltState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DayV],
-      timerValues: TimerValues): Iterator[HoltPoint] = {
-    val prev = Option(st.get()).getOrElse(HoltState(Long.MinValue, 0L, 0, 0))
-    val fresh = rows.toSeq
-      .map(r => r.ds.toLocalDate.toEpochDay -> r)
-      .filter(_._1 > prev.lastEpochDay)
-      .groupBy(_._1).map(_._2.head).toSeq
-      .sortBy(_._1)
-    if (fresh.isEmpty) Iterator.empty
-    else {
-      var (n, l, b) = (prev.n, prev.l, prev.b)
-      def r4(x: Double) = BigDecimal(x)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = fresh.map { case (_, r) =>
-        if (n == 0L) {
-          n = 1L; l = r.v; b = 0.0
-          HoltPoint(key, r.ds, r.v, r4(l), 0.0, r4(r.v), 0.0)
-        } else {
-          val f = l + b
-          val l2 = alpha * r.v + (1 - alpha) * f
-          b = beta * (l2 - l) + (1 - beta) * b
-          l = l2
-          n += 1
-          HoltPoint(key, r.ds, r.v, r4(l), r4(b), r4(f), r4(r.v - f))
-        }
-      }
-      st.update(HoltState(fresh.last._1, n, l, b))
-      out.iterator
-    }
-  }
-}
-
 /** Streaming Holt forecaster — the stream twin of q229 and the
   * monitor family's FORECASTING member (CUSUM/PH/rolling-z say when
   * the series broke; Holt says what tomorrow should look like, and
   * its standing one-step error is the break signal the others
-  * threshold). Three scalars of state per type; each closed day is
-  * scored against the STANDING forecast before updating it — exactly
-  * q229's f_t = l_{t−1} + b_{t−1} convention. HoltStreamSpec pins the
-  * emitted points row-equal to the batch smoother, replays
-  * suppressed, state crossing batch boundaries intact.
+  * threshold). One [[ClosedDayFold]] folds each day through q229's
+  * Holt recurrence — l' = αv + (1−α)(l+b), b' = β(l'−l) + (1−β)b,
+  * each closed day scored against the STANDING forecast l+b before
+  * updating it, exactly q229's f_t = l_{t−1} + b_{t−1} convention.
+  * HoltStreamSpec pins the emitted points row-equal to the batch
+  * smoother, replays suppressed.
   */
 object HoltStream {
 
   /** (event_type, ds, v) closed-day stream → forecast points; α/β
     * default to q229's constants. */
   def forecastPoints(daily: DataFrame, alpha: Double = 0.5,
-                     beta: Double = 0.3): Dataset[HoltPoint] = {
-    val spark = daily.sparkSession
-    import spark.implicits._
-    daily.as[DayV]
-      .groupByKey(_.event_type)
-      .transformWithState(new HoltProcessor(alpha, beta),
-        TimeMode.None(), OutputMode.Append())
-  }
+                     beta: Double = 0.3): Dataset[HoltPoint] =
+    ClosedDayFold[DayV, HoltState, HoltPoint](daily, HoltState(0L, 0, 0)) {
+      (key, st, d) =>
+        if (st.n == 0L)
+          (HoltState(1L, d.v, 0.0),
+            Some(HoltPoint(key, d.ds, d.v, r4(d.v), 0.0, r4(d.v), 0.0)))
+        else {
+          val f = st.l + st.b
+          val l = alpha * d.v + (1 - alpha) * f
+          val b = beta * (l - st.l) + (1 - beta) * st.b
+          (HoltState(st.n + 1, l, b),
+            Some(HoltPoint(key, d.ds, d.v, r4(l), r4(b), r4(f), r4(d.v - f))))
+        }
+    }
 }

@@ -1,14 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Per-type seasonal-forecaster state: last folded day, the day count
-  * (the slot counter — q261 slots by row order, (n−1) mod 7), the
-  * coupled (level, trend) pair, and the seven additive seasonal
-  * states. Nine scalars + a counter per event type. */
-case class HwState(lastEpochDay: Long, n: Long, l: Double, b: Double,
-    sn: Seq[Double])
+import ClosedDayFold.r4
+
+/** Per-type seasonal-forecaster state: the day count (the slot
+  * counter — q261 slots by row order, (n−1) mod 7), the coupled
+  * (level, trend) pair, and the seven additive seasonal states. Nine
+  * scalars + a counter per event type. */
+case class HwState(n: Long, l: Double, b: Double, sn: Seq[Double])
 
 /** One seasonal forecast point: the standing forecast l+b+s[slot],
   * the seasonal state USED by it (pre-update), and the refreshed
@@ -17,67 +17,17 @@ case class HwPoint(event_type: String, ds: java.sql.Date, v: Double,
     level: Double, trend: Double, seasonal: Double, forecast: Double,
     err: Double)
 
-/** Keyed by event type: fold each arriving closed day through q261's
-  * additive Holt–Winters recurrence (α=0.5, β=0.3, γ=0.2, m=7
-  * defaults) — deseasonalized level update, residual-driven per-slot
-  * seasonal refresh, standing forecast scored BEFORE any update.
-  * Replay suppression is the shared day-ordering contract
-  * ([[CusumProcessor]]).
-  */
-class HoltWintersProcessor(alpha: Double, beta: Double, gamma: Double,
-    period: Int) extends StatefulProcessor[String, DayV, HwPoint] {
-
-  @transient private var st: ValueState[HwState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[HwState](
-      "hw", Encoders.product[HwState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DayV],
-      timerValues: TimerValues): Iterator[HwPoint] = {
-    val prev = Option(st.get())
-      .getOrElse(HwState(Long.MinValue, 0L, 0, 0, Seq.fill(period)(0.0)))
-    val fresh = rows.toSeq
-      .map(r => r.ds.toLocalDate.toEpochDay -> r)
-      .filter(_._1 > prev.lastEpochDay)
-      .groupBy(_._1).map(_._2.head).toSeq
-      .sortBy(_._1)
-    if (fresh.isEmpty) Iterator.empty
-    else {
-      var (n, l, b) = (prev.n, prev.l, prev.b)
-      val sn = prev.sn.toArray
-      def r4(x: Double) = BigDecimal(x)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val out = fresh.map { case (_, r) =>
-        if (n == 0L) {
-          n = 1L; l = r.v; b = 0.0
-          HwPoint(key, r.ds, r.v, r4(l), 0.0, 0.0, r4(r.v), 0.0)
-        } else {
-          val slot = (n % period).toInt
-          val si = sn(slot)
-          val f = l + b + si
-          val l2 = alpha * (r.v - si) + (1 - alpha) * (l + b)
-          b = beta * (l2 - l) + (1 - beta) * b
-          sn(slot) = gamma * (r.v - l2) + (1 - gamma) * si
-          l = l2
-          n += 1
-          HwPoint(key, r.ds, r.v, r4(l), r4(b), r4(si), r4(f), r4(r.v - f))
-        }
-      }
-      st.update(HwState(fresh.last._1, n, l, b, sn.toSeq))
-      out.iterator
-    }
-  }
-}
-
 /** Streaming Holt–Winters forecaster — the stream twin of q261 and
   * the monitor family's SEASONAL member: where HoltStream's error
   * spikes every weekend on weekly-patterned traffic (trend can't
   * express the cycle), this one's standing forecast carries the
   * seven seasonal states and only real anomalies surface in `err`.
-  * HoltWintersStreamSpec pins emitted points row-equal to the q261
-  * batch smoother on a trended weekly pattern, replays suppressed,
-  * the seasonal array crossing batch boundaries intact.
+  * One [[ClosedDayFold]] folds each day through q261's additive
+  * recurrence (α=0.5, β=0.3, γ=0.2, m=7 defaults) — deseasonalized
+  * level update, residual-driven per-slot seasonal refresh, standing
+  * forecast scored BEFORE any update. HoltWintersStreamSpec pins the
+  * emitted points row-equal to the q261 batch smoother, replays
+  * suppressed.
   */
 object HoltWintersStream {
 
@@ -85,12 +35,22 @@ object HoltWintersStream {
     * points; parameters default to q261's constants. */
   def forecastPoints(daily: DataFrame, alpha: Double = 0.5,
       beta: Double = 0.3, gamma: Double = 0.2,
-      period: Int = 7): Dataset[HwPoint] = {
-    val spark = daily.sparkSession
-    import spark.implicits._
-    daily.as[DayV]
-      .groupByKey(_.event_type)
-      .transformWithState(new HoltWintersProcessor(alpha, beta, gamma,
-        period), TimeMode.None(), OutputMode.Append())
-  }
+      period: Int = 7): Dataset[HwPoint] =
+    ClosedDayFold[DayV, HwState, HwPoint](daily,
+      HwState(0L, 0, 0, Seq.fill(period)(0.0))) { (key, st, d) =>
+        if (st.n == 0L)
+          (HwState(1L, d.v, 0.0, st.sn),
+            Some(HwPoint(key, d.ds, d.v, r4(d.v), 0.0, 0.0, r4(d.v), 0.0)))
+        else {
+          val slot = (st.n % period).toInt
+          val si = st.sn(slot)
+          val f = st.l + st.b + si
+          val l = alpha * (d.v - si) + (1 - alpha) * (st.l + st.b)
+          val b = beta * (l - st.l) + (1 - beta) * st.b
+          val sn = st.sn.updated(slot, gamma * (d.v - l) + (1 - gamma) * si)
+          (HwState(st.n + 1, l, b, sn),
+            Some(HwPoint(key, d.ds, d.v, r4(l), r4(b), r4(si), r4(f),
+              r4(d.v - f))))
+        }
+    }
 }

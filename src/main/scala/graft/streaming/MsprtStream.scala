@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
+
+import ClosedDayFold.r4
 
 /** One CLOSED day of one experiment's paired arm traffic — the ingest
   * unit of the sequential test (the output row of an upstream
@@ -10,13 +10,11 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * cumulative state exactly once). */
 case class DayArms(event_type: String, ds: java.sql.Date,
     na: Long, sa1: Double, sa2: Double,
-    nb: Long, sb1: Double, sb2: Double)
+    nb: Long, sb1: Double, sb2: Double) extends ClosedDay
 
-/** Per-experiment monitor state: the last folded day, both arms'
-  * cumulative (n, Σv, Σv²), and the running always-valid p — nine
-  * scalars per event type. */
-case class MsprtState(lastEpochDay: Long,
-    cna: Long, csa1: Double, csa2: Double,
+/** Per-experiment monitor state: both arms' cumulative (n, Σv, Σv²)
+  * and the running always-valid p — seven scalars per event type. */
+case class MsprtState(cna: Long, csa1: Double, csa2: Double,
     cnb: Long, csb1: Double, csb2: Double, p: Double)
 
 /** One monitor point: cumulative Δ, log mixture-LR, always-valid p,
@@ -25,85 +23,43 @@ case class MsprtPoint(event_type: String, ds: java.sql.Date,
     n_a: Long, n_b: Long, delta: Double, log_lambda: Double,
     p: Double, reject: Int)
 
-/** Keyed by event type: fold each arriving closed day's paired arm
-  * sums into the cumulative moments and re-evaluate q240's log
-  * mixture-LR; the always-valid p is the running min, carried in
-  * state. Replay suppression is the shared day-ordering contract
-  * ([[CusumProcessor]]): a day ≤ the last folded day drops; within a
-  * batch, days fold in ds order, same-day repeats collapse to the
-  * first. Days where either arm's cumulative n < 2 update state but
-  * emit nothing (q240's WHERE guard).
-  */
-class MsprtProcessor(tau2: Double, alpha: Double)
-    extends StatefulProcessor[String, DayArms, MsprtPoint] {
-
-  @transient private var st: ValueState[MsprtState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[MsprtState](
-      "msprt", Encoders.product[MsprtState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DayArms],
-      timerValues: TimerValues): Iterator[MsprtPoint] = {
-    val prev = Option(st.get())
-      .getOrElse(MsprtState(Long.MinValue, 0L, 0, 0, 0L, 0, 0, 1.0))
-    val fresh = rows.toSeq
-      .map(r => r.ds.toLocalDate.toEpochDay -> r)
-      .filter(_._1 > prev.lastEpochDay)
-      .groupBy(_._1).map(_._2.head).toSeq
-      .sortBy(_._1)
-    if (fresh.isEmpty) Iterator.empty
-    else {
-      var s = prev
-      val out = scala.collection.mutable.ArrayBuffer.empty[MsprtPoint]
-      fresh.foreach { case (epoch, r) =>
-        s = MsprtState(epoch,
-          s.cna + r.na, s.csa1 + r.sa1, s.csa2 + r.sa2,
-          s.cnb + r.nb, s.csb1 + r.sb1, s.csb2 + r.sb2, s.p)
-        if (s.cna >= 2 && s.cnb >= 2) {
-          val delta = s.csa1 / s.cna - s.csb1 / s.cnb
-          val v = ((s.csa2 - s.csa1 * s.csa1 / s.cna) / (s.cna - 1)) / s.cna +
-            ((s.csb2 - s.csb1 * s.csb1 / s.cnb) / (s.cnb - 1)) / s.cnb
-          val ll = 0.5 * math.log(v / (v + tau2)) +
-            delta * delta * tau2 / (2 * v * (v + tau2))
-          val pt = if (ll > 700) 0.0 else math.min(1.0, math.exp(-ll))
-          s = s.copy(p = math.min(s.p, pt))
-          def r4(x: Double) = BigDecimal(x)
-            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          def r6(x: Double) = BigDecimal(x)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          out += MsprtPoint(key, r.ds, s.cna, s.cnb, r4(delta), r4(ll),
-            r6(s.p), if (s.p < alpha) 1 else 0)
-        }
-      }
-      st.update(s)
-      out.iterator
-    }
-  }
-}
-
 /** Streaming mSPRT — the stream twin of q240
   * ([[graft.queries.ExperimentQueries.msprt]]) and the operator whose
   * POINT is streaming: always-valid inference exists so the monitor
   * can peek continuously without alpha-spending; a batch mSPRT is a
   * replay of what this emits live. Input is the closed paired-arm
   * daily row (the upstream watermark-closed window joined across
-  * arms); one transformWithState holds nine scalars per experiment.
-  * MsprtStreamSpec pins the emitted point set row-equal to the q240
-  * batch on the planted-effect frame, replays suppressed, and the
-  * carried running-min p surviving across batch boundaries.
+  * arms); one [[ClosedDayFold]] adds each day's paired arm sums into
+  * the cumulative moments and re-evaluates q240's log mixture-LR, the
+  * always-valid p being the running min carried in state. Days where
+  * either arm's cumulative n < 2 update state but emit nothing (q240's
+  * WHERE guard). MsprtStreamSpec pins the emitted points row-equal to
+  * the q240 batch, replays suppressed.
   */
 object MsprtStream {
 
   /** (event_type, ds, na, sa1, sa2, nb, sb1, sb2) closed-day stream →
     * monitor points. τ²/α default to q240's constants. */
   def monitorPoints(daily: DataFrame, tau2: Double = 1.0,
-                    alpha: Double = 0.05): Dataset[MsprtPoint] = {
-    val spark = daily.sparkSession
-    import spark.implicits._
-    daily.as[DayArms]
-      .groupByKey(_.event_type)
-      .transformWithState(new MsprtProcessor(tau2, alpha),
-        TimeMode.None(), OutputMode.Append())
-  }
+                    alpha: Double = 0.05): Dataset[MsprtPoint] =
+    ClosedDayFold[DayArms, MsprtState, MsprtPoint](daily,
+      MsprtState(0L, 0, 0, 0L, 0, 0, 1.0)) { (key, before, r) =>
+        val s = MsprtState(
+          before.cna + r.na, before.csa1 + r.sa1, before.csa2 + r.sa2,
+          before.cnb + r.nb, before.csb1 + r.sb1, before.csb2 + r.sb2,
+          before.p)
+        if (s.cna < 2 || s.cnb < 2) (s, None)
+        else {
+          val delta = s.csa1 / s.cna - s.csb1 / s.cnb
+          val v = ((s.csa2 - s.csa1 * s.csa1 / s.cna) / (s.cna - 1)) / s.cna +
+            ((s.csb2 - s.csb1 * s.csb1 / s.cnb) / (s.cnb - 1)) / s.cnb
+          val ll = 0.5 * math.log(v / (v + tau2)) +
+            delta * delta * tau2 / (2 * v * (v + tau2))
+          val pt = if (ll > 700) 0.0 else math.min(1.0, math.exp(-ll))
+          val p = math.min(s.p, pt)
+          (s.copy(p = p), Some(MsprtPoint(key, r.ds, s.cna, s.cnb, r4(delta),
+            r4(ll), BigDecimal(p).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+              .toDouble, if (p < alpha) 1 else 0)))
+        }
+    }
 }

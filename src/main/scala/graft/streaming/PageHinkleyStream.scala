@@ -1,69 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Per-type Page–Hinkley state: the last folded day plus the four
-  * coupled scalars of q230's recurrence — day count, Σz (for the
-  * RUNNING mean PH self-calibrates against), the deviation accumulator
-  * m, and its running minimum. O(|event types|) total, same footprint
-  * class as [[CusumState]]. */
-case class PhState(lastEpochDay: Long, n: Long, s: Double, m: Double,
-    mm: Double)
+import ClosedDayFold.r4
+
+/** Per-type Page–Hinkley state: the four coupled scalars of q230's
+  * recurrence — day count, Σz (for the RUNNING mean PH self-calibrates
+  * against), the deviation accumulator m, and its running minimum.
+  * O(|event types|) total, the CUSUM chart's footprint class. */
+case class PhState(n: Long, s: Double, m: Double, mm: Double)
 
 /** One test point: the accumulator and gap after folding `ds`, alarm
   * when m − min(m) exceeds the threshold λ. */
 case class PhPoint(event_type: String, ds: java.sql.Date, m: Double,
     ph: Double, alarm: Int)
-
-/** Keyed by event type: fold each arriving closed day through q230's
-  * recurrence — m_t = m_{t−1} + (z_t − mean(z_1..z_t) − δ),
-  * M_t = min(m_1..m_t), alarm at m − M > λ — one day at a time. The
-  * running mean is why the state carries (n, Σz): PH needs no frozen
-  * target mean, only the standardization moments. Replay suppression
-  * is the day-ordering contract shared with [[CusumProcessor]]: a day
-  * ≤ the last folded day is a re-delivered closed window and drops;
-  * within a batch days fold in ds order, same-day repeats collapse to
-  * the first.
-  */
-class PageHinkleyProcessor(delta: Double, lambda: Double)
-    extends StatefulProcessor[String, DayZ, PhPoint] {
-
-  @transient private var st: ValueState[PhState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[PhState](
-      "ph", Encoders.product[PhState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DayZ],
-      timerValues: TimerValues): Iterator[PhPoint] = {
-    val prev = Option(st.get())
-      .getOrElse(PhState(Long.MinValue, 0L, 0.0, 0.0, 0.0))
-    val fresh = rows.toSeq
-      .map(r => r.ds.toLocalDate.toEpochDay -> r)
-      .filter(_._1 > prev.lastEpochDay)
-      .groupBy(_._1).map(_._2.head).toSeq
-      .sortBy(_._1)
-    if (fresh.isEmpty) Iterator.empty
-    else {
-      var (n, s, m, mm) = (prev.n, prev.s, prev.m, prev.mm)
-      val out = fresh.map { case (_, r) =>
-        n += 1
-        s += r.z
-        m += r.z - s / n - delta
-        mm = if (n == 1) m else math.min(mm, m)
-        // 4dp display round, full precision carried in state — the
-        // q201/q230 convention
-        def r4(x: Double) = BigDecimal(x)
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-        PhPoint(key, r.ds, r4(m), r4(m - mm), if (m - mm > lambda) 1 else 0)
-      }
-      st.update(PhState(fresh.last._1, n, s, m, mm))
-      out.iterator
-    }
-  }
-}
 
 /** Streaming Page–Hinkley drift detection — the stream twin of q230
   * ([[graft.queries.SeriesQueries.pageHinkley]]), CusumStream's
@@ -73,9 +23,11 @@ class PageHinkleyProcessor(delta: Double, lambda: Double)
   * standardization moments (the same frozen in-control reference
   * window argument as [[CusumStream]]; the batch==stream pin feeds
   * q230's own full-series moments so the recurrences are identical).
-  * One transformWithState, four scalars of state per event type.
-  * PageHinkleyStreamSpec pins the full emitted point set row-equal to
-  * the batch test on the planted-shift fixture, replays suppressed.
+  * One [[ClosedDayFold]] folds each day through q230's recurrence —
+  * m_t = m_{t−1} + (z_t − mean(z_1..z_t) − δ), M_t = min(m_1..m_t),
+  * alarm at m − M > λ; the running mean is why the state carries
+  * (n, Σz). PageHinkleyStreamSpec pins the emitted points row-equal
+  * to the batch test, replays suppressed.
   */
 object PageHinkleyStream {
 
@@ -84,17 +36,14 @@ object PageHinkleyStream {
     * q230's constants. */
   def testPoints(daily: DataFrame, moments: DataFrame,
                  delta: Double = 0.05, lambda: Double = 3.0)
-      : Dataset[PhPoint] = {
-    val spark = daily.sparkSession
-    import spark.implicits._
-    daily
-      .join(moments.select(col("event_type"), col("mu"), col("sd")),
-        Seq("event_type"))
-      .select(col("event_type"), col("ds"),
-        ((col("v") - col("mu")) / col("sd")).as("z"))
-      .as[DayZ]
-      .groupByKey(_.event_type)
-      .transformWithState(new PageHinkleyProcessor(delta, lambda),
-        TimeMode.None(), OutputMode.Append())
-  }
+      : Dataset[PhPoint] =
+    ClosedDayFold[DayZ, PhState, PhPoint](CusumStream.zDays(daily, moments),
+      PhState(0L, 0, 0, 0)) { (key, st, d) =>
+        val n = st.n + 1
+        val s = st.s + d.z
+        val m = st.m + (d.z - s / n - delta)
+        val mm = if (n == 1) m else math.min(st.mm, m)
+        (PhState(n, s, m, mm), Some(PhPoint(key, d.ds, r4(m), r4(m - mm),
+          if (m - mm > lambda) 1 else 0)))
+    }
 }

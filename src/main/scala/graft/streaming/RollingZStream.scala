@@ -1,19 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** One CLOSED day of one event type's daily sum — the rolling screen's
-  * ingest unit (shared shape with [[DayZ]], but the raw 2dp value:
-  * the trailing window IS the standardization, no static moments). */
+import ClosedDayFold.r4
+
+/** One CLOSED day of one event type's daily sum — the ingest unit of
+  * the rolling screen and the forecasters (shared shape with [[DayZ]],
+  * but the raw 2dp value: no static moments). */
 case class DayV(event_type: String, ds: java.sql.Date, v: Double)
-
-/** Per-type screen state: the last folded day plus the trailing ≤7
-  * closed daily values, oldest first — the only streaming drift
-  * operator here whose state is a (bounded) window rather than
-  * scalars, and the bound is the window length by construction. */
-case class RollState(lastEpochDay: Long, window: Seq[Double])
+    extends ClosedDay
 
 /** One screened day: trailing mean/sd over the ≤7 prior days, the
   * z-score when scoreable (≥3 trailing days, sd > 0), the anomaly
@@ -21,77 +16,36 @@ case class RollState(lastEpochDay: Long, window: Seq[Double])
 case class RollPoint(event_type: String, ds: java.sql.Date, v: Double,
     n_win: Long, z: Option[Double], anomaly: Int)
 
-/** Keyed by event type: score each arriving closed day against the
-  * trailing window CARRIED IN STATE, then push it in (self-exclusion
-  * is automatic — a day is scored before it enters its own window,
-  * exactly q231's 7-preceding-to-1-preceding frame). Replay
-  * suppression is the shared day-ordering contract
-  * ([[CusumProcessor]]). Mean/sd use the same two-pass sample
-  * formulas Spark's window aggregates produce on ≤7 values.
-  */
-class RollingZProcessor(windowLen: Int, minN: Int, fence: Double)
-    extends StatefulProcessor[String, DayV, RollPoint] {
-
-  @transient private var st: ValueState[RollState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[RollState](
-      "roll", Encoders.product[RollState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DayV],
-      timerValues: TimerValues): Iterator[RollPoint] = {
-    val prev = Option(st.get()).getOrElse(RollState(Long.MinValue, Nil))
-    val fresh = rows.toSeq
-      .map(r => r.ds.toLocalDate.toEpochDay -> r)
-      .filter(_._1 > prev.lastEpochDay)
-      .groupBy(_._1).map(_._2.head).toSeq
-      .sortBy(_._1)
-    if (fresh.isEmpty) Iterator.empty
-    else {
-      var win = prev.window
-      val out = fresh.map { case (_, r) =>
-        val n = win.length
-        val z: Option[Double] =
-          if (n >= minN) {
-            val mean = win.sum / n
-            val sd = math.sqrt(
-              win.map(x => (x - mean) * (x - mean)).sum / (n - 1))
-            if (sd > 0)
-              Some(BigDecimal((r.v - mean) / sd)
-                .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-            else None
-          } else None
-        val p = RollPoint(key, r.ds, r.v, n.toLong, z,
-          if (z.exists(x => math.abs(x) > fence)) 1 else 0)
-        win = (win :+ r.v).takeRight(windowLen)
-        p
-      }
-      st.update(RollState(fresh.last._1, win))
-      out.iterator
-    }
-  }
-}
-
 /** Streaming rolling z-score — the stream twin of q231 and the third
   * member of the drift-stream family (CUSUM: fixed target; PH:
   * running mean; rolling z: trailing regime), the one whose state is
-  * a bounded window (≤7 doubles per type) instead of scalars. Closed
-  * daily sums arrive, each day is scored against the carried window
-  * and then enters it. RollingZStreamSpec pins the emitted points
-  * row-equal to q231's batch screen on a planted regime break,
-  * replays suppressed.
+  * a bounded window — the trailing ≤7 closed daily values, oldest
+  * first — instead of scalars. One [[ClosedDayFold]] scores each
+  * arriving day against the window CARRIED IN STATE, then pushes it
+  * in (self-exclusion is automatic — a day is scored before it enters
+  * its own window, exactly q231's 7-preceding-to-1-preceding frame).
+  * Mean/sd use the two-pass sample formulas Spark's window aggregates
+  * produce. RollingZStreamSpec pins the emitted points row-equal to
+  * q231's batch screen, replays suppressed.
   */
 object RollingZStream {
 
   /** (event_type, ds, v) closed-day stream → screened points; the
     * defaults are q231's constants. */
   def screenPoints(daily: DataFrame, windowLen: Int = 7, minN: Int = 3,
-                   fence: Double = 2.0): Dataset[RollPoint] = {
-    val spark = daily.sparkSession
-    import spark.implicits._
-    daily.as[DayV]
-      .groupByKey(_.event_type)
-      .transformWithState(new RollingZProcessor(windowLen, minN, fence),
-        TimeMode.None(), OutputMode.Append())
-  }
+                   fence: Double = 2.0): Dataset[RollPoint] =
+    ClosedDayFold[DayV, Seq[Double], RollPoint](daily, Seq.empty) {
+      (key, win, d) =>
+        val n = win.length
+        val z: Option[Double] =
+          if (n >= minN) {
+            val mean = win.sum / n
+            val sd = math.sqrt(
+              win.map(x => (x - mean) * (x - mean)).sum / (n - 1))
+            if (sd > 0) Some(r4((d.v - mean) / sd)) else None
+          } else None
+        ((win :+ d.v).takeRight(windowLen),
+          Some(RollPoint(key, d.ds, d.v, n.toLong, z,
+            if (z.exists(x => math.abs(x) > fence)) 1 else 0)))
+    }
 }

@@ -2,69 +2,18 @@ package graft.streaming
 
 import java.util.Locale
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** One incoming document's duplicated gram position after the
   * stream-static join: `pos` is a token index whose length-n gram also
   * exists in the static corpus gram index. */
 case class SpanCand(doc_id: Long, ts: java.sql.Timestamp, pos: Int)
+    extends DocumentRow
 
 /** One maximal duplicated span — shaped exactly like q154's output
   * row. */
 case class SpanRow(doc_id: Long, span_start: Long, span_len: Long)
-
-/** Per-document span fold: all of a document's candidate rows arrive in
-  * the micro-batch that carried the document (stateless ops never split
-  * one input row's derived rows across batches), so the interval-union
-  * sweep — the in-processor form of Dedup.sweepSpans' cumulative-max
-  * pass: positions sorted, each widened to [pos, pos+n−1], islands
-  * split where pos jumps past the running end + 1 — runs and emits
-  * immediately. The only STATE is the per-doc replay-suppression flag
-  * with an event-time expiry (the [[AdmissionProcessor]] contract):
-  * state is O(docs in the horizon), never O(stream length).
-  */
-class SubstrAdmissionProcessor(n: Int, horizonMs: Long)
-    extends StatefulProcessor[Long, SpanCand, SpanRow] {
-
-  @transient private var seen: ValueState[Boolean] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getValueState[Boolean](
-      "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[SpanCand],
-      timerValues: TimerValues): Iterator[SpanRow] = {
-    val rs = rows.toSeq
-    if (Option(seen.get()).exists(identity) || rs.isEmpty) Iterator.empty
-    else {
-      seen.update(true)
-      getHandle.registerTimer(rs.map(_.ts.getTime).max + horizonMs)
-      // distinct positions: a doc replayed twice INSIDE one micro-batch
-      // doubles its candidate rows; the set collapses them
-      val ps = rs.map(_.pos).distinct.sorted
-      val out = scala.collection.mutable.ArrayBuffer.empty[SpanRow]
-      var start = ps.head
-      var end = ps.head + n - 1
-      ps.tail.foreach { p =>
-        if (p > end + 1) {
-          out += SpanRow(key, start.toLong, (end - start + 1).toLong)
-          start = p
-        }
-        end = math.max(end, p + n - 1)
-      }
-      out += SpanRow(key, start.toLong, (end - start + 1).toLong)
-      out.iterator
-    }
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[SpanRow] = {
-    seen.clear()
-    Iterator.empty
-  }
-}
 
 /** Streaming ExactSubstr admission — q154's per-ingest-wave span
   * detection with the incoming side streaming (round-5 verdict #3):
@@ -82,8 +31,11 @@ class SubstrAdmissionProcessor(n: Int, horizonMs: Long)
   *    100 TB the static side is the write-once deduplicated gram table,
   *    the asymmetric-admission criterion of Dedup.duplicatedSpansAgainst
   *    — a gram need only EXIST in the corpus);
-  *  - the per-document interval sweep is one `transformWithState` whose
-  *    only state is the replay-suppression flag with event-time expiry.
+  *  - the per-document interval sweep — the in-processor form of
+  *    Dedup.sweepSpans' cumulative-max pass: positions sorted, each
+  *    widened to [pos, pos+n−1], islands split where pos jumps past the
+  *    running end + 1 — is one [[OncePerDocument]], whose only state is
+  *    the replay-suppression flag with event-time expiry.
   *
   * SubstrAdmissionStreamSpec pins batch == stream against q154's own
   * output on the same corpus split, including replay suppression.
@@ -103,11 +55,6 @@ object SubstrAdmissionStream {
                       horizon: String = "1 day"): Dataset[SpanRow] = {
     val spark = incoming.sparkSession
     import spark.implicits._
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(horizon))
-    require(iv.months == 0,
-      s"admission horizon must be day-or-smaller denominated, got '$horizon'")
-    val horizonMs = iv.days * 86400000L + iv.microseconds / 1000L
     // same tokenization as positionalShingles: split(lower(trim(text)),
     // "\s+"), full n-token windows only, positions kept (NOT distinct —
     // the sweep needs every duplicated position)
@@ -123,12 +70,26 @@ object SubstrAdmissionStream {
       }
       .toDF("doc_id", "ts", "pos", "sh")
       .withWatermark("ts", watermark)
-    grams
+    val cands = grams
       .join(corpusGramIndex(existing, n), Seq("sh")) // stream-static semi
       .select(col("doc_id"), col("ts"), col("pos"))
       .as[SpanCand]
-      .groupByKey(_.doc_id)
-      .transformWithState(new SubstrAdmissionProcessor(n, horizonMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    OncePerDocument(cands, horizon) { (key, rs) =>
+      // distinct positions: a doc replayed twice INSIDE one micro-batch
+      // doubles its candidate rows; the set collapses them
+      val ps = rs.map(_.pos).distinct.sorted
+      val out = scala.collection.mutable.ArrayBuffer.empty[SpanRow]
+      var start = ps.head
+      var end = ps.head + n - 1
+      ps.tail.foreach { p =>
+        if (p > end + 1) {
+          out += SpanRow(key, start.toLong, (end - start + 1).toLong)
+          start = p
+        }
+        end = math.max(end, p + n - 1)
+      }
+      out += SpanRow(key, start.toLong, (end - start + 1).toLong)
+      out.iterator
+    }
   }
 }

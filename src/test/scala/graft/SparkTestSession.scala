@@ -15,4 +15,20 @@ object SparkTestSession {
   }
 
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the shared session's state store set to RocksDB
+    * (the transformWithState operator requires it), then restores the
+    * previous provider (or unsets it). */
+  def withRocksDbStateStore[T](body: => T): T = {
+    val conf = spark.conf
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val saved = conf.getOption(key)
+    conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally saved match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.unset(key)
+    }
+  }
 }

@@ -32,56 +32,46 @@ class AdmissionStreamSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
     val (first, second) = incoming.splitAt(incoming.length / 2)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    // the transformWithState operator requires the RocksDB state store
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[IncomingDoc]
-    val q = AdmissionStream.admissions(stream.toDF(), existing)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("admission_out").start()
-    try {
-      // batch 1 carries a SAME-batch replay of its first doc: the fold
-      // counts distinct shared shingles, so the duplicate rows must
-      // neither inflate the jaccard nor emit a second verdict
-      stream.addData(first.map { case (id, tx) => IncomingDoc(id, t1, tx) }
-        ++ first.take(1).map { case (id, tx) => IncomingDoc(id, t1, tx) })
-      q.processAllAvailable()
-      // second wave + replays of three first-wave docs: the seen-state
-      // must suppress the replays entirely (no second verdict row)
-      stream.addData(second.map { case (id, tx) => IncomingDoc(id, t2, tx) }
-        ++ first.take(3).map { case (id, tx) => IncomingDoc(id, t2, tx) })
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[IncomingDoc]
+      val q = AdmissionStream.admissions(stream.toDF(), existing)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("admission_out").start()
+      try {
+        // batch 1 carries a SAME-batch replay of its first doc: the fold
+        // counts distinct shared shingles, so the duplicate rows must
+        // neither inflate the jaccard nor emit a second verdict
+        stream.addData(first.map { case (id, tx) => IncomingDoc(id, t1, tx) }
+          ++ first.take(1).map { case (id, tx) => IncomingDoc(id, t1, tx) })
+        q.processAllAvailable()
+        // second wave + replays of three first-wave docs: the seen-state
+        // must suppress the replays entirely (no second verdict row)
+        stream.addData(second.map { case (id, tx) => IncomingDoc(id, t2, tx) }
+          ++ first.take(3).map { case (id, tx) => IncomingDoc(id, t2, tx) })
+        q.processAllAvailable()
 
-      val streamed = spark.table("admission_out").collect()
-        .map(r => r.getLong(0) ->
-          (r.getString(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2)),
-            if (r.isNullAt(3)) None else Some(r.getDouble(3))))
-      assert(streamed.length === incoming.length,
-        "each incoming doc must get exactly one verdict (replays suppressed)")
+        val streamed = spark.table("admission_out").collect()
+          .map(r => r.getLong(0) ->
+            (r.getString(1),
+              if (r.isNullAt(2)) None else Some(r.getLong(2)),
+              if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+        assert(streamed.length === incoming.length,
+          "each incoming doc must get exactly one verdict (replays suppressed)")
 
-      val batch = CurationQueries.q134IncrementalAdmission.run(spark, d)
-        .collect()
-        .map(r => r.getLong(0) ->
-          (r.getString(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2)),
-            if (r.isNullAt(3)) None else Some(r.getDouble(3))))
-        .toMap
-      assert(streamed.toMap === batch)
-      assert(streamed.exists(_._2._1 == "reject"),
-        "fixture must exercise the reject path")
-      assert(streamed.exists(_._2._1 == "admit"),
-        "fixture must exercise the admit path")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val batch = CurationQueries.q134IncrementalAdmission.run(spark, d)
+          .collect()
+          .map(r => r.getLong(0) ->
+            (r.getString(1),
+              if (r.isNullAt(2)) None else Some(r.getLong(2)),
+              if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+          .toMap
+        assert(streamed.toMap === batch)
+        assert(streamed.exists(_._2._1 == "reject"),
+          "fixture must exercise the reject path")
+        assert(streamed.exists(_._2._1 == "admit"),
+          "fixture must exercise the admit path")
+      } finally q.stop()
     }
   }
 }

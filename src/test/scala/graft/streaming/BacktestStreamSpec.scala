@@ -42,44 +42,35 @@ class BacktestStreamSpec extends AnyFunSuite {
       .sortBy(_._2.toString)
     val (first, second) = days.splitAt(17)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Double)]
-    val q = BacktestStream
-      .backtestPoints(stream.toDF().toDF("event_type", "ds", "v"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("backtest_out").start()
-    try {
-      stream.addData(first ++ first.take(4)) // + in-batch replay
-      q.processAllAvailable()
-      stream.addData(second ++ first.take(6)) // + cross-batch replays
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Double)]
+      val q = BacktestStream
+        .backtestPoints(stream.toDF().toDF("event_type", "ds", "v"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName("backtest_out").start()
+      try {
+        stream.addData(first ++ first.take(4)) // + in-batch replay
+        q.processAllAvailable()
+        stream.addData(second ++ first.take(6)) // + cross-batch replays
+        q.processAllAvailable()
 
-      val streamed = spark.table("backtest_out").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString,
-          r.getDouble(2), r.getDouble(5)))
-        .sortBy(t => (t._1, t._2))
-      assert(streamed.length === batch.length,
-        "each post-warm-up day must be scored exactly once")
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed ensemble scores must equal the q145 batch frame row for row")
+        val streamed = spark.table("backtest_out").collect()
+          .map(r => (r.getString(0), r.getDate(1).toString,
+            r.getDouble(2), r.getDouble(5)))
+          .sortBy(t => (t._1, t._2))
+        assert(streamed.length === batch.length,
+          "each post-warm-up day must be scored exactly once")
+        assert(streamed.toSeq === batch.toSeq,
+          "streamed ensemble scores must equal the q145 batch frame row for row")
 
-      // the stream's component predictions recompose: yhat ≈ (p1+p2)/2
-      // (tolerance: p1/p2 are independently rounded at emission)
-      spark.table("backtest_out").collect().foreach { r =>
-        assert(math.abs(
-          r.getDouble(5) - (r.getDouble(3) + r.getDouble(4)) / 2.0) < 1e-4)
-      }
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        // the stream's component predictions recompose: yhat ≈ (p1+p2)/2
+        // (tolerance: p1/p2 are independently rounded at emission)
+        spark.table("backtest_out").collect().foreach { r =>
+          assert(math.abs(
+            r.getDouble(5) - (r.getDouble(3) + r.getDouble(4)) / 2.0) < 1e-4)
+        }
+      } finally q.stop()
     }
   }
 }

@@ -48,39 +48,30 @@ class CusumStreamSpec extends AnyFunSuite {
       .sortBy(_._2.toString)
     val (first, second) = days.splitAt(25)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Double)]
-    val q = CusumStream
-      .chartPoints(stream.toDF().toDF("event_type", "ds", "v"), moments)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cusum_out").start()
-    try {
-      // wave 1 + an IN-batch replay of its first three days
-      stream.addData(first ++ first.take(3))
-      q.processAllAvailable()
-      // wave 2 + cross-batch replays of five wave-1 days
-      stream.addData(second ++ first.take(5))
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Double)]
+      val q = CusumStream
+        .chartPoints(stream.toDF().toDF("event_type", "ds", "v"), moments)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("cusum_out").start()
+      try {
+        // wave 1 + an IN-batch replay of its first three days
+        stream.addData(first ++ first.take(3))
+        q.processAllAvailable()
+        // wave 2 + cross-batch replays of five wave-1 days
+        stream.addData(second ++ first.take(5))
+        q.processAllAvailable()
 
-      val streamed = spark.table("cusum_out").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
-          r.getInt(3)))
-        .sortBy(t => (t._1, t._2))
-      assert(streamed.length === batch.length,
-        "each day must emit exactly one chart point")
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed chart must equal the batch chart row for row")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("cusum_out").collect()
+          .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
+            r.getInt(3)))
+          .sortBy(t => (t._1, t._2))
+        assert(streamed.length === batch.length,
+          "each day must emit exactly one chart point")
+        assert(streamed.toSeq === batch.toSeq,
+          "streamed chart must equal the batch chart row for row")
+      } finally q.stop()
     }
   }
 
@@ -98,31 +89,22 @@ class CusumStreamSpec extends AnyFunSuite {
       .agg(avg(col("v")).as("mu"), stddev_samp(col("v")).as("sd"))
       .localCheckpoint(true)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Double)]
-    val q = CusumStream
-      .chartPoints(stream.toDF().toDF("event_type", "ds", "v"), moments)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cusum_two").start()
-    try {
-      stream.addData(drifting ++ steady)
-      q.processAllAvailable()
-      val byType = spark.table("cusum_two").collect()
-        .map(r => (r.getString(0), r.getInt(3)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-      assert(byType("drift") > 0, "drifting type must alarm")
-      assert(byType("steady") === 0, "steady type must stay quiet")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Double)]
+      val q = CusumStream
+        .chartPoints(stream.toDF().toDF("event_type", "ds", "v"), moments)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("cusum_two").start()
+      try {
+        stream.addData(drifting ++ steady)
+        q.processAllAvailable()
+        val byType = spark.table("cusum_two").collect()
+          .map(r => (r.getString(0), r.getInt(3)))
+          .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+        assert(byType("drift") > 0, "drifting type must alarm")
+        assert(byType("steady") === 0, "steady type must stay quiet")
+      } finally q.stop()
     }
   }
 }

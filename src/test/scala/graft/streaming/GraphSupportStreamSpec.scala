@@ -43,38 +43,29 @@ class GraphSupportStreamSpec extends AnyFunSuite {
       .sortBy(_.orderkey)
     val (first, second) = baskets.splitAt(baskets.length / 2)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[Basket]
-    val q = GraphSupportStream
-      .supportCrossings(stream.toDS(), yCounts)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graph_support_out").start()
-    try {
-      // wave 1 + an IN-batch replay of its first basket
-      stream.addData(first ++ first.take(1))
-      q.processAllAvailable()
-      // wave 2 + cross-batch replays of three wave-1 baskets
-      stream.addData(second ++ first.take(3))
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[Basket]
+      val q = GraphSupportStream
+        .supportCrossings(stream.toDS(), yCounts)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graph_support_out").start()
+      try {
+        // wave 1 + an IN-batch replay of its first basket
+        stream.addData(first ++ first.take(1))
+        q.processAllAvailable()
+        // wave 2 + cross-batch replays of three wave-1 baskets
+        stream.addData(second ++ first.take(3))
+        q.processAllAvailable()
 
-      val streamed = spark.table("graph_support_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(streamed.toSet === expected,
-        "streamed crossings must equal the batch delta edge set")
-      assert(streamed.length === expected.size,
-        "each edge must emit exactly once")
-      assert(expected.nonEmpty, "fixture must exercise the crossing path")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("graph_support_out").collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        assert(streamed.toSet === expected,
+          "streamed crossings must equal the batch delta edge set")
+        assert(streamed.length === expected.size,
+          "each edge must emit exactly once")
+        assert(expected.nonEmpty, "fixture must exercise the crossing path")
+      } finally q.stop()
     }
   }
 }

@@ -37,37 +37,28 @@ class HoltStreamSpec extends AnyFunSuite {
       .sortBy(_._2.toString)
     val (first, second) = days.splitAt(13)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Double)]
-    val q = HoltStream
-      .forecastPoints(stream.toDF().toDF("event_type", "ds", "v"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("holt_out").start()
-    try {
-      stream.addData(first ++ first.take(3)) // + in-batch replay
-      q.processAllAvailable()
-      stream.addData(second ++ first.take(5)) // + cross-batch replays
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Double)]
+      val q = HoltStream
+        .forecastPoints(stream.toDF().toDF("event_type", "ds", "v"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName("holt_out").start()
+      try {
+        stream.addData(first ++ first.take(3)) // + in-batch replay
+        q.processAllAvailable()
+        stream.addData(second ++ first.take(5)) // + cross-batch replays
+        q.processAllAvailable()
 
-      val streamed = spark.table("holt_out").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
-          r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-        .sortBy(t => (t._1, t._2))
-      assert(streamed.length === batch.length,
-        "each day must emit exactly one forecast point")
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed forecasts must equal the batch smoother row for row")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("holt_out").collect()
+          .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
+            r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
+          .sortBy(t => (t._1, t._2))
+        assert(streamed.length === batch.length,
+          "each day must emit exactly one forecast point")
+        assert(streamed.toSeq === batch.toSeq,
+          "streamed forecasts must equal the batch smoother row for row")
+      } finally q.stop()
     }
   }
 }

@@ -43,38 +43,29 @@ class HoltWintersStreamSpec extends AnyFunSuite {
       .sortBy(_._2.toString)
     val (first, second) = days.splitAt(16)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Double)]
-    val q = HoltWintersStream
-      .forecastPoints(stream.toDF().toDF("event_type", "ds", "v"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("hw_out").start()
-    try {
-      stream.addData(first ++ first.take(4)) // + in-batch replay
-      q.processAllAvailable()
-      stream.addData(second ++ first.take(6)) // + cross-batch replays
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Double)]
+      val q = HoltWintersStream
+        .forecastPoints(stream.toDF().toDF("event_type", "ds", "v"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName("hw_out").start()
+      try {
+        stream.addData(first ++ first.take(4)) // + in-batch replay
+        q.processAllAvailable()
+        stream.addData(second ++ first.take(6)) // + cross-batch replays
+        q.processAllAvailable()
 
-      val streamed = spark.table("hw_out").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
-          r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
-          r.getDouble(7)))
-        .sortBy(t => (t._1, t._2))
-      assert(streamed.length === batch.length,
-        "each day must emit exactly one forecast point")
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed seasonal forecasts must equal the batch smoother")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("hw_out").collect()
+          .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
+            r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
+            r.getDouble(7)))
+          .sortBy(t => (t._1, t._2))
+        assert(streamed.length === batch.length,
+          "each day must emit exactly one forecast point")
+        assert(streamed.toSeq === batch.toSeq,
+          "streamed seasonal forecasts must equal the batch smoother")
+      } finally q.stop()
     }
   }
 }

@@ -55,43 +55,34 @@ class MsprtStreamSpec extends AnyFunSuite {
       .sortBy(_._2.toString)
     val (first, second) = paired.splitAt(18)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Long, Double,
-      Double, Long, Double, Double)]
-    val q = MsprtStream
-      .monitorPoints(stream.toDF().toDF("event_type", "ds", "na", "sa1",
-        "sa2", "nb", "sb1", "sb2"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("msprt_out").start()
-    try {
-      // wave 1 + an in-batch replay of its first three days
-      stream.addData(first ++ first.take(3))
-      q.processAllAvailable()
-      // wave 2 + cross-batch replays of five wave-1 days — the
-      // running-min p must survive the batch boundary untouched
-      stream.addData(second ++ first.take(5))
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Long, Double,
+        Double, Long, Double, Double)]
+      val q = MsprtStream
+        .monitorPoints(stream.toDF().toDF("event_type", "ds", "na", "sa1",
+          "sa2", "nb", "sb1", "sb2"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName("msprt_out").start()
+      try {
+        // wave 1 + an in-batch replay of its first three days
+        stream.addData(first ++ first.take(3))
+        q.processAllAvailable()
+        // wave 2 + cross-batch replays of five wave-1 days — the
+        // running-min p must survive the batch boundary untouched
+        stream.addData(second ++ first.take(5))
+        q.processAllAvailable()
 
-      val streamed = spark.table("msprt_out").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2),
-          r.getLong(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
-          r.getInt(7)))
-        .sortBy(t => (t._1, t._2))
-      assert(streamed.length === batch.length,
-        "each day must emit exactly one monitor point")
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed monitor must equal the batch test row for row")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("msprt_out").collect()
+          .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2),
+            r.getLong(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
+            r.getInt(7)))
+          .sortBy(t => (t._1, t._2))
+        assert(streamed.length === batch.length,
+          "each day must emit exactly one monitor point")
+        assert(streamed.toSeq === batch.toSeq,
+          "streamed monitor must equal the batch test row for row")
+      } finally q.stop()
     }
   }
 }

@@ -47,39 +47,30 @@ class PageHinkleyStreamSpec extends AnyFunSuite {
       .sortBy(_._2.toString)
     val (first, second) = days.splitAt(18)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Double)]
-    val q = PageHinkleyStream
-      .testPoints(stream.toDF().toDF("event_type", "ds", "v"), moments)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ph_out").start()
-    try {
-      // wave 1 + an in-batch replay of its first three days
-      stream.addData(first ++ first.take(3))
-      q.processAllAvailable()
-      // wave 2 + cross-batch replays of five wave-1 days
-      stream.addData(second ++ first.take(5))
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Double)]
+      val q = PageHinkleyStream
+        .testPoints(stream.toDF().toDF("event_type", "ds", "v"), moments)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("ph_out").start()
+      try {
+        // wave 1 + an in-batch replay of its first three days
+        stream.addData(first ++ first.take(3))
+        q.processAllAvailable()
+        // wave 2 + cross-batch replays of five wave-1 days
+        stream.addData(second ++ first.take(5))
+        q.processAllAvailable()
 
-      val streamed = spark.table("ph_out").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
-          r.getDouble(3), r.getInt(4)))
-        .sortBy(t => (t._1, t._2))
-      assert(streamed.length === batch.length,
-        "each day must emit exactly one test point")
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed PH test must equal the batch test row for row")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("ph_out").collect()
+          .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
+            r.getDouble(3), r.getInt(4)))
+          .sortBy(t => (t._1, t._2))
+        assert(streamed.length === batch.length,
+          "each day must emit exactly one test point")
+        assert(streamed.toSeq === batch.toSeq,
+          "streamed PH test must equal the batch test row for row")
+      } finally q.stop()
     }
   }
 

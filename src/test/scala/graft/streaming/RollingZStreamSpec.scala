@@ -44,41 +44,32 @@ class RollingZStreamSpec extends AnyFunSuite {
       .sortBy(_._2.toString)
     val (first, second) = days.splitAt(13)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[(String, java.sql.Date, Double)]
-    val q = RollingZStream
-      .screenPoints(stream.toDF().toDF("event_type", "ds", "v"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("rollz_out").start()
-    try {
-      // wave 1 (ends mid-window) + an in-batch replay of three days
-      stream.addData(first ++ first.take(3))
-      q.processAllAvailable()
-      // wave 2 spans the spike + cross-batch replays of five days —
-      // the trailing window must have crossed the boundary intact
-      stream.addData(second ++ first.take(5))
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[(String, java.sql.Date, Double)]
+      val q = RollingZStream
+        .screenPoints(stream.toDF().toDF("event_type", "ds", "v"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName("rollz_out").start()
+      try {
+        // wave 1 (ends mid-window) + an in-batch replay of three days
+        stream.addData(first ++ first.take(3))
+        q.processAllAvailable()
+        // wave 2 spans the spike + cross-batch replays of five days —
+        // the trailing window must have crossed the boundary intact
+        stream.addData(second ++ first.take(5))
+        q.processAllAvailable()
 
-      val streamed = spark.table("rollz_out").collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
-          r.getLong(3), if (r.isNullAt(4)) None else Some(r.getDouble(4)),
-          r.getInt(5)))
-        .sortBy(t => (t._1, t._2))
-      assert(streamed.length === batch.length,
-        "each day must emit exactly one screened point")
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed screen must equal the batch screen row for row")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("rollz_out").collect()
+          .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
+            r.getLong(3), if (r.isNullAt(4)) None else Some(r.getDouble(4)),
+            r.getInt(5)))
+          .sortBy(t => (t._1, t._2))
+        assert(streamed.length === batch.length,
+          "each day must emit exactly one screened point")
+        assert(streamed.toSeq === batch.toSeq,
+          "streamed screen must equal the batch screen row for row")
+      } finally q.stop()
     }
   }
 }

@@ -31,44 +31,35 @@ class SubstrAdmissionStreamSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
     val (first, second) = incoming.splitAt(incoming.length / 2)
 
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql = spark.sqlContext
-    val stream = MemoryStream[IncomingDoc]
-    val q = SubstrAdmissionStream.duplicatedSpans(stream.toDF(), existing)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("substr_admission_out").start()
-    try {
-      // batch 1 carries a SAME-batch replay of its first doc: the fold
-      // dedups positions, so duplicate candidate rows must neither
-      // widen spans nor emit a second copy
-      stream.addData(first.map { case (id, tx) => IncomingDoc(id, t1, tx) }
-        ++ first.take(1).map { case (id, tx) => IncomingDoc(id, t1, tx) })
-      q.processAllAvailable()
-      // second wave + replays of three first-wave docs: the seen-state
-      // must suppress the replays entirely
-      stream.addData(second.map { case (id, tx) => IncomingDoc(id, t2, tx) }
-        ++ first.take(3).map { case (id, tx) => IncomingDoc(id, t2, tx) })
-      q.processAllAvailable()
+    SparkTestSession.withRocksDbStateStore {
+      implicit val sql = spark.sqlContext
+      val stream = MemoryStream[IncomingDoc]
+      val q = SubstrAdmissionStream.duplicatedSpans(stream.toDF(), existing)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("substr_admission_out").start()
+      try {
+        // batch 1 carries a SAME-batch replay of its first doc: the fold
+        // dedups positions, so duplicate candidate rows must neither
+        // widen spans nor emit a second copy
+        stream.addData(first.map { case (id, tx) => IncomingDoc(id, t1, tx) }
+          ++ first.take(1).map { case (id, tx) => IncomingDoc(id, t1, tx) })
+        q.processAllAvailable()
+        // second wave + replays of three first-wave docs: the seen-state
+        // must suppress the replays entirely
+        stream.addData(second.map { case (id, tx) => IncomingDoc(id, t2, tx) }
+          ++ first.take(3).map { case (id, tx) => IncomingDoc(id, t2, tx) })
+        q.processAllAvailable()
 
-      val streamed = spark.table("substr_admission_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val batch = TextQueries.q154IncrementalSubstr.run(spark, d).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      assert(streamed.toSet === batch.toSet,
-        "streamed spans must equal q154's batch spans")
-      assert(streamed.length === batch.length,
-        "replays must be suppressed — no duplicate span rows")
-      assert(batch.nonEmpty, "fixture must exercise the span path")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+        val streamed = spark.table("substr_admission_out").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        val batch = TextQueries.q154IncrementalSubstr.run(spark, d).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        assert(streamed.toSet === batch.toSet,
+          "streamed spans must equal q154's batch spans")
+        assert(streamed.length === batch.length,
+          "replays must be suppressed — no duplicate span rows")
+        assert(batch.nonEmpty, "fixture must exercise the span path")
+      } finally q.stop()
     }
   }
 }
