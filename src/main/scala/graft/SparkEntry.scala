@@ -16,7 +16,7 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Catalog.all.map(q => q.name -> q.run).toMap
+    Catalog.all.map(q => q.name -> (q.run _)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,0 +1,87 @@
+package graft.etl
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, Generate, Join, LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
+
+/** Plans a global sort of a small input in one partition:
+  * `SortExec(order, global, CoalesceExec(1, child))` instead of a range
+  * exchange. The range exchange costs a `RangePartitioner` sampling job
+  * and a map stage; `CoalesceExec(1)` reports `SinglePartition`, which
+  * already satisfies the sort's ordered distribution, so
+  * `EnsureRequirements` adds no exchange and both jobs are gone.
+  *
+  * It fires only when every one of these holds:
+  *  - AQE and its partition coalescing are on ([[bound]]);
+  *  - every leaf under the sort is a file scan or a materialized AQE
+  *    query stage (at a re-plan) that is not a range shuffle, so its
+  *    size is known and the sample is still to be saved;
+  *  - the leaves sum to at most
+  *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB):
+  *    AQE would coalesce a shuffle that small into one partition
+  *    anyway, so this adds no conf and never fires on a large input;
+  *  - nothing under the sort multiplies rows ([[rowSafe]]), so the
+  *    sort's input is no larger than its leaves.
+  *
+  * `Limit(Sort)` is planned by `SpecialLimits` as
+  * `TakeOrderedAndProject` before this strategy sees the `Sort`. AQE's
+  * re-planner consults `experimental.extraStrategies` at every re-plan,
+  * so a sort over an aggregate is planned in one partition once the
+  * aggregate's shuffle stage has reported its size.
+  */
+object OnePartitionSort extends SparkStrategy {
+
+  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case s: Sort if s.global && fits(s.child, SQLConf.get) =>
+      SortExec(s.order, global = true, CoalesceExec(1, planLater(s.child))) :: Nil
+    case _ => Nil
+  }
+
+  /** Appends the strategy to the session's planner once. The session
+    * builders and `GraftQuery.run` call it, so every session that runs
+    * the catalog plans with it. */
+  def install(spark: SparkSession): Unit = synchronized {
+    val ex = spark.experimental
+    if (!ex.extraStrategies.contains(this)) ex.extraStrategies = ex.extraStrategies :+ this
+  }
+
+  /** The input size at or under which AQE coalesces a shuffle into one
+    * partition, when it coalesces at all. */
+  def bound(conf: SQLConf): Option[Long] =
+    if (conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled)
+      Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+    else None
+
+  private def fits(child: LogicalPlan, conf: SQLConf): Boolean =
+    bound(conf).exists { b =>
+      val leaves = child.collectLeaves()
+      !child.isStreaming && leaves.forall(sized) &&
+        leaves.map(_.stats.sizeInBytes).sum <= b && rowSafe(child)
+    }
+
+  /** A file scan, or a materialized stage that is not a range shuffle:
+    * once a range shuffle has run, its sample and map stage are paid
+    * and planning the sort in one partition saves nothing. */
+  private def sized(leaf: LogicalPlan): Boolean = leaf match {
+    case s: LogicalQueryStage => s.isMaterialized && !s.physicalPlan.exists {
+      case q: ShuffleQueryStageExec => q.shuffle.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }
+    case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+    case _ => false
+  }
+
+  /** No `Generate`, no `Expand`, and no join unless one side has at
+    * most one row. A materialized stage is a leaf: its size is its
+    * output's. */
+  private def rowSafe(p: LogicalPlan): Boolean = p match {
+    case _: LogicalQueryStage => true
+    case _: Generate | _: Expand => false
+    case j: Join if !j.children.exists(_.maxRows.exists(_ <= 1)) => false
+    case _ => p.children.forall(rowSafe)
+  }
+}

@@ -126,19 +126,24 @@ object Tables {
     * downstream shape. The key must be (near-)unique AND NON-NULL —
     * duplicate keys co-locate, so a heavy-duplicate key column would
     * rebuild the skew spread exists to remove, and xxhash64(null)
-    * returns the seed constant, so every null-key row lands in ONE
-    * bucket (a null-heavy key silently degenerates the spread to a
-    * single partition); callers pass the row id (doc_id, rid,
-    * cents…). `width·64` hash buckets keep the bucket→partition step
-    * balanced (20–100× more distinct values than partitions, §2.5).
+    * returns the seed constant, so every null-key row would land in ONE
+    * bucket (a null-heavy key would degenerate the spread to a single
+    * partition). A null key therefore fails the exchange's task through
+    * `raise_error` in the partition expression (no extra job; the
+    * optimizer folds the test away for a non-nullable key); callers pass
+    * the row id (doc_id, rid, cents…). `width·64` hash buckets keep the
+    * bucket→partition step balanced (20–100× more distinct values than
+    * partitions, §2.5).
     * Unlike the round-robin form the partition expression references
     * the key column, so column pruning through the exchange keeps
     * key+used columns — call it on an already-projected frame (the
     * standing spread discipline). */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.{pmod, xxhash64, lit}
+    import org.apache.spark.sql.functions.{lit, pmod, raise_error, when, xxhash64}
     val width = df.sparkSession.sessionState.conf.numShufflePartitions
-    spreadVia(df, _.repartition(width, pmod(xxhash64(key), lit(width * 64))))
+    val bucket = when(key.isNull, raise_error(lit(s"Tables.spread: null spread key $key")))
+      .otherwise(pmod(xxhash64(key), lit(width * 64)))
+    spreadVia(df, _.repartition(width, bucket))
   }
 
   private def spreadVia(df: DataFrame,

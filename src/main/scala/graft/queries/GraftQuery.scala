@@ -13,7 +13,16 @@ final case class GraftQuery(
     name: String,
     doc: String,
     oracle: Option[String],
-    run: (SparkSession, String) => DataFrame)
+    body: (SparkSession, String) => DataFrame) {
+
+  /** Builds the query on `spark`, whose planner first gets
+    * [[graft.etl.OnePartitionSort]]: a session the catalog runs on plans
+    * the same whoever built it. */
+  def run(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.etl.OnePartitionSort.install(spark)
+    body(spark, sfDir)
+  }
+}
 
 /** Shared DuckDB-oracle CTE fragments. Six oracles previously carried
   * the exact 3-gram Jaccard pair derivation (toks → sh → ex → pairs)

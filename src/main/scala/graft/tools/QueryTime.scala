@@ -8,6 +8,12 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.Bench
 import graft.sources.Layouts
@@ -24,6 +30,9 @@ import graft.sources.Layouts
   *   runMain graft.tools.QueryTime <sfDir> <reps> [<name>...]
   * (no names = the whole catalog), or, to price the layout builds:
   *   runMain graft.tools.QueryTime layouts <sfDir>
+  * or, for one counted rep per query with the exchanges and one-partition
+  * sorts of its AQE-final plan, printed as a markdown table:
+  *   runMain graft.tools.QueryTime census <sfDir> [<name>...]
   */
 object QueryTime {
 
@@ -118,8 +127,100 @@ object QueryTime {
     println(s"[lt] built under $root")
   }
 
-  def main(args: Array[String]): Unit =
-    if (args(0) == "layouts") layouts(args(1)) else queries(args)
+  /** What one AQE-final plan holds: shuffle exchanges (range and
+    * single-partition among them), broadcast exchanges, reused
+    * exchanges, and global sorts over a one-partition coalesce. */
+  final case class Census(shuffle: Int, range: Int, single: Int, broadcast: Int,
+                          reused: Int, onePartitionSorts: Int)
+
+  /** A global sort over a one-partition coalesce, as
+    * [[graft.etl.OnePartitionSort]] plans it. */
+  def onePartitionSort(p: SparkPlan): Boolean = p match {
+    case s: SortExec if s.global => (s.child match {
+      case i: InputAdapter => i.child
+      case other => other
+    }) match {
+      case c: CoalesceExec => c.numPartitions == 1
+      case _ => false
+    }
+    case _ => false
+  }
+
+  def census(plan: SparkPlan): Census = {
+    var c = Census(0, 0, 0, 0, 0, 0)
+    def walk(p: SparkPlan): Unit = {
+      p match {
+        case s: ShuffleExchangeLike =>
+          c = c.copy(shuffle = c.shuffle + 1,
+            range = c.range + (if (s.outputPartitioning.isInstanceOf[RangePartitioning]) 1 else 0),
+            single = c.single + (if (s.outputPartitioning == SinglePartition) 1 else 0))
+        case _: BroadcastExchangeLike => c = c.copy(broadcast = c.broadcast + 1)
+        case _: ReusedExchangeExec => c = c.copy(reused = c.reused + 1)
+        case s if onePartitionSort(s) => c = c.copy(onePartitionSorts = c.onePartitionSorts + 1)
+        case _ => ()
+      }
+      (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _: ReusedExchangeExec => Nil
+        case other => other.children
+      }).foreach(walk)
+      p.subqueries.foreach(walk)
+    }
+    walk(plan)
+    c
+  }
+
+  /** The executed plan of the last successful write on `spark` since
+    * [[take]]; read it after a [[Counter.totals]] drain (both listen on
+    * the shared listener-bus queue). */
+  private final class LastWrite(spark: SparkSession) extends QueryExecutionListener {
+    @volatile private var last: Option[SparkPlan] = None
+    spark.listenerManager.register(this)
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      if (qe.logical.isInstanceOf[V2WriteCommand]) last = Some(qe.executedPlan)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    def take(): Option[SparkPlan] = { val p = last; last = None; p }
+  }
+
+  /** One warm and one counted rep per query; prints a markdown row of
+    * the counted rep's jobs and its noop write's [[census]], then the
+    * totals. */
+  private def censusTable(sfDir: String, names: Set[String]): Unit = {
+    val selected = Bench.select(names)
+    val spark = Bench.session()
+    Bench.warm(spark, sfDir)
+    val counter = new Counter(spark.sparkContext)
+    val writes = new LastWrite(spark)
+    val cols = Seq("jobs", "shuffle", "range", "single", "broadcast", "reused",
+      "one-partition sorts")
+    println(s"[census] | query | ${cols.mkString(" | ")} |")
+    println(s"[census] |---|${cols.map(_ => "---:").mkString("|")}|")
+    val rows = selected.flatMap { case (name, fn) =>
+      try {
+        rep(spark, counter, sfDir, fn)
+        writes.take()
+        val r = rep(spark, counter, sfDir, fn)
+        val c = writes.take().map(census).getOrElse(sys.error("no write plan captured"))
+        val row = Seq(r.jobs, c.shuffle, c.range, c.single, c.broadcast, c.reused,
+          c.onePartitionSorts).map(_.toLong)
+        println(s"[census] | $name | ${row.mkString(" | ")} |")
+        Some(row)
+      } catch { case e: Throwable =>
+        System.err.println(s"[census] $name failed: ${e.getMessage}")
+        None
+      }
+    }
+    val total = rows.transpose.map(_.sum)
+    println(s"[census] | total (${rows.size}) | ${total.mkString(" | ")} |")
+    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = args(0) match {
+    case "layouts" => layouts(args(1))
+    case "census" => censusTable(args(1), args.drop(2).toSet)
+    case _ => queries(args)
+  }
 
   private def queries(args: Array[String]): Unit = {
     val sfDir = args(0)

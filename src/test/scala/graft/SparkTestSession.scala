@@ -11,6 +11,7 @@ object SparkTestSession {
       SparkSession.builder().master("local[4]").appName("graft-test"), "4")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.etl.OnePartitionSort.install(s)
     s
   }
 

@@ -38,6 +38,18 @@ class TablesSpec extends AnyFunSuite {
       s"skewed keyed spread: ${sizes.mkString(",")}")
   }
 
+  test("keyed spread fails loudly on a null key") {
+    import spark.implicits._
+    // mostly nulls: hashed as-is they would all land in one bucket
+    val narrow = (1 to 1000).map(i => if (i % 10 == 0) Some(i.toLong) else None)
+      .toDF("x").coalesce(1)
+    val e = intercept[Exception](Tables.spread(narrow, col("x")).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("null spread key")), e)
+    // the same frame without its nulls spreads as before
+    assert(Tables.spread(narrow.na.drop(), col("x")).count() === 100L)
+  }
+
   test("keyed spread is the identity at or above width and keeps pruning to key+used columns") {
     import spark.implicits._
     val width = spark.sessionState.conf.numShufflePartitions

@@ -231,6 +231,43 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  /** Why a one-partition coalesce under a global sort would funnel a
+    * large input through one task, if it would. It is legal only as
+    * [[graft.etl.OnePartitionSort]] bounds it: AQE coalescing on, every
+    * leaf a file scan or a materialized AQE stage, the leaves summing to
+    * at most [[graft.etl.OnePartitionSort.bound]], and no Generate,
+    * Expand or row-multiplying join between them and the sort. */
+  private def sortFunnel(coalesce: SparkPlan): Option[String] = {
+    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
+      case q: QueryStageExec => Seq(q)
+      case _ if p.children.isEmpty => Seq(p)
+      case _ => p.children.flatMap(leaves)
+    }
+    val sizes = leaves(coalesce).map {
+      case f: FileSourceScanExec => Some(f.relation.sizeInBytes)
+      case q: QueryStageExec if q.isMaterialized => q.computeStats().map(_.sizeInBytes.toLong)
+      case _ => None
+    }
+    def oneRow(p: SparkPlan): Boolean = unwrap(p) match {
+      case e: Exchange => oneRow(e.child)
+      case u => u.logicalLink.flatMap(_.maxRows).exists(_ <= 1)
+    }
+    def multiplies(p: SparkPlan): Boolean = p match {
+      case _: QueryStageExec => false
+      case _: GenerateExec | _: ExpandExec => true
+      case j: joins.BaseJoinExec if !j.children.exists(oneRow) => true
+      case _ => p.children.exists(multiplies)
+    }
+    graft.etl.OnePartitionSort.bound(spark.sessionState.conf) match {
+      case None => Some("AQE partition coalescing is off")
+      case Some(_) if sizes.contains(None) => Some("a leaf of unknown size")
+      case Some(b) if sizes.flatten.sum > b => Some(s"${sizes.flatten.sum} bytes over the $b-byte bound")
+      case _ if multiplies(coalesce) => Some("a row-multiplying node")
+      case _ => None
+    }
+  }
+
   /** The scale-killer shapes in one physical plan (round-5 verdict #5),
     * checked on EVERY catalog plan so that a regression in a query no
     * PlansSpec pin covers can't land silently:
@@ -240,6 +277,8 @@ class QueriesSpec extends AnyFunSuite {
     *  - Planned single-partition shuffle — the "funnel the corpus
     *    through one task" shape (global rank or row_number), legal only
     *    feeding a scalar aggregate (1 row) or a global limit (≤ k rows).
+    *  - One-partition sort — a global sort over a one-partition
+    *    coalesce, legal only inside [[sortFunnel]]'s bound.
     *  - Global window — an empty partitionSpec serializes the whole
     *    input into one task at 100 TB, even under a range shuffle.
     *  - CodegenFallback predicate in a scan stage — it breaks codegen
@@ -270,6 +309,9 @@ class QueriesSpec extends AnyFunSuite {
         if (!bounded)
           violations += s"$name: unbounded SinglePartition shuffle " +
             s"(parent ${parent.map(_.nodeName).getOrElse("-")})"
+      case (s: SortExec, _) if graft.tools.QueryTime.onePartitionSort(s) =>
+        sortFunnel(s.child).foreach(why =>
+          violations += s"$name: one-partition sort over $why")
       case (w: WindowExec, _) if w.partitionSpec.isEmpty &&
           !boundedGlobalWindow.contains(name) =>
         violations += s"$name: global (unpartitioned) window"
@@ -441,6 +483,32 @@ class QueriesSpec extends AnyFunSuite {
     // bounded build sides: a 1-row scalar aggregate and a ≤ k-row limit
     assert(lint(a.crossJoin(b.agg(max($"y")))) == ((Nil, false)))
     assert(lint(a.join(broadcast(b.limit(5)), $"x" < $"y")) == ((Nil, false)))
+  }
+
+  test("the plan lint flags a one-partition sort over the bound or a row-multiplying node, and stays quiet in bound") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    def lint(df: DataFrame) = lintPlan("planted", df.queryExecution.executedPlan)._1
+    def sorts(df: DataFrame) = nodes(df.queryExecution.executedPlan)
+      .count { case (p, _) => graft.tools.QueryTime.onePartitionSort(p) }
+    val p = s"${java.nio.file.Files.createTempDirectory("graft_sortlint")}/t"
+    spark.range(100).select($"id".as("x"), array($"id", $"id" + 1).as("arr"))
+      .write.parquet(p)
+    val small = spark.read.parquet(p)
+    // in bound: the strategy's own plan, and a user's coalesce(1)
+    assert(sorts(small.orderBy($"x")) == 1 && lint(small.orderBy($"x")).isEmpty)
+    assert(lint(small.coalesce(1).orderBy($"x")).isEmpty)
+    val exploded = small.select(explode($"arr").as("x")).coalesce(1).orderBy($"x")
+    assert(sorts(exploded) == 1 &&
+      lint(exploded).exists(_.contains("one-partition sort over a row-multiplying node")))
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "16")
+      val over = small.coalesce(1).orderBy($"x")
+      assert(sorts(over) == 1 &&
+        lint(over).exists(_.contains("-byte bound")), lint(over))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   // The inexact-SUM register (round-11 verdict #2) is EXACT: a new
