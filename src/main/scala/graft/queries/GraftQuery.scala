@@ -17,9 +17,11 @@ final case class GraftQuery(
 
   /** Builds the query on `spark`, whose planner first gets
     * [[graft.etl.OnePartitionSort]]: a session the catalog runs on plans
-    * the same whoever built it. */
+    * the same whoever built it. The JVM's case-mapping table is built
+    * before the first query ([[graft.text.CaseMapping]]). */
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     graft.etl.OnePartitionSort.install(spark)
+    graft.text.CaseMapping.warm(spark)
     body(spark, sfDir)
   }
 }

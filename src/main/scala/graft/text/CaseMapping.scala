@@ -1,0 +1,30 @@
+package graft.text
+
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{lit, upper}
+
+/** Spark maps case through ICU by default
+  * (`spark.sql.icu.caseMappings.enabled`), and the first `upper`,
+  * `lower` or `initcap` a JVM evaluates under it builds ICU's title-case
+  * table over every code point: about 1.5 s on one core (q40 runs in
+  * 1.9 s when it is the JVM's first caller, 0.4 s otherwise). Whichever
+  * catalog query gets there first pays it, so a query's latency would
+  * depend on what ran before it. [[warm]] pays it once, when a session
+  * first runs the catalog.
+  */
+object CaseMapping {
+  private val warmed = new AtomicBoolean(false)
+
+  /** Builds the table once per JVM. */
+  def warm(spark: SparkSession): Unit =
+    if (warmed.compareAndSet(false, true)) fold(spark)
+
+  /** Folds `upper('a')` through the session's optimizer, which
+    * evaluates it with the session's case-mapping setting (a session
+    * with ICU mapping off builds no table). No job runs. */
+  private[graft] def fold(spark: SparkSession): LogicalPlan =
+    spark.range(1).select(upper(lit("a"))).queryExecution.optimizedPlan
+}
