@@ -3,13 +3,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** The session every graft entry point runs on: `local[N]` with N
     * from `SPARK_GRAFT_CPUS` (default 4), built through [[configure]],
-    * its planner holding [[graft.etl.OnePartitionSort]]. */
+    * [[graft.queries.GraftQuery.prepare]]d for the catalog. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.etl.OnePartitionSort.install(spark)
+    graft.queries.GraftQuery.prepare(spark)
     spark
   }
 

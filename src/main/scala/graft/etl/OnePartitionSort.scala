@@ -24,8 +24,11 @@ import org.apache.spark.sql.internal.SQLConf
   *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB):
   *    AQE would coalesce a shuffle that small into one partition
   *    anyway, so this adds no conf and never fires on a large input;
-  *  - nothing under the sort multiplies rows ([[rowSafe]]), so the
+  *  - nothing under the sort multiplies rows ([[multiplier]]), so the
   *    sort's input is no larger than its leaves.
+  *
+  * [[refusal]] names the first rule a sort breaks; the census reads it
+  * there too, so the two cannot disagree.
   *
   * `Limit(Sort)` is planned by `SpecialLimits` as
   * `TakeOrderedAndProject` before this strategy sees the `Sort`. AQE's
@@ -36,14 +39,14 @@ import org.apache.spark.sql.internal.SQLConf
 object OnePartitionSort extends SparkStrategy {
 
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case s: Sort if s.global && fits(s.child, SQLConf.get) =>
+    case s: Sort if s.global && refusal(s.child, SQLConf.get).isEmpty =>
       SortExec(s.order, global = true, CoalesceExec(1, planLater(s.child))) :: Nil
     case _ => Nil
   }
 
-  /** Appends the strategy to the session's planner once. The session
-    * builders and `GraftQuery.run` call it, so every session that runs
-    * the catalog plans with it. */
+  /** Appends the strategy to the session's planner once.
+    * `GraftQuery.prepare` calls it, so every session that runs the
+    * catalog plans with it. */
   def install(spark: SparkSession): Unit = synchronized {
     val ex = spark.experimental
     if (!ex.extraStrategies.contains(this)) ex.extraStrategies = ex.extraStrategies :+ this
@@ -56,12 +59,19 @@ object OnePartitionSort extends SparkStrategy {
       Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
     else None
 
-  private def fits(child: LogicalPlan, conf: SQLConf): Boolean =
-    bound(conf).exists { b =>
+  /** Why a global sort over `child` keeps its range exchange, or None
+    * when the strategy plans it in one partition: coalescing is off, a
+    * leaf of unknown size (named by its kind), a row-multiplying node,
+    * or an input over the bound. */
+  def refusal(child: LogicalPlan, conf: SQLConf): Option[String] = bound(conf) match {
+    case None => Some("coalescing off")
+    case Some(_) if child.isStreaming => Some("streaming")
+    case Some(b) =>
       val leaves = child.collectLeaves()
-      !child.isStreaming && leaves.forall(sized) &&
-        leaves.map(_.stats.sizeInBytes).sum <= b && rowSafe(child)
-    }
+      leaves.find(!sized(_)).map(l => s"unsized ${l.nodeName}")
+        .orElse(multiplier(child))
+        .orElse(Option.when(leaves.map(_.stats.sizeInBytes).sum > b)("over bound"))
+  }
 
   /** A file scan, or a materialized stage that is not a range shuffle:
     * once a range shuffle has run, its sample and map stage are paid
@@ -75,13 +85,13 @@ object OnePartitionSort extends SparkStrategy {
     case _ => false
   }
 
-  /** No `Generate`, no `Expand`, and no join unless one side has at
-    * most one row. A materialized stage is a leaf: its size is its
-    * output's. */
-  private def rowSafe(p: LogicalPlan): Boolean = p match {
-    case _: LogicalQueryStage => true
-    case _: Generate | _: Expand => false
-    case j: Join if !j.children.exists(_.maxRows.exists(_ <= 1)) => false
-    case _ => p.children.forall(rowSafe)
+  /** The first `Generate`, `Expand`, or join with no side of at most
+    * one row. A materialized stage is a leaf: its size is its output's. */
+  private def multiplier(p: LogicalPlan): Option[String] = p match {
+    case _: LogicalQueryStage => None
+    case _: Generate => Some("Generate")
+    case _: Expand => Some("Expand")
+    case j: Join if !j.children.exists(_.maxRows.exists(_ <= 1)) => Some("join")
+    case _ => p.children.iterator.flatMap(multiplier).nextOption()
   }
 }

@@ -15,14 +15,25 @@ final case class GraftQuery(
     oracle: Option[String],
     body: (SparkSession, String) => DataFrame) {
 
-  /** Builds the query on `spark`, whose planner first gets
-    * [[graft.etl.OnePartitionSort]]: a session the catalog runs on plans
-    * the same whoever built it. The JVM's case-mapping table is built
-    * before the first query ([[graft.text.CaseMapping]]). */
+  /** Builds the query on `spark`, [[GraftQuery.prepare]]d first: a
+    * session the catalog runs on plans the same whoever built it. The
+    * JVM's warm-up is started, never awaited, so its outcome cannot
+    * reach the query; a query that needs a table the warm-up has not
+    * built yet waits for it or builds it. */
   def run(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.etl.OnePartitionSort.install(spark)
-    graft.text.CaseMapping.warm(spark)
+    GraftQuery.prepare(spark)
     body(spark, sfDir)
+  }
+}
+
+object GraftQuery {
+  /** Readies `spark` for the catalog: its planner gets
+    * [[graft.etl.OnePartitionSort]], and the JVM's one-time
+    * [[WarmUp]] starts in the background. The session builders call
+    * it, and so does every [[GraftQuery.run]]. */
+  def prepare(spark: SparkSession): Unit = {
+    graft.etl.OnePartitionSort.install(spark)
+    WarmUp.start(spark)
   }
 }
 

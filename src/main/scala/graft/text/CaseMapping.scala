@@ -1,7 +1,5 @@
 package graft.text
 
-import java.util.concurrent.atomic.AtomicBoolean
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.{lit, upper}
@@ -11,16 +9,11 @@ import org.apache.spark.sql.functions.{lit, upper}
   * `lower` or `initcap` a JVM evaluates under it builds ICU's title-case
   * table over every code point: about 1.5 s on one core (q40 runs in
   * 1.9 s when it is the JVM's first caller, 0.4 s otherwise). Whichever
-  * catalog query gets there first pays it, so a query's latency would
-  * depend on what ran before it. [[warm]] pays it once, when a session
-  * first runs the catalog.
+  * catalog query got there first would pay it, so a query's latency
+  * would depend on what ran before it. [[graft.queries.WarmUp]] builds
+  * it through [[fold]] on its background thread.
   */
 object CaseMapping {
-  private val warmed = new AtomicBoolean(false)
-
-  /** Builds the table once per JVM. */
-  def warm(spark: SparkSession): Unit =
-    if (warmed.compareAndSet(false, true)) fold(spark)
 
   /** Folds `upper('a')` through the session's optimizer, which
     * evaluates it with the session's case-mapping setting (a session

@@ -10,8 +10,11 @@ import graft.queries._
   * longer serves as an index at 200+ queries). Everything here is
   * DERIVED, never hand-maintained: family from the registering object,
   * oracle kind from the GraftQuery itself, spec pins by scanning the
-  * test tree for the query token, SCALING coverage by scanning
-  * SCALING.md. Regenerate with:
+  * test tree for the query token, fixtures by scanning it for
+  * `fixture("<name>")` calls (a spec that reaches a query only through
+  * `SparkTestSession.fixture` uses it to test something else and does
+  * not pin it), SCALING coverage by scanning SCALING.md. Regenerate
+  * with:
   *   sbt "runMain graft.tools.CatalogIndex"
   */
 object CatalogIndex {
@@ -81,15 +84,23 @@ object CatalogIndex {
         text.contains(name)
     }
 
+    // a fixture call names the query in full; what is left of the
+    // file after those calls is what pins
+    val fixtureCall = """fixture\("([A-Za-z0-9_]+)"\)""".r
+    val scanned = testFiles.map { case (f, txt) =>
+      (f, fixtureCall.replaceAllIn(txt, ""), fixtureCall.findAllMatchIn(txt).map(_.group(1)).toSet)
+    }
+
     val rows = all.sortBy(q => token(q.name).drop(1).toInt).map { q =>
-      val pins = testFiles.collect {
-        case (f, txt) if mentions(txt, q.name) => f
+      val pins = scanned.collect { case (f, rest, _) if mentions(rest, q.name) => f }
+      val fixtures = scanned.collect {
+        case (f, _, used) if used(q.name) && !pins.contains(f) => f
       }
       val oracle = if (q.oracle.isDefined) "value-exact"
         else "rows-only+pin"
       val sc = if (mentions(scaling, q.name)) "yes" else ""
       s"| ${q.name} | ${familyOf(q.name)} | $oracle | " +
-        s"${pins.mkString(", ")} | $sc | ${q.doc} |"
+        s"${pins.mkString(", ")} | ${fixtures.mkString(", ")} | $sc | ${q.doc} |"
     }
 
     val oracleN = all.count(_.oracle.isDefined)
@@ -104,13 +115,15 @@ object CatalogIndex {
       "(RNG/sketch/quantizer semantics), drift-pinned in QueriesSpec",
       "and property-pinned by the listed specs. *Specs* = test files",
       "that reference the query by name (its pins and parity twins).",
+      "*Fixture in* = test files that use the query only as a fixture",
+      "(through `SparkTestSession.fixture`) to test something else.",
       "*SCALING* = the query has a measured row in SCALING.md.",
       "",
       s"${all.size} queries: $oracleN value-exact, " +
         s"${all.size - oracleN} rows-only.",
       "",
-      "| query | family | oracle | specs | SCALING | what it computes |",
-      "|---|---|---|---|---|---|")
+      "| query | family | oracle | specs | fixture in | SCALING | what it computes |",
+      "|---|---|---|---|---|---|---|")
     (header ++ rows).mkString("", "\n", "\n")
   }
 }

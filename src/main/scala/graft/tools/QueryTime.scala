@@ -8,14 +8,16 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.catalyst.plans.logical.{Sort, V2WriteCommand}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, QueryExecution, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, LogicalQueryStage, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.Bench
+import graft.etl.OnePartitionSort
 import graft.sources.Layouts
 
 /** Per-query profiler: runs catalog queries through Bench's noop
@@ -31,7 +33,8 @@ import graft.sources.Layouts
   * (no names = the whole catalog), or, to price the layout builds:
   *   runMain graft.tools.QueryTime layouts <sfDir>
   * or, for one counted rep per query with the exchanges and one-partition
-  * sorts of its AQE-final plan, printed as a markdown table:
+  * sorts of its AQE-final plan, and why each range sort was not planned
+  * in one partition, printed as a markdown table:
   *   runMain graft.tools.QueryTime census <sfDir> [<name>...]
   */
 object QueryTime {
@@ -129,9 +132,13 @@ object QueryTime {
 
   /** What one AQE-final plan holds: shuffle exchanges (range and
     * single-partition among them), broadcast exchanges, reused
-    * exchanges, and global sorts over a one-partition coalesce. */
-  final case class Census(shuffle: Int, range: Int, single: Int, broadcast: Int,
-                          reused: Int, onePartitionSorts: Int)
+    * exchanges, and global sorts over a one-partition coalesce; and for
+    * each range exchange, why [[graft.etl.OnePartitionSort]] refused
+    * its sort ([[refusal]]). */
+  final case class Census(shuffle: Int, single: Int, broadcast: Int, reused: Int,
+                          onePartitionSorts: Int, refusals: Seq[String]) {
+    def range: Int = refusals.size
+  }
 
   /** A global sort over a one-partition coalesce, as
     * [[graft.etl.OnePartitionSort]] plans it. */
@@ -146,28 +153,51 @@ object QueryTime {
     case _ => false
   }
 
+  /** Why the strategy refused the global sort above a range exchange,
+    * read off the logical sort the physical one was planned from. When
+    * AQE re-planned the sort after the range stage ran, its child is
+    * that stage, and the reason is the stage's own logical plan's. */
+  private def refusal(sort: Option[SortExec]): String =
+    sort.flatMap(_.logicalLink).collect { case s: Sort => s.child } match {
+      case None => "no global sort"
+      case Some(child) =>
+        val input = child match {
+          case s: LogicalQueryStage => s.logicalPlan
+          case other => other
+        }
+        OnePartitionSort.refusal(input, SQLConf.get).getOrElse("fits")
+    }
+
   def census(plan: SparkPlan): Census = {
-    var c = Census(0, 0, 0, 0, 0, 0)
-    def walk(p: SparkPlan): Unit = {
+    var c = Census(0, 0, 0, 0, 0, Nil)
+    // `sort` is the global sort whose input `p` is, through nodes that
+    // only carry its exchange
+    def walk(p: SparkPlan, sort: Option[SortExec]): Unit = {
       p match {
         case s: ShuffleExchangeLike =>
+          val range = s.outputPartitioning.isInstanceOf[RangePartitioning]
           c = c.copy(shuffle = c.shuffle + 1,
-            range = c.range + (if (s.outputPartitioning.isInstanceOf[RangePartitioning]) 1 else 0),
-            single = c.single + (if (s.outputPartitioning == SinglePartition) 1 else 0))
+            single = c.single + (if (s.outputPartitioning == SinglePartition) 1 else 0),
+            refusals = if (range) c.refusals :+ refusal(sort) else c.refusals)
         case _: BroadcastExchangeLike => c = c.copy(broadcast = c.broadcast + 1)
         case _: ReusedExchangeExec => c = c.copy(reused = c.reused + 1)
         case s if onePartitionSort(s) => c = c.copy(onePartitionSorts = c.onePartitionSorts + 1)
         case _ => ()
+      }
+      val below = p match {
+        case s: SortExec if s.global => Some(s)
+        case _: InputAdapter | _: AQEShuffleReadExec | _: QueryStageExec => sort
+        case _ => None
       }
       (p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case q: QueryStageExec => Seq(q.plan)
         case _: ReusedExchangeExec => Nil
         case other => other.children
-      }).foreach(walk)
-      p.subqueries.foreach(walk)
+      }).foreach(walk(_, below))
+      p.subqueries.foreach(walk(_, None))
     }
-    walk(plan)
+    walk(plan, None)
     c
   }
 
@@ -185,7 +215,7 @@ object QueryTime {
 
   /** One warm and one counted rep per query; prints a markdown row of
     * the counted rep's jobs and its noop write's [[census]], then the
-    * totals. */
+    * totals, with each refusal reason's count. */
   private def censusTable(sfDir: String, names: Set[String]): Unit = {
     val selected = Bench.select(names)
     val spark = Bench.session()
@@ -194,8 +224,8 @@ object QueryTime {
     val writes = new LastWrite(spark)
     val cols = Seq("jobs", "shuffle", "range", "single", "broadcast", "reused",
       "one-partition sorts")
-    println(s"[census] | query | ${cols.mkString(" | ")} |")
-    println(s"[census] |---|${cols.map(_ => "---:").mkString("|")}|")
+    println(s"[census] | query | ${cols.mkString(" | ")} | range refused by |")
+    println(s"[census] |---|${cols.map(_ => "---:").mkString("|")}|---|")
     val rows = selected.flatMap { case (name, fn) =>
       try {
         rep(spark, counter, sfDir, fn)
@@ -204,15 +234,17 @@ object QueryTime {
         val c = writes.take().map(census).getOrElse(sys.error("no write plan captured"))
         val row = Seq(r.jobs, c.shuffle, c.range, c.single, c.broadcast, c.reused,
           c.onePartitionSorts).map(_.toLong)
-        println(s"[census] | $name | ${row.mkString(" | ")} |")
-        Some(row)
+        println(s"[census] | $name | ${row.mkString(" | ")} | ${c.refusals.mkString(", ")} |")
+        Some((row, c.refusals))
       } catch { case e: Throwable =>
         System.err.println(s"[census] $name failed: ${e.getMessage}")
         None
       }
     }
-    val total = rows.transpose.map(_.sum)
-    println(s"[census] | total (${rows.size}) | ${total.mkString(" | ")} |")
+    val total = rows.map(_._1).transpose.map(_.sum)
+    val reasons = rows.flatMap(_._2).groupBy(identity).toSeq
+      .sortBy { case (r, n) => (-n.size, r) }.map { case (r, n) => s"$r ${n.size}" }
+    println(s"[census] | total (${rows.size}) | ${total.mkString(" | ")} | ${reasons.mkString(", ")} |")
     spark.stop()
   }
 

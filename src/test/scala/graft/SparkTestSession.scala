@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.{Catalog, GraftQuery}
+
 /** One shared local session for all suites (spark_guide: one session
   * per suite via lazy val; sbt forks a single test JVM so sharing one
   * across suites is safe and much faster). */
@@ -11,11 +13,17 @@ object SparkTestSession {
       SparkSession.builder().master("local[4]").appName("graft-test"), "4")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.etl.OnePartitionSort.install(s)
+    GraftQuery.prepare(s)
     s
   }
 
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** The catalog query named `name`, for a spec that uses it to test
+    * something else: `graft.tools.CatalogIndex` lists such a spec as a
+    * fixture of the query, not as one of its pins. */
+  def fixture(name: String): GraftQuery =
+    Catalog.all.find(_.name == name).getOrElse(sys.error(s"no catalog query $name"))
 
   /** Runs `body` with the shared session's state store set to RocksDB
     * (the transformWithState operator requires it), then restores the

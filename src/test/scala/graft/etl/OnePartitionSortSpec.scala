@@ -57,9 +57,11 @@ class OnePartitionSortSpec extends AnyFunSuite {
     case other => other.children
   }).flatMap(rangeExchanges)
 
-  private def refused(df: DataFrame): Unit = {
+  /** The sort keeps its range exchange, and the census names `reason`. */
+  private def refused(df: DataFrame, reason: String): Unit = {
     val (_, c) = run(df)
     assert(c.onePartitionSorts === 0 && c.range === 1, c)
+    assert(c.refusals === Seq(reason))
   }
 
   test("a small scan sorts in one partition: no range exchange, one job") {
@@ -86,6 +88,7 @@ class OnePartitionSortSpec extends AnyFunSuite {
     val df = spark.read.parquet(big).orderBy(col("h"))
     val (jobs, c) = run(df)
     assert(c.onePartitionSorts === 0 && c.range === 1, c)
+    assert(c.refusals === Seq("over bound"))
     val parts = rangeExchanges(df.queryExecution.executedPlan)
       .map(_.outputPartitioning.numPartitions)
     assert(parts.nonEmpty && parts.forall(_ > 1), parts)
@@ -93,13 +96,14 @@ class OnePartitionSortSpec extends AnyFunSuite {
   }
 
   test("a Generate under the sort is refused") {
-    refused(spark.read.parquet(small).select(explode(col("arr")).as("x")).orderBy(col("x")))
+    refused(spark.read.parquet(small).select(explode(col("arr")).as("x")).orderBy(col("x")),
+      "Generate")
   }
 
   test("a join with no one-row side is refused; a scalar attach is not") {
     val l = spark.read.parquet(small)
     val r = spark.read.parquet(small).select(col("k").as("k2"), col("v").as("v2"))
-    refused(l.join(r, col("v") === col("v2")).orderBy(col("k"), col("k2")))
+    refused(l.join(r, col("v") === col("v2")).orderBy(col("k"), col("k2")), "join")
     val attached = l.crossJoin(r.agg(max(col("v2")).as("m"))).orderBy(col("k"))
     assert(run(attached)._2.onePartitionSorts === 1)
   }
@@ -108,18 +112,18 @@ class OnePartitionSortSpec extends AnyFunSuite {
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try refused(spark.read.parquet(small).orderBy(col("k")))
+    try refused(spark.read.parquet(small).orderBy(col("k")), "coalescing off")
     finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("a leaf of unknown size is refused") {
-    refused(spark.range(0, 100, 1, 4).toDF().orderBy(col("id").desc))
+    refused(spark.range(0, 100, 1, 4).toDF().orderBy(col("id").desc), "unsized Range")
   }
 
   test("install is idempotent, and running a catalog query installs it on a new session") {
     val fresh = spark.newSession()
     assert(!fresh.experimental.extraStrategies.contains(OnePartitionSort))
-    graft.queries.Catalog.all.head.run(fresh, SparkTestSession.Sf0001)
+    SparkTestSession.fixture("q01_lineitem_agg").run(fresh, SparkTestSession.Sf0001)
     OnePartitionSort.install(fresh)
     assert(fresh.experimental.extraStrategies.count(_ == OnePartitionSort) === 1)
     assert(spark.experimental.extraStrategies.count(_ == OnePartitionSort) === 1)

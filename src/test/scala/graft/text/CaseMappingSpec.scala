@@ -15,8 +15,6 @@ class CaseMappingSpec extends AnyFunSuite {
     try {
       val (j0, _, _) = counter.totals()
       val plan = CaseMapping.fold(spark)
-      CaseMapping.warm(spark)
-      CaseMapping.warm(spark)
       val (j1, _, _) = counter.totals()
       assert(j1 == j0)
       assert(plan.expressions.exists(_.exists(_ == Literal("A"))))

@@ -14,6 +14,22 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CatalogIndexSpec extends AnyFunSuite {
 
+  test("a spec that uses a query only as a fixture is not one of its pins") {
+    // the query's name is not spelled out here, so this file pins nothing
+    val name = graft.queries.Catalog.all.head.name
+    val repo = Files.createTempDirectory("graft_catalog_index")
+    val tests = Files.createDirectories(repo.resolve("src/test/scala"))
+    Files.writeString(repo.resolve("SCALING.md"), "")
+    Files.writeString(tests.resolve("FixtureOnlySpec.scala"), s"val q = fixture(\"$name\")")
+    Files.writeString(tests.resolve("PinSpec.scala"), s"assert(rows(\"$name\") == 7)")
+    Files.writeString(tests.resolve("BothSpec.scala"),
+      s"fixture(\"$name\"); // ${name.takeWhile(_ != '_')} runs 4 jobs")
+    val row = CatalogIndex.render(repo).linesIterator
+      .find(_.startsWith(s"| $name |")).get.split('|').map(_.trim)
+    assert(row(4) === "BothSpec, PinSpec")
+    assert(row(5) === "FixtureOnlySpec")
+  }
+
   test("CATALOG.md matches a fresh CatalogIndex.render") {
     val repo = Paths.get(sys.props.getOrElse("graft.repo", "/root/repo"))
     val committed =

@@ -10,7 +10,7 @@ class QueryTimeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("two consecutive counted reps of one catalog query report identical jobs, stages and tasks") {
-    val Seq((_, fn)) = Bench.select(Set("q03_lag_join_daily"))
+    val fn = SparkTestSession.fixture("q03_lag_join_daily").run _
     val counter = new QueryTime.Counter(spark.sparkContext)
     try {
       // the sentinel jobs that drain the bus count as nothing
