@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +20,8 @@ class ApproxDistinctSpec extends AnyFunSuite {
   val Sigmas = 3.0
 
   test("q32's HLL estimate lies within 3 RSD of its exact count") {
-    Seq(SparkTestSession.Sf0001, "/root/testdata/sf0.01").foreach { sf =>
+    val sf001 = Paths.get(SparkTestSession.Sf0001).resolveSibling("sf0.01").toString
+    Seq(SparkTestSession.Sf0001, sf001).foreach { sf =>
       val Array(r) = TextQueries.q32ApproxDistinct.run(spark, sf).collect()
       val approx = r.getAs[Long]("approx_users")
       val exact = r.getAs[Long]("exact_users")
