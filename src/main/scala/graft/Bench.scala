@@ -39,10 +39,10 @@ object Bench {
     layouts
   }
 
-  /** Full storage reset between queries: localCheckpoint blocks created
-    * inside a query (e.g. the MinHash shingle table) must not occupy
-    * storage memory while later queries run, and a rep must re-execute
-    * its full plan — no result caching is ever measured. */
+  /** Full storage reset between queries: blocks a query persisted (a
+    * loop's checkpointed frontier, the MinHash shingle table) must not
+    * occupy storage memory while later queries run, and a rep must
+    * re-execute its full plan — no result caching is ever measured. */
   def reset(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     spark.catalog.clearCache()

@@ -199,7 +199,6 @@ object AgreementQueries {
   def fleissKappa(rt: DataFrame): DataFrame = {
     val cellc = rt.groupBy(col("source"), col("doc_id"), col("cat"))
       .agg(count(lit(1)).as("nic"))
-      .localCheckpoint(false) // feeds per-doc P_i AND category totals
     val pbar = cellc.groupBy(col("source"), col("doc_id"))
       .agg((sum(col("nic") * col("nic")) - 3).as("num_i"))
       .groupBy(col("source"))
@@ -282,7 +281,6 @@ object AgreementQueries {
   def krippendorff(rt: DataFrame): DataFrame = {
     val cellc = rt.groupBy(col("doc_id"), col("cat"))
       .agg(count(lit(1)).as("nic"))
-      .localCheckpoint(false) // self-joined for the coincidence matrix
     val o = cellc.as("a").join(cellc.as("b"),
       col("a.doc_id") === col("b.doc_id"))
       .groupBy(col("a.cat").as("c"), col("b.cat").as("k"))

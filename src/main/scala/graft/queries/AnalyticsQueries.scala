@@ -1347,7 +1347,6 @@ object AnalyticsQueries {
       val daily = ev
         .groupBy(col("event_type"), to_date(col("ts")).as("ds"))
         .agg(sum(col("value")).as("v"))
-        .localCheckpoint(false) // feeds the moments AND the fold
       val st = daily.groupBy(col("event_type"))
         .agg(avg(col("v")).as("mu"), stddev_samp(col("v")).as("sd"))
       daily.join(broadcast(st), Seq("event_type"))
@@ -1398,7 +1397,6 @@ object AnalyticsQueries {
       val daily = events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("ds"))
         .agg(sum(col("value")).as("v"))
-        .localCheckpoint(false) // feeds the profile AND the join-back
       val seas = daily
         .groupBy(col("event_type"), dayofweek(col("ds")).as("dow"))
         .agg(avg(col("v")).as("s"))
@@ -1448,18 +1446,17 @@ object AnalyticsQueries {
     * tied case against the textbook tied-rank formula). */
   def spearman(in: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val li = in.localCheckpoint(false) // feeds both distributions AND the scoring scan
     // midranks on the (flag, value) distribution: the window runs
     // over <= |distinct values| rows per flag, never corpus rows
     def rankMap(vcol: String, out: String) = {
       val w = Window.partitionBy(col("flag")).orderBy(col("v"))
-      li.groupBy(col("flag"), col(vcol).as("v"))
+      in.groupBy(col("flag"), col(vcol).as("v"))
         .agg(count(lit(1)).as("c"))
         .withColumn("cum", sum(col("c")).over(w))
         .select(col("flag"), col("v").as(vcol),
           (col("cum") - col("c") + (col("c") + 1) / lit(2.0)).as(out))
     }
-    li.join(broadcast(rankMap("q", "rq")), Seq("flag", "q"))
+    in.join(broadcast(rankMap("q", "rq")), Seq("flag", "q"))
       .join(broadcast(rankMap("dc", "rd")), Seq("flag", "dc"))
       .groupBy(col("flag").as("l_returnflag"))
       .agg(count(lit(1)).as("n"),
@@ -1865,7 +1862,6 @@ object AnalyticsQueries {
       .select(substring(round(col("o_totalprice") * 100)
         .cast("bigint").cast("string"), 1, 1).cast("int").as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // feeds total, chi2, and the output rows
     val n = o.agg(sum(col("c")).as("n"))
     val p = log10(lit(1.0) + lit(1.0) / col("digit"))
     val x = o.crossJoin(broadcast(n))
@@ -1929,7 +1925,6 @@ object AnalyticsQueries {
   def attribution(ev: org.apache.spark.sql.DataFrame,
       lookbackDays: Int = 7): org.apache.spark.sql.DataFrame = {
     val e = ev.select(col("user_id"), col("ts"), col("event_type"))
-      .localCheckpoint(false) // feeds the conversion AND touch sides
     val conv = e.where(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("cts"))
     val touch = e.where(col("event_type") =!= "purchase")
@@ -2110,7 +2105,7 @@ object AnalyticsQueries {
     // percentile's partial aggregation buffers every value per flag,
     // and at the raw fixture scan's 3 partitions that collection leg
     // runs on 3 of 32 cores (q238 rationale)
-    val b = graft.model.Tables.spread(in, col("cents")).localCheckpoint(false)
+    val b = graft.model.Tables.spread(in, col("cents"))
     val f = b.groupBy(col("flag"))
       .agg(expr("percentile(cents, 0.05)").as("p05"),
         expr("percentile(cents, 0.95)").as("p95"))
@@ -2189,12 +2184,10 @@ object AnalyticsQueries {
     val cust = in.groupBy(col("c"))
       .agg(max(col("od")).as("lastOd"), count(lit(1)).as("freq"),
         sum(col("cents")).as("mon"))
-      .localCheckpoint(false) // feeds the global max, fences, and scores
     val maxOd = cust.agg(max(col("lastOd")).as("gmax"))
     val rec = cust.crossJoin(broadcast(maxOd))
       .select(col("c"), datediff(col("gmax"), col("lastOd")).as("rec"),
         col("freq"), col("mon"))
-      .localCheckpoint(false)
     val q = rec.agg(
       expr("percentile(rec, 0.25)").as("r25"),
       expr("percentile(rec, 0.5)").as("r50"),
@@ -2377,7 +2370,6 @@ object AnalyticsQueries {
       : org.apache.spark.sql.DataFrame = {
     val su = ev.where(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts")).as("s_ts"))
-      .localCheckpoint(false) // feeds the conversion join AND the cohort
     // the at-or-after condition lives IN the join: filtering after a
     // plain left join would drop users whose only purchases predate
     // signup instead of keeping them unconverted
@@ -2663,7 +2655,6 @@ object AnalyticsQueries {
       : org.apache.spark.sql.DataFrame = {
     val ud = ev.select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .localCheckpoint(false) // feeds the spine, dau, and both windows
     val spine = ud.select(col("day")).distinct()
       .select(col("day").as("sday"))
     def sliding(back: Int, name: String) =

@@ -58,7 +58,6 @@ object CorpusQueries {
     (s, d) => {
       val words = documents(s, d).select(col("doc_id"),
         posexplode(split(lower(trim(col("text"))), "\\s+")).as(Seq("pos", "tok")))
-        .localCheckpoint(false) // unigram marginals + the bigram window
       val uni = words.groupBy(col("tok")).agg(count(lit(1)).as("c"))
       val nuni = uni.agg(sum(col("c")).as("n_uni"))
       val wl = Window.partitionBy(col("doc_id")).orderBy(col("pos"))

@@ -76,7 +76,6 @@ object DiagnosticsQueries {
       .reduce(_ unionAll _)
     val c = k.groupBy(col("key_col"), col("k"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // feeds the totals AND the top-10 rank
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key_col")).orderBy(col("cnt").desc, col("k"))
     val s = c.groupBy(col("key_col"))

@@ -85,7 +85,6 @@ object EvalQueries {
         .agg(count(lit(1)).as("n"), sum(col("s")).as("ss"),
           sum(col("y")).as("sy"), sum(col("s") * col("s")).as("ss2"),
           sum(col("s") * col("y")).as("ssy"))
-        .localCheckpoint(false) // feeds the scalar roll-up AND the rows
       val t = g.agg(sum(col("n")).as("nn"),
         sum(abs(col("sy") / col("n") - col("ss") / col("n")) * col("n"))
           .as("gap_w"),
@@ -836,12 +835,12 @@ object EvalQueries {
     */
   def poissonBootstrap(in: org.apache.spark.sql.DataFrame, reps: Int)
       : org.apache.spark.sql.DataFrame = {
-    // feeds the point estimate + replicas; spread BEFORE the checkpoint —
-    // the ×reps explode below is the whole cost of this query, and it
-    // runs at the checkpoint's parallelism (the raw fixture scan is 3
+    // feeds the point estimate + replicas; spread first — the ×reps
+    // explode below is the whole cost of this query, and it runs at
+    // the spread's parallelism (the raw fixture scan is 3
     // partitions, so the 60M-replica stage would use 3 of 32 cores:
     // measured 3.3 s → 1.0 s warm at sf0.1 with the spread)
-    val b = graft.model.Tables.spread(in, col("rid")).localCheckpoint(false)
+    val b = graft.model.Tables.spread(in, col("rid"))
     val rep = b
       .withColumn("b", explode(sequence(lit(0), lit(reps - 1))))
       .withColumn("u",

@@ -73,13 +73,9 @@ object ExtraQueries {
         CAST(DENSE_RANK() OVER (ORDER BY cnt DESC) AS INTEGER) AS drnk
       FROM t ORDER BY cnt DESC, user_id"""),
     (s, d) => {
-      // t feeds three subtrees (final join + both rank-map sides); no
-      // cross-subtree CSE in Spark, so materialize the per-user counts
-      // once — one events scan instead of three (same checkpoint-for-
-      // reuse pattern as Dedup.minHashLshPairs; Bench/Verify unpersist
-      // between queries)
+      // t feeds three subtrees (final join + both rank-map sides),
+      // which share its one aggregate exchange (AQE reuse)
       val t = events(s, d).groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(false)
       val dist = t.groupBy(col("cnt")).agg(count(lit(1)).as("n_users"))
       val ranks = dist.as("a")
         .join(broadcast(dist.as("b")), col("b.cnt") > col("a.cnt"), "left_outer")

@@ -674,11 +674,10 @@ object LabelQualityQueries {
     * and a planted flipped label caught off-diagonal. */
   def confidentLearning(base: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val b = base.localCheckpoint(false) // feeds thresholds AND the sweep
-    val t = b.agg(
+    val t = base.agg(
       round(avg(when(col("y") === 1, col("s"))), 9).as("t1"),
       round(avg(when(col("y") === 0, lit(1) - col("s"))), 9).as("t0"))
-    val conf = b.crossJoin(broadcast(t))
+    val conf = base.crossJoin(broadcast(t))
       .select(col("y"),
         when(col("s") >= col("t1") && (lit(1) - col("s")) >= col("t0"),
           when(col("s") - col("t1") >= (lit(1) - col("s")) - col("t0"), 1)

@@ -384,7 +384,6 @@ object MixtureQueries {
     val daily = ev.groupBy(col("event_type"), to_date(col("ts")).as("ds"))
       .agg(count(lit(1)).as("n"),
         sum(round(col("value") * 100).cast("long")).as("sc"))
-      .localCheckpoint(false) // feeds priors, totals, best arm, rewards
     val wPrior = Window.partitionBy(col("event_type")).orderBy(col("ds"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val pri = daily.select(col("event_type"), col("ds"),
@@ -395,7 +394,6 @@ object MixtureQueries {
       .rowsBetween(Window.unboundedPreceding, -1)
     val tot = daily.groupBy(col("ds")).agg(sum(col("n")).as("dn"))
       .select(col("ds"), sum(col("dn")).over(wTot).as("tp"))
-      .localCheckpoint(false) // reused for the t_prior readout
     val ucb = col("psc") / lit(100.0) / col("pn") +
       sqrt(lit(2) * log(col("tp")) / col("pn"))
     val wPick = Window.partitionBy(col("ds")).orderBy(

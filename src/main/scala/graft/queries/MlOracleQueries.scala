@@ -159,7 +159,6 @@ object MlOracleQueries {
   def naiveBayes(emb: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), col("label"))
-      .localCheckpoint(false) // feeds the model fit AND the score pass
     def x(j: Int) = element_at(col("v"), j)
     val st = e.groupBy(col("label").as("l")).agg(
       (count(lit(1)) * lit(1.0)).as("cnt"),
@@ -383,7 +382,6 @@ object MlOracleQueries {
   def mahalanobis(emb: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), col("label"))
-      .localCheckpoint(false) // feeds the moment pass AND scoring
     def x(j: Int) = element_at(col("v"), j)
     val m = e.groupBy(col("label").as("l")).agg(
       (count(lit(1)) * lit(1.0)).as("n"),
@@ -869,8 +867,6 @@ object MlOracleQueries {
     val base = li.select(col("l_linestatus").as("ls"),
         when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"),
         col("l_quantity").as("q"), col("l_discount").as("dc"))
-      .localCheckpoint(false) // feeds the step-1 moments, step-2 pass,
-                             // and the final metric pass
     // shared 3x3 symmetric solve via the adjugate (the q254 idiom):
     // columns (a..f) are the matrix moments, (g0..g2) the RHS
     def adjugate(df: DataFrame): DataFrame = df

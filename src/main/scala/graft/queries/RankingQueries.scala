@@ -222,7 +222,6 @@ object RankingQueries {
       Similarity.toDouble(col("embedding")).as("v"))
     val q = e.filter(isQuery)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .localCheckpoint(false) // feeds both ranker sides and the spine
     // stream-side spread, same rationale as [[rankedTopK]]
     val es = graft.model.Tables.spread(e, col("vec_id"))
     def ranked(qc: Column, vc: Column, rkName: String): DataFrame = {

@@ -246,15 +246,13 @@ object SelectionQueries {
       val words = spread(documents(s, d)).select(col("doc_id"), col("lang"),
         posexplode(split(lower(trim(col("text"))), "\\s+")).as(Seq("pos", "tok")))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      // within-doc pre-combined (doc, w1, w2, c) — four consumers below,
-      // checkpointed once (the q27/q89 re-execution lesson)
+      // within-doc pre-combined (doc, w1, w2, c) — four consumers below
       val dbg = words
         .select(col("doc_id"), col("lang"), col("tok").as("w1"),
           lead(col("tok"), 1).over(w).as("w2"))
         .where(col("w2").isNotNull)
         .groupBy(col("doc_id"), col("lang"), col("w1"), col("w2"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
       // Round-12 (guide §2.3 aggregate-before-shuffle, §2.4 share the
       // exchange): raw and target models are conditional sums over the
       // SAME (w1, w2) grouping, so one aggregation produces both — the
@@ -268,7 +266,6 @@ object SelectionQueries {
       val crt = dbg.groupBy(col("w1"), col("w2"))
         .agg(sum(col("c")).as("cr"),
           sum(when(col("lang") === "zh", col("c")).otherwise(0L)).as("ct"))
-        .localCheckpoint(false) // vocabulary-bounded; feeds tot AND the join
       val tot = crt.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"),
         count(lit(1)).as("v"))
       dbg.where(col("lang") =!= "zh")
@@ -578,7 +575,6 @@ object SelectionQueries {
       k: Int): DataFrame = {
     val toks = docs.select(col("doc_id"),
       explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-      .localCheckpoint(false) // feeds lengths, the collection model, tf
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val tot = toks.agg((count(lit(1)) * lit(1.0)).as("ctot"))
     val cm = toks.filter(col("term").isin(terms: _*))

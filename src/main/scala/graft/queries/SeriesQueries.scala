@@ -140,7 +140,6 @@ object SeriesQueries {
     val daily = ev
       .groupBy(col("event_type"), to_date(col("ts")).as("ds"))
       .agg(round(sum(col("value")), 2).as("v"))
-      .localCheckpoint(false) // feeds the moments AND the fold
     val st = daily.groupBy(col("event_type"))
       .agg(avg(col("v")).as("mu"), stddev_samp(col("v")).as("sd"))
     daily.join(broadcast(st), Seq("event_type"))

@@ -290,7 +290,6 @@ object StructureQueries {
       // per-source token probabilities feed both join sides
       val p = tc.join(tot, Seq("source"))
         .select(col("source"), col("tok"), (col("c") / col("n")).as("p"))
-        .localCheckpoint(false)
       val a = p.toDF("src_a", "tok", "pa")
       val b = p.toDF("src_b", "tok", "pb")
       val m = col("pa") + col("pb")
@@ -383,7 +382,6 @@ object StructureQueries {
     (s, d) => {
       val e0 = graft.sources.CopurchaseLayout.pairCounts(s, d)
         .where(col("c") >= 2).select(col("u"), col("v"))
-        .localCheckpoint(false)
       val deg = e0.select(col("u").as("node"))
         .union(e0.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))

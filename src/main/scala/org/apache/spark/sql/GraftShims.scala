@@ -30,8 +30,11 @@ object GraftShims {
 
   /** Unpersist the block-manager copy behind a `localCheckpoint`ed
     * DataFrame (its plan is a LogicalRDD over the persisted RDD) —
-    * lets iterative operators release superseded frontiers instead of
-    * pinning every round's copy until end-of-query cleanup. No-op for
+    * lets iterative operators, which checkpoint to cut each round's
+    * lineage, release superseded frontiers instead of pinning every
+    * round's copy until end-of-query cleanup (a frame the readers of
+    * one plan share is left to AQE's exchange reuse wherever that runs
+    * no more jobs). No-op for
     * non-checkpointed frames. Checkpoints are LAZY repo-wide (round
     * 8): callers must run an action on the SUCCESSOR frame first, so
     * its checkpoint is materialized before the predecessor's blocks

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Bench, SparkEntry, SparkTestSession}
+import graft.{Bench, SourceLint, SparkEntry, SparkTestSession}
 
 object QueriesSpec {
   /** The POSITIVE emission-type allowlist (round-11 verdict #1): the
@@ -30,6 +30,13 @@ object QueriesSpec {
     * proving the new type, never by assumption. */
   val hashSafeTypes: Set[DataType] = Set(
     IntegerType, LongType, DoubleType, StringType, DateType, TimestampType)
+
+  /** The `localCheckpoint` calls the query modules may hold. Each one
+    * costs an eager job and hides its subtree from the planner; the
+    * ones left cut a loop's lineage or were measured or found worse
+    * without them, each with its reason in
+    * `plans/shared-in-plan/SUMMARY.md`. */
+  val checkpointCeiling = 81
 }
 
 /** What the catalog-wide checks need from one query. */
@@ -411,6 +418,52 @@ class QueriesSpec extends AnyFunSuite {
       assert(SparkEntry.queries.contains(k))
       assert(sql.trim.nonEmpty)
     }
+  }
+
+  /** A digest of `df`'s rows in a row-order-free form: each row's
+    * string, sorted, then MD5. Doubles print exactly, so a trailing-ulp
+    * difference changes it. */
+  private def rowsDigest(df: DataFrame): String = {
+    val rows = df.collect().map(_.toString).sorted.mkString("\n")
+    java.security.MessageDigest.getInstance("MD5").digest(rows.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  test("queries that share an intermediate through the plan return the same rows at widths 1, 5 and 32") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val differ = try OnePassSpec.sharedInPlan.map(_._1).flatMap { name =>
+      val q = SparkTestSession.fixture(name)
+      val digests = Seq(1, 5, 32).map { w =>
+        spark.conf.set(key, w.toString)
+        try w -> rowsDigest(q.run(spark, SparkTestSession.Sf0001))
+        finally Bench.reset(spark)
+      }
+      if (digests.map(_._2).distinct.size > 1) Some(s"$name: ${digests.mkString(", ")}")
+      else None
+    } finally spark.conf.set(key, saved)
+    assert(differ.isEmpty, s"results differ by width:\n  ${differ.mkString("\n  ")}")
+  }
+
+  private val checkpointCall = """\.localCheckpoint\(""".r
+
+  /** The `localCheckpoint` call sites of the catalog's query modules. */
+  private def catalogCheckpoints(sites: Seq[(String, Int, String)]) =
+    sites.filter(_._1.startsWith("queries/"))
+
+  test("the checkpoint lint counts a planted call and skips comments") {
+    assert(checkpointCall.findFirstIn(SourceLint.code("df.localCheckpoint(false)")).nonEmpty)
+    assert(checkpointCall.findFirstIn(SourceLint.code("// df.localCheckpoint(false)")).isEmpty)
+    assert(catalogCheckpoints(Seq(("queries/X.scala", 1, ""), ("text/Y.scala", 1, ""))).size == 1)
+  }
+
+  test("the query modules hold no more localCheckpoint calls than the ceiling") {
+    val sites = catalogCheckpoints(SourceLint.sites(checkpointCall))
+    assert(sites.size <= QueriesSpec.checkpointCeiling,
+      s"${sites.size} localCheckpoint calls under queries/ — share the " +
+        "intermediate through the plan (AQE reuses an identical exchange), " +
+        "or raise the ceiling with the reason the checkpoint is needed:\n  " +
+        sites.map { case (f, l, t) => s"$f:$l  $t" }.mkString("\n  "))
   }
 
   test("the rows-only tail is exactly the documented nine") {
