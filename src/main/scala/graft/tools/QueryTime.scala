@@ -215,7 +215,8 @@ object QueryTime {
 
   /** One warm and one counted rep per query; prints a markdown row of
     * the counted rep's jobs and its noop write's [[census]], then the
-    * totals, with each refusal reason's count. */
+    * totals, then a footer table of the range sorts each refusal reason
+    * kept. */
   private def censusTable(sfDir: String, names: Set[String]): Unit = {
     val selected = Bench.select(names)
     val spark = Bench.session()
@@ -243,8 +244,13 @@ object QueryTime {
     }
     val total = rows.map(_._1).transpose.map(_.sum)
     val reasons = rows.flatMap(_._2).groupBy(identity).toSeq
-      .sortBy { case (r, n) => (-n.size, r) }.map { case (r, n) => s"$r ${n.size}" }
-    println(s"[census] | total (${rows.size}) | ${total.mkString(" | ")} | ${reasons.mkString(", ")} |")
+      .map { case (r, n) => r -> n.size }.sortBy { case (r, n) => (-n, r) }
+    println(s"[census] | total (${rows.size}) | ${total.mkString(" | ")} | " +
+      s"${reasons.map { case (r, n) => s"$r $n" }.mkString(", ")} |")
+    println("[census] ")
+    println("[census] | range refused by | range sorts |")
+    println("[census] |---|---:|")
+    reasons.foreach { case (r, n) => println(s"[census] | $r | $n |") }
     spark.stop()
   }
 

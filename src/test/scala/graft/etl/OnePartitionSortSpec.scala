@@ -108,6 +108,49 @@ class OnePartitionSortSpec extends AnyFunSuite {
     assert(run(attached)._2.onePartitionSorts === 1)
   }
 
+  /** `small` renamed, to join against `small` itself. */
+  private def lookup = spark.read.parquet(small).select(col("k").as("uk"), col("v").as("uv"))
+
+  test("a join against a broadcast side with one row per key sorts in one partition") {
+    // a scan knows no distinct keys, so the planner's plan refuses the
+    // join; the re-plan after the broadcast reads its hash table
+    val df = spark.read.parquet(small).join(broadcast(lookup), col("v") === col("uk"))
+      .orderBy(col("k"))
+    val (jobs, c) = run(df)
+    assert(c.onePartitionSorts === 1 && c.range === 0, c)
+    assert(jobs === 2, "the broadcast and the result")
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(3))).toSeq ===
+      (0L until 100L).map(k => (k, k * 7 % 13)))
+  }
+
+  test("a join against a broadcast side with a duplicated key keeps its range exchange") {
+    val dup = lookup.union(lookup.filter(col("uk") === 5))
+    val df = spark.read.parquet(small).join(broadcast(dup), col("v") === col("uk"))
+      .orderBy(col("k"))
+    val (jobs, c) = run(df)
+    assert(c.onePartitionSorts === 0 && c.range === 1, c)
+    assert(c.refusals === Seq("join"))
+    assert(jobs === 4, "the broadcast, the range sample, the map stage and the result")
+  }
+
+  test("a join on an aggregate's grouping keys is re-planned in one partition through its shuffle stage") {
+    val agg = spark.read.parquet(big).groupBy((col("id") % 10).as("d")).agg(count(lit(1)).as("n"))
+    // `v` repeats, so only the aggregate's side is unique on the key
+    val df = spark.read.parquet(small).join(agg, col("v") === col("d")).orderBy(col("k"))
+    val (jobs, c) = run(df)
+    assert(c.onePartitionSorts === 1 && c.range === 0, c)
+    assert(jobs === 3, "the aggregate's shuffle, the broadcast and the result")
+  }
+
+  test("a left anti join sorts in one partition") {
+    val df = spark.read.parquet(small).join(lookup, col("k") === col("uv"), "left_anti")
+      .orderBy(col("k"))
+    val (jobs, c) = run(df)
+    assert(c.onePartitionSorts === 1 && c.range === 0, c)
+    assert(jobs === 2, "the broadcast and the result")
+    assert(df.collect().map(_.getLong(0)).toSeq === (13L until 100L))
+  }
+
   test("a session with AQE partition coalescing off is refused") {
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val saved = spark.conf.getOption(key)

@@ -22,18 +22,48 @@ object OnePassSpec {
     * sf0.001: AQE plans the shared exchange once and reuses it. */
   val sharedInPlan: Seq[(String, Long)] = Seq(
     "q175_dsir_select" -> 7L, "q185_js_divergence" -> 6L,
-    "q188_clustering_coeff" -> 11L, "q190_seasonal_decompose" -> 6L,
+    "q188_clustering_coeff" -> 9L, "q190_seasonal_decompose" -> 4L,
     "q198_bigram_pmi" -> 9L, "q201_cusum" -> 7L, "q205_spearman" -> 8L,
     "q211_benford" -> 6L, "q212_attribution" -> 8L,
     "q217_calibration" -> 5L, "q230_page_hinkley" -> 7L,
     "q235_winsorized" -> 5L, "q236_rfm" -> 7L,
-    "q238_poisson_bootstrap" -> 8L, "q245_time_to_convert" -> 4L,
-    "q247_confident_learning" -> 4L, "q250_rbo" -> 9L,
-    "q252_fleiss_kappa" -> 12L, "q253_krippendorff" -> 15L,
+    "q238_poisson_bootstrap" -> 6L, "q245_time_to_convert" -> 4L,
+    "q247_confident_learning" -> 4L, "q250_rbo" -> 7L,
+    "q252_fleiss_kappa" -> 10L, "q253_krippendorff" -> 15L,
     "q255_naive_bayes" -> 5L, "q265_mahalanobis" -> 4L,
-    "q267_ucb_mixture" -> 13L, "q268_skew_report" -> 7L,
-    "q271_ql_dirichlet" -> 8L, "q275_stickiness" -> 13L,
-    "q282_irls_step" -> 9L, "q34_activity_rank" -> 8L)
+    "q267_ucb_mixture" -> 13L, "q268_skew_report" -> 5L,
+    "q271_ql_dirichlet" -> 8L, "q275_stickiness" -> 11L,
+    "q282_irls_step" -> 9L, "q34_activity_rank" -> 6L)
+
+  /** Queries whose global sort over a join is planned in one partition
+    * ([[graft.etl.OnePartitionSort]]: a semi or anti join, or a join
+    * whose other side is unique on its keys), and the jobs each runs at
+    * sf0.001. Each ran 2 more with the sort's range exchange. */
+  val onePartitionJoin: Seq[(String, Long)] = Seq(
+    "q03_lag_join_daily" -> 6L, "q105_lateral_topk" -> 3L, "q106_pq_ann" -> 9L,
+    "q132_semantic_dedup" -> 2L, "q134_incremental_admission" -> 3L,
+    "q139_source_overlap" -> 18L, "q144_lsh_semantic_dedup" -> 2L,
+    "q14_null_fill_join" -> 2L, "q152_exact_substr_cut" -> 4L,
+    "q154_incremental_substr" -> 4L, "q160_incremental_cut" -> 7L,
+    "q164_incremental_components" -> 8L, "q167_label_propagation" -> 9L,
+    "q178_rouge_overlap" -> 10L, "q182_span_corruption" -> 3L,
+    "q188_clustering_coeff" -> 9L, "q189_neyman_alloc" -> 9L,
+    "q190_seasonal_decompose" -> 4L, "q196_markov_transitions" -> 5L,
+    "q218_conformal" -> 13L, "q228_learning_curve" -> 7L, "q234_mann_kendall" -> 8L,
+    "q237_dl_rescore" -> 6L, "q238_poisson_bootstrap" -> 6L, "q239_cuped" -> 7L,
+    "q246_shapley_attribution" -> 12L, "q248_ndcg" -> 6L, "q250_rbo" -> 7L,
+    "q251_cohens_kappa" -> 10L, "q252_fleiss_kappa" -> 10L, "q257_lloyd_step" -> 10L,
+    "q259_ipw_ate" -> 5L, "q268_skew_report" -> 5L, "q270_loo_influence" -> 8L,
+    "q274_stylometry" -> 7L, "q275_stickiness" -> 11L, "q281_source_ablation" -> 13L,
+    "q285_isotonic" -> 7L, "q34_activity_rank" -> 6L, "q57_tfidf" -> 7L,
+    "q65_zscore_norm" -> 3L, "q80_repetition_filter" -> 6L)
+
+  /** Of [[onePartitionJoin]], the queries whose job count varies by one
+    * from one run to the next, for a reason not yet explained (q178
+    * 10 or 11 jobs at sf0.01 before the sort moved; q167 8 or 9 at
+    * sf0.001 after). Their entry is an upper bound, the count they run
+    * with the range exchange minus one, not a pin. */
+  val jobsVary: Set[String] = Set("q167_label_propagation", "q178_rouge_overlap")
 }
 
 class OnePassSpec extends AnyFunSuite {
@@ -92,5 +122,15 @@ class OnePassSpec extends AnyFunSuite {
       if (n > ceiling) Some(s"$name ran $n jobs (ceiling $ceiling)") else None
     }
     assert(over.isEmpty, over.mkString("\n"))
+  }
+
+  test("queries whose sort over a join plans in one partition run their pinned jobs") {
+    val off = OnePassSpec.onePartitionJoin.flatMap { case (name, pinned) =>
+      val n = jobs(name)
+      val vary = OnePassSpec.jobsVary(name)
+      if (if (vary) n <= pinned else n == pinned) None
+      else Some(s"$name ran $n jobs (${if (vary) "ceiling" else "pinned"} $pinned)")
+    }
+    assert(off.isEmpty, off.mkString("\n"))
   }
 }

@@ -3,8 +3,10 @@ package graft.queries
 import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -238,40 +240,23 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
-  /** Why a one-partition coalesce under a global sort would funnel a
-    * large input through one task, if it would. It is legal only as
-    * [[graft.etl.OnePartitionSort]] bounds it: AQE coalescing on, every
-    * leaf a file scan or a materialized AQE stage, the leaves summing to
-    * at most [[graft.etl.OnePartitionSort.bound]], and no Generate,
-    * Expand or row-multiplying join between them and the sort. */
-  private def sortFunnel(coalesce: SparkPlan): Option[String] = {
-    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => Seq(q)
-      case _ if p.children.isEmpty => Seq(p)
-      case _ => p.children.flatMap(leaves)
-    }
-    val sizes = leaves(coalesce).map {
-      case f: FileSourceScanExec => Some(f.relation.sizeInBytes)
-      case q: QueryStageExec if q.isMaterialized => q.computeStats().map(_.sizeInBytes.toLong)
-      case _ => None
-    }
-    def oneRow(p: SparkPlan): Boolean = unwrap(p) match {
-      case e: Exchange => oneRow(e.child)
-      case u => u.logicalLink.flatMap(_.maxRows).exists(_ <= 1)
-    }
-    def multiplies(p: SparkPlan): Boolean = p match {
-      case _: QueryStageExec => false
-      case _: GenerateExec | _: ExpandExec => true
-      case j: joins.BaseJoinExec if !j.children.exists(oneRow) => true
-      case _ => p.children.exists(multiplies)
-    }
-    graft.etl.OnePartitionSort.bound(spark.sessionState.conf) match {
-      case None => Some("AQE partition coalescing is off")
-      case Some(_) if sizes.contains(None) => Some("a leaf of unknown size")
-      case Some(b) if sizes.flatten.sum > b => Some(s"${sizes.flatten.sum} bytes over the $b-byte bound")
-      case _ if multiplies(coalesce) => Some("a row-multiplying node")
-      case _ => None
+  /** Why a global sort over a one-partition coalesce would funnel a
+    * large input through one task, if it would. It is legal only where
+    * [[graft.etl.OnePartitionSort.refusal]] — the predicate the strategy
+    * itself decides by — accepts its input: the logical sort it was
+    * planned from, or, for a sort no strategy planned, the logical plan
+    * under its coalesce. */
+  private def sortFunnel(sort: SortExec, coalesce: SparkPlan): Option[String] = {
+    val input = sort.logicalLink.collect { case l: logical.Sort => l.child }
+      .orElse(coalesce.children.headOption.flatMap(_.logicalLink))
+    input.fold(Option("an input with no logical plan")) { l =>
+      graft.etl.OnePartitionSort.refusal(l, spark.sessionState.conf).map {
+        case "coalescing off" => "AQE partition coalescing is off"
+        case "over bound" => s"${graft.etl.OnePartitionSort.inputBytes(l)} bytes over the " +
+          s"${graft.etl.OnePartitionSort.bound(spark.sessionState.conf).get}-byte bound"
+        case why if why.startsWith("unsized ") => s"a leaf of unknown size (${why.drop(8)})"
+        case why => s"a row-multiplying node ($why)"
+      }
     }
   }
 
@@ -317,7 +302,7 @@ class QueriesSpec extends AnyFunSuite {
           violations += s"$name: unbounded SinglePartition shuffle " +
             s"(parent ${parent.map(_.nodeName).getOrElse("-")})"
       case (s: SortExec, _) if graft.tools.QueryTime.onePartitionSort(s) =>
-        sortFunnel(s.child).foreach(why =>
+        sortFunnel(s, unwrap(s.child)).foreach(why =>
           violations += s"$name: one-partition sort over $why")
       case (w: WindowExec, _) if w.partitionSpec.isEmpty &&
           !boundedGlobalWindow.contains(name) =>
@@ -429,10 +414,12 @@ class QueriesSpec extends AnyFunSuite {
       .map("%02x".format(_)).mkString
   }
 
-  test("queries that share an intermediate through the plan return the same rows at widths 1, 5 and 32") {
+  /** The queries of `names` whose rows differ between shuffle widths
+    * 1, 5 and 32 at sf0.001, with each width's digest. */
+  private def widthDependent(names: Seq[String]): Seq[String] = {
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
-    val differ = try OnePassSpec.sharedInPlan.map(_._1).flatMap { name =>
+    try names.flatMap { name =>
       val q = SparkTestSession.fixture(name)
       val digests = Seq(1, 5, 32).map { w =>
         spark.conf.set(key, w.toString)
@@ -442,6 +429,17 @@ class QueriesSpec extends AnyFunSuite {
       if (digests.map(_._2).distinct.size > 1) Some(s"$name: ${digests.mkString(", ")}")
       else None
     } finally spark.conf.set(key, saved)
+  }
+
+  test("queries that share an intermediate through the plan return the same rows at widths 1, 5 and 32") {
+    val differ = widthDependent(OnePassSpec.sharedInPlan.map(_._1))
+    assert(differ.isEmpty, s"results differ by width:\n  ${differ.mkString("\n  ")}")
+  }
+
+  test("queries whose sort over a join plans in one partition return the same rows at widths 1, 5 and 32") {
+    // those the test above replays are not run twice
+    val differ = widthDependent(
+      OnePassSpec.onePartitionJoin.map(_._1).diff(OnePassSpec.sharedInPlan.map(_._1)))
     assert(differ.isEmpty, s"results differ by width:\n  ${differ.mkString("\n  ")}")
   }
 
@@ -536,6 +534,19 @@ class QueriesSpec extends AnyFunSuite {
     // bounded build sides: a 1-row scalar aggregate and a ≤ k-row limit
     assert(lint(a.crossJoin(b.agg(max($"y")))) == ((Nil, false)))
     assert(lint(a.join(broadcast(b.limit(5)), $"x" < $"y")) == ((Nil, false)))
+    // a one-partition sort no strategy planned, over a join whose keys
+    // repeat on both sides; the same sort over a left anti join is legal
+    val r = s"${java.nio.file.Files.createTempDirectory("graft_planlint")}/r"
+    spark.range(100).select(($"id" % 7).as("k")).write.parquet(r)
+    def funnel(joinType: String) = {
+      val join = spark.read.parquet(r)
+        .join(spark.read.parquet(r).toDF("k2"), $"k" === $"k2", joinType).queryExecution.sparkPlan
+      lintPlan("planted", SortExec(join.output.take(1).map(SortOrder(_, Ascending)),
+        global = true, CoalesceExec(1, join)))._1
+    }
+    assert(funnel("inner").exists(_.contains("one-partition sort over a row-multiplying node (join)")),
+      funnel("inner"))
+    assert(funnel("left_anti").isEmpty, funnel("left_anti"))
   }
 
   test("the plan lint flags a one-partition sort over the bound or a row-multiplying node, and stays quiet in bound") {
